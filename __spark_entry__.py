@@ -34,6 +34,7 @@ from fineweb_legal_spark.datasets import (
     ensure_web_golden,
     ensure_webdocs,
 )
+from fineweb_legal_spark.operators.parallel import widen
 from fineweb_legal_spark.operators.webfilter import stage_reject_counts, web_filter
 from fineweb_legal_spark.pipeline import ppl_histogram, run_pipeline, stage_metrics
 
@@ -46,35 +47,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _widen(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scale-adaptive scan widening for Python-kernel passes (round 6).
-
-    The sandbox fixture tables are single-row-group parquet files, so the
-    scan plans 1-2 splits and every zero-Exchange Arrow kernel downstream
-    serializes onto 1-2 of the 32 cores (measured: dup_ngram_signals at
-    sf1.0 ran 11.9 s on a 2-split scan). When — and only when — the scan
-    has fewer splits than the cluster has slots, one tiny RoundRobin
-    exchange (~15 MB here) spreads the rows; a production many-file table
-    already has >= slots splits, the condition is false, and the plan is
-    untouched (same policy as _transcripts' documented fixture
-    repartition, but conditional instead of unconditional)."""
-    p = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
-
-
 def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _widen(spark, _t(spark, sf_dir, name))
+    return widen(_t(spark, sf_dir, name))
 
 
 def _transcripts(spark: SparkSession) -> DataFrame:
     # The synthetic t2 table is one 6 MB parquet file with a single row
     # group -> a 1-task scan that would serialize the model stage onto one
-    # Python worker. One tiny reshuffle parallelizes everything downstream.
-    # (A real deployment's table is many files/row groups; this is a
-    # test-fixture artifact, not an engine setting.)
-    return spark.read.parquet(str(ensure_transcripts("t2"))).repartition(32)
+    # Python worker; widen() spreads it to the session's width.
+    return widen(spark.read.parquet(str(ensure_transcripts("t2"))))
 
 
 def _webdocs(spark: SparkSession) -> DataFrame:
@@ -358,25 +339,6 @@ def q_length_filter_docs(spark, sf_dir):
     )
 
 
-def q_derived_columns_docs(spark, sf_dir):
-    # F14: char_length, word_count
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.length("text").alias("char_length"),
-        F.size(F.split("text", " ")).alias("word_count"),
-    )
-
-
-def q_token_estimate_docs(spark, sf_dir):
-    # F16: max(1, len//4)
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.greatest(F.lit(1), F.floor(F.length("text") / 4)).cast("long").alias("tok_est"),
-    )
-
-
 def q_dedup_exact_docs(spark, sf_dir):
     # J1/U3: md5-of-normalized-text dedup, winner = min doc_id
     d = _t(spark, sf_dir, "documents")
@@ -395,39 +357,6 @@ def q_top_sources_docs(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("docs"))
         .orderBy(F.desc("docs"), F.asc("source"))
         .limit(10)
-    )
-
-
-def q_distinct_sources_docs(spark, sf_dir):
-    # A8
-    d = _t(spark, sf_dir, "documents")
-    return d.agg(F.countDistinct("source").alias("n_sources"))
-
-
-def q_word_char_totals_docs(spark, sf_dir):
-    # A13
-    d = _t(spark, sf_dir, "documents")
-    return d.agg(
-        F.sum(F.length("text")).alias("total_chars"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("total_words"),
-    )
-
-
-def q_event_type_counts(spark, sf_dir):
-    # A3 analog
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).orderBy("event_type")
-
-
-def q_value_percentiles_events(spark, sf_dir):
-    # A6: exact percentiles, rounded for hash stability
-    e = _t(spark, sf_dir, "events")
-    pct = F.percentile("value", F.array(*[F.lit(x) for x in (0.5, 0.75, 0.9, 0.95, 0.99)]))
-    return e.agg(
-        *[
-            F.round(pct[i], 4).alias(f"p{int(q * 100)}")
-            for i, q in enumerate((0.5, 0.75, 0.9, 0.95, 0.99))
-        ]
     )
 
 
@@ -457,14 +386,6 @@ def q_dup_user_events(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .filter("n > 1")
         .orderBy("user_id")
-    )
-
-
-def q_json_extract_events(spark, sf_dir):
-    # C14: JSON field extraction
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id", F.get_json_object("props", "$.k").cast("int").alias("k")
     )
 
 
@@ -591,24 +512,6 @@ def q_revenue_by_nation(spark, sf_dir):
     )
 
 
-def q_event_gaps_users(spark, sf_dir):
-    # §2.5 analytic: lag() per-user inter-event gap in seconds; average of
-    # gaps per user for the 20 most active users (deterministic tiebreak)
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    secs = F.unix_timestamp(F.col("ts").cast("timestamp"))
-    gaps = e.withColumn("gap_s", secs - F.lag(secs).over(w))
-    return (
-        gaps.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("events"),
-            F.round(F.avg("gap_s"), 4).alias("avg_gap_s"),
-        )
-        .orderBy(F.desc("events"), F.asc("user_id"))
-        .limit(20)
-    )
-
-
 def q_sessionize_events(spark, sf_dir):
     # Gap-based sessionization (30-min gap): lag-window session marking +
     # cumulative-sum session index + per-session rollup. Two window passes
@@ -714,43 +617,6 @@ def q_domain_topk_web(spark, sf_dir):
     )
 
 
-def q_approx_percentiles_events(spark, sf_dir):
-    # A6 scale variant (SURVEY §2.4 'at 10^12 scale'): percentile_approx
-    # (Greenwald-Khanna sketch, single pass, mergeable across partitions).
-    # At gate scale its high-accuracy output is exactly the discrete order
-    # statistic, which DuckDB's quantile_disc reproduces independently.
-    e = _t(spark, sf_dir, "events")
-    return e.agg(
-        *[
-            F.round(F.percentile_approx("value", p, 1_000_000), 4).alias(
-                f"p{int(p * 100)}"
-            )
-            for p in (0.5, 0.75, 0.9, 0.95, 0.99)
-        ]
-    )
-
-
-def q_approx_distinct_users_events(spark, sf_dir):
-    # A8 scale variant: approx_count_distinct (HyperLogLog++, mergeable).
-    # The HLL estimate is engine-specific, so the checkable contract is
-    # 'estimate within the documented rsd band of the exact count'; the
-    # exact count is cross-checked value-for-value.
-    e = _t(spark, sf_dir, "events")
-    return e.agg(
-        F.countDistinct("user_id").alias("n_exact"),
-        (
-            (
-                F.abs(
-                    F.approx_count_distinct("user_id", 0.02).cast("double")
-                    - F.countDistinct("user_id")
-                )
-                / F.countDistinct("user_id")
-            )
-            <= 0.06  # 3x rsd (documented bound: relative sd 0.02)
-        ).alias("estimate_within_band"),
-    )
-
-
 # D4: softmax-weighted continuous score + argmax label (reference
 # classifier/inference.py:14-45 re-expressed natively: six pseudo-logits
 # from the value column, softmax, expected-class score, threshold label).
@@ -781,14 +647,6 @@ def _softmax_sql_num() -> str:
 
 def _softmax_sql_den() -> str:
     return " + ".join(f"exp(-abs(x - {i}))" for i in range(_N_CLASSES))
-
-
-def q_softmax_score_events(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    score, label = _softmax_score_cols()
-    return e.select("event_id", score, label).withColumn(
-        "is_legal", F.col("score") >= 3.0
-    )
 
 
 def q_tier_stats_events(spark, sf_dir):
@@ -863,24 +721,6 @@ def _t1_cc(spark: SparkSession) -> DataFrame:
         spark,
         lambda: connected_components(_t1_minhash_pairs(spark)),
     )
-
-
-def q_dedup_clusters_t1(spark, sf_dir):
-    # Near-dup CLUSTER resolution: MinHash-LSH pairs -> connected
-    # components (hash-min label propagation; see operators/cluster.py for
-    # the 100TB scaling discussion). cluster_id = min member id, so the
-    # canonical keep-doc per cluster is deterministic. The oracle computes
-    # the same transitive closure independently via DuckDB recursive CTE
-    # over the brute-force golden pair list.
-    return _t1_cc(spark)
-
-
-def q_dedup_cluster_stats_t1(spark, sf_dir):
-    # The dedup report: per-cluster member count and docs removed by
-    # keeping one canonical member per cluster.
-    from fineweb_legal_spark.operators.cluster import dedup_cluster_summary
-
-    return dedup_cluster_summary(_t1_cc(spark))
 
 
 def q_simhash_neardup_t1(spark, sf_dir):
@@ -1085,34 +925,6 @@ def q_decontaminate_docs(spark, sf_dir):
     return decontaminate(d, bench, n=8)
 
 
-def q_langid_docs(spark, sf_dir):
-    from fineweb_legal_spark.operators.textql import predict_language
-
-    return predict_language(spark, _t(spark, sf_dir, "documents"), "doc_id")
-
-
-def q_quality_score_docs(spark, sf_dir):
-    from fineweb_legal_spark.operators.textql import quality_score
-
-    return quality_score(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "quality_score"
-    )
-
-
-def q_fingerprint_docs(spark, sf_dir):
-    from fineweb_legal_spark.operators.textql import fingerprint
-
-    return fingerprint(_t(spark, sf_dir, "documents")).select("doc_id", "fingerprint")
-
-
-def q_token_counts_docs(spark, sf_dir):
-    from fineweb_legal_spark.operators.textql import token_counts
-
-    return token_counts(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "ws_tokens", "bpe_ish_tokens"
-    )
-
-
 def q_ivf_ann_topk(spark, sf_dir):
     # IVF coarse-quantize + nprobe-cell exact re-rank (the second ANN
     # scale path next to random-hyperplane LSH)
@@ -1230,44 +1042,6 @@ def q_pack_conversations_t1(spark, sf_dir):
 
     t = spark.read.parquet(str(ensure_transcripts("t1")))
     return pack_turns(t, budget=512)
-
-
-def q_media_meta(spark, sf_dir):
-    from fineweb_legal_spark.datasets import ensure_media
-    from fineweb_legal_spark.operators.multimodal import media_meta
-
-    return media_meta(spark.read.parquet(str(ensure_media("t1"))))
-
-
-def q_media_frame_sample(spark, sf_dir):
-    from fineweb_legal_spark.datasets import ensure_media
-    from fineweb_legal_spark.operators.multimodal import sample_frames
-
-    return sample_frames(spark.read.parquet(str(ensure_media("t1"))), every_n=2)
-
-
-def q_media_embeddings(spark, sf_dir):
-    from fineweb_legal_spark.datasets import ensure_media
-    from fineweb_legal_spark.operators.multimodal import fake_embedding
-
-    emb = fake_embedding(spark.read.parquet(str(ensure_media("t1"))), dim=16)
-    # driver hash compare needs scalar columns: stringify with printf so the
-    # float formatting is engine-independent
-    return emb.select(
-        "media_id",
-        F.concat_ws(
-            ",", F.transform("embedding", lambda x: F.format_string("%.6f", x))
-        ).alias("emb_csv"),
-    )
-
-
-def q_truncate_docs(spark, sf_dir):
-    # F15: word-boundary truncation + ellipsis (annotator.py:89-94 analog)
-    from fineweb_legal_spark.validation import word_boundary_truncate
-
-    return word_boundary_truncate(
-        _t(spark, sf_dir, "documents"), "text", limit=120
-    ).select("doc_id", "truncated")
 
 
 def q_value_stats_events(spark, sf_dir):
@@ -2322,18 +2096,6 @@ def _oracle_base() -> dict[str, str]:
                        AS total_words
             FROM documents
         """,
-        "event_type_counts": """
-            SELECT event_type, count(*) AS n FROM events
-            GROUP BY event_type ORDER BY event_type
-        """,
-        "value_percentiles_events": """
-            SELECT round(quantile_cont(value, 0.50), 4) AS p50,
-                   round(quantile_cont(value, 0.75), 4) AS p75,
-                   round(quantile_cont(value, 0.90), 4) AS p90,
-                   round(quantile_cont(value, 0.95), 4) AS p95,
-                   round(quantile_cont(value, 0.99), 4) AS p99
-            FROM events
-        """,
         "class_weights_events": """
             WITH c AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
                  t AS (SELECT count(*) AS total FROM events),
@@ -2348,14 +2110,6 @@ def _oracle_base() -> dict[str, str]:
         """,
         "json_extract_events": """
             SELECT event_id, CAST(props->>'$.k' AS INTEGER) AS k FROM events
-        """,
-        "window_first_events": """
-            SELECT user_id, rn, event_id FROM (
-              SELECT user_id, event_id,
-                     row_number() OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS rn
-              FROM events
-            ) WHERE rn <= 3
         """,
         "semi_join_customers": """
             SELECT c_custkey FROM customer
@@ -2414,19 +2168,6 @@ def _oracle_base() -> dict[str, str]:
             JOIN nation ON c_nationkey = n_nationkey
             GROUP BY n_name ORDER BY n_name
         """,
-        "event_gaps_users": """
-            WITH g AS (
-              SELECT user_id,
-                     CAST(floor(epoch(ts)) AS BIGINT)
-                     - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
-                         PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
-              FROM events
-            )
-            SELECT user_id, count(*) AS events,
-                   round(avg(gap_s), 4) AS avg_gap_s
-            FROM g GROUP BY user_id
-            ORDER BY events DESC, user_id ASC LIMIT 20
-        """,
         "domain_topk_web": f"""
             -- mirror parse_url(HOST): scheme case-insensitive, userinfo
             -- (user@) stripped, so new fixtures with such URLs cannot
@@ -2438,19 +2179,6 @@ def _oracle_base() -> dict[str, str]:
             FROM read_parquet('{_webdocs_sql_path()}')
             GROUP BY 1
             ORDER BY docs DESC, domain ASC NULLS FIRST LIMIT 20
-        """,
-        "approx_percentiles_events": """
-            SELECT round(quantile_disc(value, 0.50), 4) AS p50,
-                   round(quantile_disc(value, 0.75), 4) AS p75,
-                   round(quantile_disc(value, 0.90), 4) AS p90,
-                   round(quantile_disc(value, 0.95), 4) AS p95,
-                   round(quantile_disc(value, 0.99), 4) AS p99
-            FROM events
-        """,
-        "approx_distinct_users_events": """
-            SELECT count(DISTINCT user_id) AS n_exact,
-                   TRUE AS estimate_within_band
-            FROM events
         """,
         "softmax_score_events": f"""
             WITH b AS (SELECT event_id, value / 40.0 AS x FROM events),
@@ -2573,25 +2301,6 @@ def _oracle_base() -> dict[str, str]:
                    COUNT(*) AS n_turns, CAST(SUM(w) AS BIGINT) AS tokens,
                    MIN(turn_idx) AS first_turn, MAX(turn_idx) AS last_turn
             FROM r GROUP BY 1, 2
-        """,
-        "dedup_cluster_stats_t1": f"""
-            WITH RECURSIVE pairs AS (
-              SELECT id_a, id_b
-              FROM read_parquet('{DATA_DIR}/golden/t1/neardup_minhash.parquet')
-            ), edges AS (
-              SELECT id_a AS src, id_b AS dst FROM pairs
-              UNION
-              SELECT id_b, id_a FROM pairs
-            ), reach(id, lbl) AS (
-              SELECT src, src FROM edges
-              UNION
-              SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id
-            ), cc AS (
-              SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-            )
-            SELECT cluster_id, COUNT(*) AS n_members,
-                   COUNT(*) - 1 AS n_removed
-            FROM cc GROUP BY cluster_id
         """,
         "sessionize_events": """
             WITH t AS (
@@ -3441,13 +3150,6 @@ def _oracle_base() -> dict[str, str]:
                                  substr(text, 1, 120)) || '...'
                         ELSE text END AS truncated
             FROM documents
-        """,
-        "value_stats_events": """
-            SELECT round(min(value), 4) AS v_min,
-                   round(max(value), 4) AS v_max,
-                   round(avg(value), 4) AS v_avg,
-                   round(stddev_samp(value), 4) AS v_std
-            FROM events
         """,
         "hash_sample_docs": """
             SELECT doc_id FROM documents

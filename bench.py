@@ -373,7 +373,6 @@ def main() -> None:
     budget = _Budget(float(os.environ.get("BENCH_TIME_BUDGET", "1500")))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     RESULT["sf"] = (
         float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
     )
@@ -393,7 +392,7 @@ def main() -> None:
 
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master=f"local[{cpus}]", app_name="bench")
+    spark = get_spark(app_name="bench")
 
     import __spark_entry__ as entrymod
 

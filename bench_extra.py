@@ -62,10 +62,9 @@ def neardup_branches(spark, sf_dir, out) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master=f"local[{cpus}]", app_name="bench_extra")
+    spark = get_spark(app_name="bench_extra")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

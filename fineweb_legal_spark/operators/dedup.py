@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .parallel import group_parallelism
+
 # Mersenne prime 2^31-1: with 32-bit shingle hashes, a*x + b < 2^63 so the
 # whole (n_hashes x n_shingles) universal-hash grid vectorizes in int64
 _MERSENNE = (1 << 31) - 1
@@ -269,7 +271,10 @@ def exact_jaccard_pairs(
     plan audit and as the verification twin (use only on bounded inputs).
 
     All three produce identical output (pytest-pinned pairwise).
+    ``threshold`` must lie in [0, 1]; anything else raises ValueError.
     """
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold {threshold!r} not in [0, 1]")
     words = F.array_distinct(F.split(F.lower(F.trim("text")), " "))
     if impl == "auto":
         probe = (
@@ -284,7 +289,7 @@ def exact_jaccard_pairs(
         t = df.select(F.col("id").cast("string"), words.alias("w"))
         # nested-loop join parallelism == partitions of the streamed side;
         # a single-file source would otherwise run the n^2 loop in one task
-        a, b = t.repartition(32).alias("a"), t.alias("b")
+        a, b = t.repartition(group_parallelism(t)).alias("a"), t.alias("b")
         inter = F.size(F.array_intersect(F.col("a.w"), F.col("b.w")))
         union = F.size(F.col("a.w")) + F.size(F.col("b.w")) - inter
         return (
@@ -433,11 +438,11 @@ def _exact_jaccard_bitmask(
             F.lit(64),
         )
         ga_exp = ga.withColumn("pb_band", F.explode(F.sequence(lo, hi)))
-        raw = ga_exp.repartition(64).join(
+        raw = ga_exp.repartition(group_parallelism(ga_exp)).join(
             F.broadcast(gb), F.col("pb_band") == F.col("pb")
         )
     else:
-        raw = ga.repartition(64).crossJoin(F.broadcast(gb))
+        raw = ga.repartition(group_parallelism(ga)).crossJoin(F.broadcast(gb))
     pairs = (
         # keyless repartition above: join parallelism == probe-side
         # partitions, and the post-aggregation left would otherwise be

@@ -9,6 +9,12 @@ onto 1-2 cores while 30 sit idle (round 6, measured: pseudonymize_pii
 adding overhead, not parallelism). Work-per-byte in these stages is
 orders of magnitude higher than AQE's byte model assumes, so the
 exchange width must come from the compute budget, not the byte count.
+
+This module is the one place that decides exchange width.
+``session.get_spark`` sets ``spark.sql.shuffle.partitions`` to a local
+session's ``defaultParallelism`` unless the caller configured it (a
+cluster master keeps spark-submit's value), and every operator that
+fixes a width asks :func:`group_parallelism`.
 """
 
 from __future__ import annotations
@@ -37,3 +43,18 @@ def repartition_for_group_kernel(df: DataFrame, *cols: str) -> DataFrame:
     — just one whose width feeds every core.
     """
     return df.repartition(group_parallelism(df), *cols)
+
+
+def widen(df: DataFrame) -> DataFrame:
+    """Spread a scan that has fewer splits than the cluster has slots.
+
+    Single-row-group fixture files plan 1-2 splits, so every
+    zero-exchange Arrow kernel downstream would serialize onto 1-2 cores
+    (measured: dup_ngram_signals at sf1.0 ran 11.9 s on a 2-split scan).
+    Only then does one small RoundRobin exchange spread the rows to
+    :func:`group_parallelism` partitions; a production many-file table
+    already has >= slots splits and is returned untouched.
+    """
+    if df.rdd.getNumPartitions() < df.sparkSession.sparkContext.defaultParallelism:
+        return df.repartition(group_parallelism(df))
+    return df

@@ -110,7 +110,6 @@ def repetition_signals(
     ns: tuple[int, ...] = (2, 3, 4),
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Gopher-style repetition signals: for each document and each n in
     ``ns``, the most frequent word n-gram and the fraction of the
@@ -125,47 +124,21 @@ def repetition_signals(
     Ties resolve deterministically to the lexicographically greatest gram
     among those with the highest covered-character count.
 
-    ``impl="arrow"`` (default, the scale path): the per-document top
-    gram is a ROW-LOCAL computation — no other document's data enters it
-    — so one Arrow-batched kernel (split → count → argmax per n, the
-    same documented per-string-kernel category as the MinHash shingler)
-    computes it with ZERO exchanges, zero explodes, and O(words-in-doc)
-    memory per row.  This exists because the exchange plan below, though
-    map-side combinable and praised at 2M rows, was measured DYING at
-    10M rows on 32 cores (round 5, tools/stress10m.py): ~1.5B exploded
-    gram strings hit sort-based aggregation fallback and spilled >70 GB
-    to disk before ENOSPC.  Shuffle volume ~15x corpus bytes is not a
-    plan that survives 100 TB; a zero-shuffle kernel at ~linear cost is.
-
-    ``impl="exchange"`` (the former default, kept for the plan audit and
-    for engines where Python workers are unavailable): row-local
-    arrays_zip n-gram stream, two chained explodes, two map-side
-    combinable aggregations — the first exchange carries distinct
-    (doc, n, gram) triples, the second one row per (doc, n).  Correct,
-    and fine when corpus_bytes x gram_multiplier fits the shuffle tier;
-    prefer "arrow" beyond that.
+    The per-document top gram is a ROW-LOCAL computation — no other
+    document's data enters it — so one Arrow-batched kernel (split →
+    count → argmax per n, the same documented per-string-kernel category
+    as the MinHash shingler) computes it with ZERO exchanges, zero
+    explodes, and O(words-in-doc) memory per row.  An exchange plan
+    (exploded gram triples through two map-side combinable
+    aggregations), though fine at 2M rows, was measured DYING at 10M
+    rows on 32 cores (round 5, tools/stress10m.py): ~1.5B exploded gram
+    strings hit sort-based aggregation fallback and spilled >70 GB to
+    disk before ENOSPC.  Shuffle volume ~15x corpus bytes is not a plan
+    that survives 100 TB; a zero-shuffle kernel at ~linear cost is.
 
     Pathological single documents (10^8+ words) should be span-pre-split
     upstream, the same policy packing applies to giant conversations.
     """
-    if impl == "arrow":
-        return _repetition_signals_arrow(df, ns, id_col, text_col)
-    if impl != "exchange":
-        raise ValueError(f"impl {impl!r} not in ('arrow', 'exchange')")
-    return _repetition_signals_exchange(df, ns, id_col, text_col)
-
-
-def _repetition_signals_arrow(
-    df: DataFrame,
-    ns: tuple[int, ...],
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Zero-exchange kernel: count/argmax each document's n-grams inside
-    one Arrow batch; the only non-scalar step is the row-local explode of
-    the per-document (<=|ns|)-element result array.  Identical output
-    contract to the exchange plan (same split/lower/tie semantics; the
-    randomized Counter-twin parity test runs against BOTH impls)."""
     import re
     from collections import Counter
 
@@ -219,82 +192,6 @@ def _repetition_signals_arrow(
         F.col("_t.top_cnt").alias("top_cnt"),
         F.round(
             F.col("_t.covered").cast("double") / F.col("_chars"), 6
-        ).alias("top_gram_char_frac"),
-    )
-
-
-def _repetition_signals_exchange(
-    df: DataFrame,
-    ns: tuple[int, ...],
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    max_n = max(ns)
-    w = F.array_remove(
-        F.split(F.lower(F.col(text_col)), "[ \t\n\r\f\x0b]+"), ""
-    )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.length(F.col(text_col)).alias("_chars"), w.alias("_w1")
-    )
-    for i in range(2, max_n + 1):
-        base = base.withColumn(
-            f"_w{i}", F.slice(F.col("_w1"), i, F.size(F.col("_w1")))
-        )
-    z = base.select(
-        id_col,
-        "_chars",
-        F.explode(
-            F.arrays_zip(*[F.col(f"_w{i}") for i in range(1, max_n + 1)])
-        ).alias("_z"),
-    )
-
-    def gram(n: int):
-        parts: list = []
-        for i in range(1, n + 1):
-            if i > 1:
-                parts.append(F.lit(" "))
-            parts.append(F.col("_z").getField(f"_w{i}"))
-        return F.concat(*parts)  # null-propagating: ragged tail drops out
-
-    grams = z.select(
-        id_col,
-        "_chars",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(n).alias("n"), gram(n).alias("gram")
-                    )
-                    for n in ns
-                ]
-            )
-        ).alias("_g"),
-    ).select(
-        id_col,
-        "_chars",
-        F.col("_g.n").alias("n"),
-        F.col("_g.gram").alias("gram"),
-    ).filter(F.col("gram").isNotNull())
-    counts = grams.groupBy(id_col, "n", "gram").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("_chars").alias("_chars")
-    )
-    top = counts.groupBy(id_col, "n").agg(
-        F.max(
-            F.struct(
-                (F.col("cnt") * F.length("gram")).alias("covered"),
-                F.col("gram"),
-                F.col("cnt"),
-            )
-        ).alias("_top"),
-        F.first("_chars").alias("_chars"),
-    )
-    return top.select(
-        id_col,
-        "n",
-        F.col("_top.gram").alias("top_gram"),
-        F.col("_top.cnt").alias("top_cnt"),
-        F.round(
-            F.col("_top.covered").cast("double") / F.col("_chars"), 6
         ).alias("top_gram_char_frac"),
     )
 

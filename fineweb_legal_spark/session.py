@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
 local[N] in the sandbox; the same configs are the ones we'd set on a real
-multi-executor cluster (AQE, Arrow, explicit shuffle parallelism).
+multi-executor cluster (AQE, Arrow). Only the shuffle width differs: in
+local mode it is the session's slot count, on a cluster master it is
+whatever spark-submit (or Spark's default) sets.
 """
 
 from __future__ import annotations
@@ -10,15 +12,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_HEAP_GIB = 16
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for local mode: 40 % of MemTotal in whole GiB, at
+    least 1g and capped at 16g (6g on a 15.7 GiB host, 16g from 40 GiB
+    up). The heap is pinned and pre-touched below, so it must leave the
+    Python workers and the OS room on a host with no swap; a fixed 16g
+    cannot even be mapped on a 15 GB one."""
+    with open(meminfo) as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, min(_MAX_HEAP_GIB, int(kib / 2**20 * 0.4)))}g"
+
+
+def slots_known_at_start(master: str) -> bool:
+    """True for ``local``, ``local[N]``, ``local[N,F]`` and ``local[*]``:
+    their slots exist once the session starts. A cluster master's
+    executors (``spark://…``, ``local-cluster[…]``, yarn, k8s) register
+    later, so its defaultParallelism read at start-up is a placeholder."""
+    return master == "local" or master.startswith("local[")
+
 
 def get_spark(
     master: str | None = None,
     app_name: str = "fineweb_legal_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     master = master or f"local[{cpus}]"
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory()
     # Python UDF workers inherit this env (driver -> JVM -> daemon -> fork).
     # Keep glibc from returning freed arena memory to the kernel: page
     # faults are pathologically slow in this microVM (~0.2-0.8 GB/s commit)
@@ -26,13 +49,9 @@ def get_spark(
     # same memory thousands of times.
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "268435456")
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -50,10 +69,11 @@ def get_spark(
         # minutes — the round-1 'local[32] slower than local[8]' scaling
         # anomaly. Fix: a MODEST heap, pinned (-Xms=-Xmx) and pre-touched
         # once at startup (~15 s one-time), exactly the discipline real
-        # cluster executors use (Xms=Xmx, live for hours). 16g is enough
-        # for 32 window/sort tasks on the 2M-turn bench (probe records
-        # spill_mb to verify).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # cluster executors use (Xms=Xmx, live for hours). The size comes
+        # from the host (default_driver_memory; SPARK_DRIVER_MEM
+        # overrides); its 16g cap is enough for 32 window/sort tasks on
+        # the 2M-turn bench (probe records spill_mb to verify).
+        .config("spark.driver.memory", mem)
         # G1 pause goal relaxed for batch throughput: the default 200 ms
         # goal makes G1 keep the young gen SMALL under a high allocation
         # rate — the pair-expansion joins (exact-jaccard member
@@ -69,8 +89,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_DRIVER_JAVA_OPTS",
-                "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "16g")
-                + " -XX:+AlwaysPreTouch -XX:MaxGCPauseMillis=1500",
+                f"-Xms{mem} -XX:+AlwaysPreTouch -XX:MaxGCPauseMillis=1500",
             ),
         )
         .config("spark.ui.enabled", "false")
@@ -80,6 +99,19 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # local mode: shuffle width = the session's slot count, unless the
+    # caller (or spark-submit) configured it; operators read it through
+    # operators/parallel.py. Any other master is left to spark-submit or
+    # Spark's default: a standalone master reports 2 slots until its
+    # executors register, which would fix every shuffle of the job at 2.
+    key = "spark.sql.shuffle.partitions"
+    sc = spark.sparkContext
+    if (
+        slots_known_at_start(sc.master)
+        and key not in (extra_conf or {})
+        and not sc.getConf().contains(key)
+    ):
+        spark.conf.set(key, str(sc.defaultParallelism))
     return spark
 
 

@@ -647,8 +647,7 @@ def test_scrub_repeated_spans_hot_tier_identical(spark):
     assert run(hot_grams=1) == ref  # forced hot/tail split
 
 
-@pytest.mark.parametrize("impl", ["arrow", "exchange"])
-def test_repetition_signals_exact_and_plan(spark, impl):
+def test_repetition_signals_exact_and_plan(spark):
     from fineweb_legal_spark.operators.textql import repetition_signals
 
     docs = spark.createDataFrame(
@@ -662,7 +661,7 @@ def test_repetition_signals_exact_and_plan(spark, impl):
         ],
         ["doc_id", "text"],
     )
-    out = repetition_signals(docs, impl=impl)
+    out = repetition_signals(docs)
     # plan BEFORE execution: post-collect explain shows the final AQE
     # plan whose node format differs (isFinalPlan=true, query stages)
     plan = out._jdf.queryExecution().explainString(
@@ -670,18 +669,11 @@ def test_repetition_signals_exact_and_plan(spark, impl):
             "formatted"
         )
     )
-    if impl == "exchange":
-        # exchange-plan contract: exactly two Exchanges (gram agg +
-        # per-doc top agg), no Python eval, no window sort, no lambda HOF
-        assert plan.count(") Exchange") == 2, plan
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-    else:
-        # scale contract (round 5, after the 10M ENOSPC finding): the
-        # arrow kernel plans ZERO exchanges — one Arrow eval + a
-        # row-local explode, nothing shuffles at any corpus size
-        assert plan.count(") Exchange") == 0, plan
-        assert "ArrowEvalPython" in plan
+    # scale contract (round 5, after the 10M ENOSPC finding): the arrow
+    # kernel plans ZERO exchanges — one Arrow eval + a row-local explode,
+    # nothing shuffles at any corpus size
+    assert plan.count(") Exchange") == 0, plan
+    assert "ArrowEvalPython" in plan
     assert ") Window" not in plan
     got = {
         (r["doc_id"], r["n"]): (r["top_gram"], r["top_cnt"], r["top_gram_char_frac"])
@@ -755,12 +747,11 @@ def test_semantic_dedup_honors_id_col(spark):
     assert out == {10: (10, True), 11: (10, False), 12: (12, True)}
 
 
-@pytest.mark.parametrize("impl", ["arrow", "exchange"])
-def test_repetition_signals_randomized_python_parity(spark, impl):
+def test_repetition_signals_randomized_python_parity(spark):
     """200 seeded random docs (tiny vocab forces heavy gram collisions,
-    mixed whitespace separators, empties/nulls): BOTH impls == a
+    mixed whitespace separators, empties/nulls): the kernel == a
     pure-Python Counter twin on (top_gram, top_cnt) exactly and frac to
-    1e-6 — which also pins arrow == exchange."""
+    1e-6."""
     import random
     import re as _re
     from collections import Counter
@@ -785,7 +776,7 @@ def test_repetition_signals_randomized_python_parity(spark, impl):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["doc_id"], r["n"]): (r["top_gram"], r["top_cnt"], r["top_gram_char_frac"])
-        for r in repetition_signals(df, impl=impl).collect()
+        for r in repetition_signals(df).collect()
     }
 
     want = {}
@@ -2556,6 +2547,24 @@ def test_exact_jaccard_impls_identical(spark):
     assert ("d", "e", 1.0) in ref2 and ("g", "h", 1.0) in ref2
     assert pairs(corner, "auto") == ref2
     assert pairs(corner, "prefix") == ref2
+
+
+def test_exact_jaccard_threshold_range(spark):
+    # a threshold above 1 used to make the bitmask plan's popcount band
+    # sequence(lo, hi) count DOWN and emit spurious candidates; the range
+    # is now checked at entry
+    from fineweb_legal_spark.operators.dedup import exact_jaccard_pairs
+
+    df = spark.createDataFrame(
+        [("a", "x y z"), ("b", "z y x"), ("c", "x y"), ("d", "x y z w")],
+        ["id", "text"],
+    )
+    for impl in ("auto", "prefix", "crossjoin"):
+        got = [tuple(r) for r in exact_jaccard_pairs(df, 1.0, impl=impl).collect()]
+        assert got == [("a", "b", 1.0)], impl
+    for bad in (1.5, -0.1):
+        with pytest.raises(ValueError):
+            exact_jaccard_pairs(df, bad)
 
 
 def test_calibration_curve_bins_and_exclusions(spark):

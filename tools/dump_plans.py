@@ -26,9 +26,10 @@ PICKS = {
         "join -> ONE Arrow model stage -> persisted scored frame -> SLIM "
         "dedup (round 3): the norm_key hash exchange carries only "
         "(norm_key, conv_id, turn_idx) — never text — and loser decisions "
-        "broadcast back onto the cached frame. Shuffle inventory (7): two "
-        "RoundRobin repartitions that parallelize the single-file t2 scan "
-        "(absent on a many-file table), the salted partial + final "
+        "broadcast back onto the cached frame. Shuffle inventory (7): the "
+        "parallel.widen RoundRobin spread of the single-file t2 scan, once "
+        "per scan branch at the session width (absent when the scan "
+        "already has a split per slot), the salted partial + final "
         "conv-stats aggregations, the conv-stats BroadcastExchange, the "
         "3-column dedup hash exchange (156->35 MB at 2M turns), and the "
         "loser BroadcastExchange."
@@ -72,8 +73,8 @@ PICKS = {
         "Exchange as of round 5. top_gram branch: the per-document top "
         "gram needs no cross-document data, so it is one Arrow kernel "
         "(split -> Counter -> argmax inside a batch) + a row-local "
-        "explode; the former 2-exchange plan over exploded gram triples "
-        "(kept as impl='exchange') measured DYING at 10M rows — ~1.5B "
+        "explode; a 2-exchange plan over exploded gram triples "
+        "measured DYING at 10M rows — ~1.5B "
         "gram strings, sort-agg fallback, >70 GB spill, ENOSPC — and the "
         "kernel is also 5.5x faster at 2M (BENCH.md round-5 stress). "
         "dup_gram branch: per-row Arrow pass (crc32+Horner hash stream + "

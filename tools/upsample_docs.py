@@ -28,9 +28,12 @@ def main() -> None:
 
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master="local[32]", app_name="upsample_docs")
+    spark = get_spark(app_name="upsample_docs")
     d = spark.read.parquet(src)
-    n = d.count()
+    n, lo, hi = d.agg(F.count("*"), F.min("doc_id"), F.max("doc_id")).first()
+    # replica r shifts ids by r*10n: disjoint only while ids lie in [0, 10n)
+    if not (0 <= lo and hi < 10 * n):
+        raise SystemExit(f"doc_id range [{lo}, {hi}] breaks the 10n replica offsets")
     reps = d.crossJoin(spark.range(k).withColumnRenamed("id", "rep"))
     up = reps.withColumn(
         "doc_id", (F.col("doc_id") + F.col("rep") * F.lit(n) * 10).cast("long")
