@@ -18,6 +18,13 @@ conv_id so the per-group filter prunes at the manifest level; on plain
 parquet the group filter is evaluated in the scan stage (still one pass per
 group). With the default single group there is exactly ONE full pass.
 
+The commit loop (``commit_groups``) is written once, over a store that owns
+only what differs between backends: which buckets are committed, reading
+the committed output, creating the output location, writing one group's
+data and publishing one group's lineage rows. ``DirectoryStore`` below
+writes under a directory; ``lineage_table.TableStore`` writes to catalog
+tables.
+
 Layout under ``out_dir``:
     data/bucket=NN/part-*.parquet     (snappy, sorted by conv_id, turn_idx)
     _lineage/group-<gid>.parquet      (bucket, status, kept, dropped,
@@ -35,11 +42,23 @@ import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import spec
 from .pipeline import run_pipeline
 
 BUCKET_COL = "bucket"
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("kept", T.LongType()),
+        T.StructField("dropped", T.LongType()),
+        T.StructField("scrubbed", T.LongType()),
+        T.StructField("committed_at", T.TimestampType()),
+    ]
+)
 
 
 def bucket_of(col):
@@ -111,59 +130,93 @@ def group_metric_exprs(group: list[int]) -> list:
     return exprs
 
 
-def group_commit_stats(kept: DataFrame, group: list[int], obs: Observation) -> dict:
-    """The observed metrics for a committed group, with the explicit-agg
-    fallback for all-rejected groups (whose zero-row write lets AQE
-    eliminate the CollectMetrics subtree so the observation never fires)."""
+def group_lineage_rows(
+    kept: DataFrame, group: list[int], obs: Observation
+) -> list[tuple]:
+    """One ``LINEAGE_SCHEMA`` row per bucket of a written group, from the
+    observed metrics, with the same metrics as an explicit agg for
+    all-rejected groups (whose zero-row write lets AQE eliminate the
+    CollectMetrics subtree so the observation never fires)."""
     try:
-        return obs.get
+        got = obs.get
     except Exception:  # noqa: BLE001
-        stats_rows = (
-            kept.groupBy(BUCKET_COL)
-            .agg(
-                F.sum(F.col("keep").cast("long")).alias("kept"),
-                F.sum((~F.col("keep")).cast("long")).alias("dropped"),
-                F.sum(
-                    (
-                        F.col("keep")
-                        & (F.col("scrubbed_text") != F.col("text"))
-                    ).cast("long")
-                ).alias("scrubbed"),
-            )
-            .collect()
+        got = kept.agg(*group_metric_exprs(group)).first().asDict()
+
+    def _stat(b: int, k: str) -> int:
+        v = got.get(f"{k}_{b}")
+        return int(v) if v is not None else 0
+
+    committed_at = got.get("committed_at") or datetime.now(timezone.utc)
+    return [
+        (
+            b,
+            "committed",
+            _stat(b, "kept"),
+            _stat(b, "dropped"),
+            _stat(b, "scrubbed"),
+            committed_at,
         )
-        got: dict = {}
-        for r in stats_rows:
-            b = int(r[BUCKET_COL])
-            for k in ("kept", "dropped", "scrubbed"):
-                got[f"{k}_{b}"] = int(r[k])
-        return got
+        for b in group
+    ]
 
 
-def run_with_lineage(
+class DirectoryStore:
+    """Commit target under ``out_dir`` (layout in the module docstring)."""
+
+    def __init__(self, spark: SparkSession, out_dir: str | Path):
+        self.spark = spark
+        self.out = Path(out_dir)
+
+    def committed(self) -> set[int]:
+        return committed_buckets(self.out)
+
+    def read_committed(self) -> DataFrame | None:
+        return read_committed_output(self.spark, self.out)
+
+    def create(self, data: DataFrame) -> None:
+        (self.out / "data").mkdir(parents=True, exist_ok=True)
+        (self.out / "_lineage").mkdir(parents=True, exist_ok=True)
+
+    def write_data(self, staged: DataFrame) -> None:
+        # dynamic overwrite replaces only the touched buckets; as a writer
+        # option it leaves the session's overwrite mode as it was
+        (
+            staged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .option("compression", "snappy")
+            .parquet(str(self.out / "data"))
+        )
+
+    def publish(self, gid: str, rows: list[tuple]) -> None:
+        schema = to_arrow_schema(LINEAGE_SCHEMA)
+        table = pa.Table.from_arrays(
+            [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)],
+            schema=schema,
+        )
+        # atomic publish: tmp file + rename
+        final = self.out / "_lineage" / f"group-{gid}.parquet"
+        tmp = self.out / "_lineage" / f".group-{gid}.tmp"
+        pq.write_table(table, tmp, compression="snappy")
+        os.replace(tmp, final)
+
+
+def commit_groups(
     spark: SparkSession,
     transcripts: DataFrame,
-    out_dir: str | Path,
+    store,
     n_groups: int = 1,
     max_groups: int | None = None,
 ) -> dict:
-    """Filter + scrub + write, committing one bucket group at a time.
+    """Filter + scrub + write into ``store`` (``DirectoryStore`` or
+    ``lineage_table.TableStore``), committing one bucket group at a time.
 
     ``max_groups`` exists for kill-simulation in tests (process only the
     first K groups, as if the job died there).
     """
-    out = Path(out_dir)
-    (out / "data").mkdir(parents=True, exist_ok=True)
-    (out / "_lineage").mkdir(parents=True, exist_ok=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    done = committed_buckets(out)
-    all_buckets = list(range(spec.LINEAGE_BUCKETS))
-    pending = [b for b in all_buckets if b not in done]
-    groups: list[list[int]] = [
-        pending[i::n_groups] for i in range(n_groups)
-    ]
-    groups = [g for g in groups if g]
+    done = store.committed()
+    pending = [b for b in range(spec.LINEAGE_BUCKETS) if b not in done]
+    groups = [g for g in (pending[i::n_groups] for i in range(n_groups)) if g]
 
     if not groups:
         return {
@@ -179,15 +232,23 @@ def run_with_lineage(
     # empty registry this reproduces the uninterrupted global dedup exactly,
     # and any kill/resume sequence converges to the same kept set.
     # (Committed-hash registry = reference J1 / seen_hashes.json analog.)
-    pending_all = [b for g in groups for b in g]
     if max_groups is not None:
         # kill simulation: the verdict pass over ALL pending always runs
         # (a real kill interrupts the commit loop, after compute) — only
         # the commits are cut short
         groups = groups[:max_groups]
-    pending_src = transcripts.filter(bucket_of(F.col("conv_id")).isin(pending_all))
-    committed_df = read_committed_output(spark, out)
-    registry = committed_df.select("norm_key") if committed_df is not None else None
+    pending_src = transcripts.filter(bucket_of(F.col("conv_id")).isin(pending))
+    committed_df = store.read_committed()
+    # Snapshot the registry: every write into the store refreshes the cached
+    # plans that read it, so a live registry scan would drop kept_all's
+    # persisted blocks after each group and rerun the pipeline for the next.
+    # (A local checkpoint: recomputing kept_all after an executor loss that
+    # took registry blocks fails the job; the rerun resumes from lineage.)
+    registry = (
+        committed_df.select("norm_key").localCheckpoint()
+        if committed_df is not None
+        else None
+    )
     # slim_dedup=False: this path persists kept_all (full payload) right
     # below anyway, so a second cached intermediate inside the dedup would
     # only double the storage footprint of the run.
@@ -209,8 +270,8 @@ def run_with_lineage(
     ).persist(StorageLevel.DISK_ONLY)
     # DISK_ONLY: kept_all carries the full text payload; at cluster scale a
     # MEMORY_AND_DISK cache of the whole corpus evicts everything else.
+    store.create(kept_all)
 
-    processed = 0
     for group in groups:
         gid = "-".join(str(b) for b in group)
         kept = kept_all.filter(F.col(BUCKET_COL).isin(group))
@@ -219,48 +280,33 @@ def run_with_lineage(
         # action itself produces the per-bucket kept/dropped/scrubbed
         # counters — no second aggregation pass over the group.
         obs = Observation(f"lineage-{gid}")
-        # stage the data: dynamic overwrite replaces only the touched buckets
-        (
+        store.write_data(
             kept.observe(obs, *group_metric_exprs(group))
             .filter("keep")
             .drop("keep")
             .repartition(BUCKET_COL)
             .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .option("compression", "snappy")
-            .parquet(str(out / "data"))
         )
-        got = group_commit_stats(kept, group, obs)
-
-        def _stat(b: int, k: str) -> int:
-            v = got.get(f"{k}_{b}")
-            return int(v) if v is not None else 0
-
-        committed_at = got.get("committed_at") or datetime.now(timezone.utc)
-        table = pa.table(
-            {
-                "bucket": pa.array(group, pa.int32()),
-                "status": pa.array(["committed"] * len(group), pa.string()),
-                "kept": pa.array([_stat(b, "kept") for b in group], pa.int64()),
-                "dropped": pa.array([_stat(b, "dropped") for b in group], pa.int64()),
-                "scrubbed": pa.array([_stat(b, "scrubbed") for b in group], pa.int64()),
-                "committed_at": pa.array(
-                    [committed_at] * len(group), pa.timestamp("us", tz="UTC")
-                ),
-            }
-        )
-        # atomic publish: the lineage record IS the commit point
-        final = out / "_lineage" / f"group-{gid}.parquet"
-        tmp = out / "_lineage" / f".group-{gid}.tmp"
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, final)
-        processed += len(group)
+        # the lineage record IS the commit point
+        store.publish(gid, group_lineage_rows(kept, group, obs))
 
     kept_all.unpersist()
     return {
         "committed_before": len(done),
-        "committed_now": len(committed_buckets(out)),
+        "committed_now": len(store.committed()),
         "groups_processed": len(groups),
-        "buckets_processed": processed,
+        "buckets_processed": sum(len(g) for g in groups),
     }
+
+
+def run_with_lineage(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    out_dir: str | Path,
+    n_groups: int = 1,
+    max_groups: int | None = None,
+) -> dict:
+    """``commit_groups`` into the directory ``out_dir``."""
+    return commit_groups(
+        spark, transcripts, DirectoryStore(spark, out_dir), n_groups, max_groups
+    )

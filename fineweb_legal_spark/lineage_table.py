@@ -29,9 +29,8 @@ partitions, so every crash window converges under replay:
   anti-set) and a forced replay of the same group rewrites identical
   partitions — idempotent, duplicates impossible.
 
-Metrics ride the data write itself via ``df.observe`` (single-pass, the
-reference's in-loop counters), sharing ``lineage.group_metric_exprs`` /
-``group_commit_stats`` with the directory backend.
+The commit loop itself is ``lineage.commit_groups``, shared with the
+directory backend; ``TableStore`` supplies the table reads and writes.
 
 Scale note: the lineage table stays O(LINEAGE_BUCKETS) rows per run —
 ``committed_buckets_table`` may collect() it on the driver.  The data
@@ -44,28 +43,11 @@ rows.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from . import spec
-from .lineage import BUCKET_COL, bucket_of, group_commit_stats, group_metric_exprs
-from .pipeline import run_pipeline
+from .lineage import BUCKET_COL, LINEAGE_SCHEMA, commit_groups
 from .sources.catalog import TableIO
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("kept", T.LongType()),
-        T.StructField("dropped", T.LongType()),
-        T.StructField("scrubbed", T.LongType()),
-        T.StructField("committed_at", T.TimestampType()),
-    ]
-)
 
 
 def committed_buckets_table(spark: SparkSession, lineage_table: str) -> set[int]:
@@ -94,8 +76,43 @@ def read_committed_table(
     )
 
 
-def read_lineage_table(spark: SparkSession, lineage_table: str) -> DataFrame:
-    return spark.table(lineage_table)
+class TableStore:
+    """Commit target: a bucket-partitioned data table plus a lineage table
+    over ``LINEAGE_SCHEMA``, both written by partition overwrite."""
+
+    def __init__(
+        self, spark: SparkSession, data_table: str, lineage_table: str, io: TableIO
+    ):
+        self.spark = spark
+        self.data_table = data_table
+        self.lineage_table = lineage_table
+        self.io = io
+
+    def committed(self) -> set[int]:
+        return committed_buckets_table(self.spark, self.lineage_table)
+
+    def read_committed(self) -> DataFrame | None:
+        return read_committed_table(self.spark, self.data_table, self.lineage_table)
+
+    def create(self, data: DataFrame) -> None:
+        # create-if-absent with EMPTY frames: every actual write goes
+        # through overwrite_partitions, so creation never double-writes data
+        self.io.ensure(
+            data.limit(0).drop("keep"), self.data_table, partition_by=[BUCKET_COL]
+        )
+        self.io.ensure(
+            self.spark.createDataFrame([], LINEAGE_SCHEMA),
+            self.lineage_table,
+            partition_by=["bucket"],
+        )
+
+    def write_data(self, staged: DataFrame) -> None:
+        self.io.overwrite_partitions(staged, self.data_table)
+
+    def publish(self, gid: str, rows: list[tuple]) -> None:
+        self.io.overwrite_partitions(
+            self.spark.createDataFrame(rows, LINEAGE_SCHEMA), self.lineage_table
+        )
 
 
 def run_with_lineage_table(
@@ -107,104 +124,7 @@ def run_with_lineage_table(
     max_groups: int | None = None,
     io: TableIO | None = None,
 ) -> dict:
-    """Filter + scrub + commit to catalog tables, one bucket group at a
-    time.  ``max_groups`` simulates a kill after K commits (tests)."""
-    io = io or TableIO(spark)
-
-    done = committed_buckets_table(spark, lineage_table)
-    all_buckets = list(range(spec.LINEAGE_BUCKETS))
-    pending = [b for b in all_buckets if b not in done]
-    groups: list[list[int]] = [pending[i::n_groups] for i in range(n_groups)]
-    groups = [g for g in groups if g]
-
-    if not groups:
-        return {
-            "committed_before": len(done),
-            "committed_now": len(done),
-            "groups_processed": 0,
-            "buckets_processed": 0,
-        }
-
-    # ONE pipeline pass over all pending buckets (see lineage.py for the
-    # global-dedup convergence argument — identical here: the committed
-    # registry seeds exclude_keys, so kill/resume converges to the
-    # uninterrupted global result).
-    pending_all = [b for g in groups for b in g]
-    if max_groups is not None:
-        groups = groups[:max_groups]
-    pending_src = transcripts.filter(bucket_of(F.col("conv_id")).isin(pending_all))
-    committed_df = read_committed_table(spark, data_table, lineage_table)
-    registry = committed_df.select("norm_key") if committed_df is not None else None
-    verdicts = run_pipeline(
-        spark,
-        pending_src,
-        exclude_keys=registry,
-        include_norm_key=True,
-        slim_dedup=False,
-    )
-    kept_all = (
-        pending_src.join(
-            verdicts.select(
-                "conv_id", "turn_idx", "keep", "scrubbed_text", "lang",
-                "ppl_bucket", "norm_key",
-            ),
-            ["conv_id", "turn_idx"],
-        ).withColumn(BUCKET_COL, bucket_of(F.col("conv_id")))
-    ).persist(StorageLevel.DISK_ONLY)
-
-    # create-if-absent with EMPTY frames: every actual write below goes
-    # through overwrite_partitions, so creation never double-writes data
-    io.ensure(
-        kept_all.limit(0).drop("keep"), data_table, partition_by=[BUCKET_COL]
-    )
-    io.ensure(
-        spark.createDataFrame([], LINEAGE_SCHEMA),
-        lineage_table,
-        partition_by=["bucket"],
-    )
-
-    processed = 0
-    for group in groups:
-        gid = "-".join(str(b) for b in group)
-        kept = kept_all.filter(F.col(BUCKET_COL).isin(group))
-        obs = Observation(f"lineage-tbl-{gid}")
-        staged = (
-            kept.observe(obs, *group_metric_exprs(group))
-            .filter("keep")
-            .drop("keep")
-            .repartition(BUCKET_COL)
-            .sortWithinPartitions("conv_id", "turn_idx")
-        )
-        io.overwrite_partitions(staged, data_table)
-        got = group_commit_stats(kept, group, obs)
-
-        def _stat(b: int, k: str) -> int:
-            v = got.get(f"{k}_{b}")
-            return int(v) if v is not None else 0
-
-        committed_at = got.get("committed_at") or datetime.now(timezone.utc)
-        lineage_rows = spark.createDataFrame(
-            [
-                (
-                    b,
-                    "committed",
-                    _stat(b, "kept"),
-                    _stat(b, "dropped"),
-                    _stat(b, "scrubbed"),
-                    committed_at,
-                )
-                for b in group
-            ],
-            LINEAGE_SCHEMA,
-        )
-        # the lineage partition overwrite IS the commit point
-        io.overwrite_partitions(lineage_rows, lineage_table)
-        processed += len(group)
-
-    kept_all.unpersist()
-    return {
-        "committed_before": len(done),
-        "committed_now": len(committed_buckets_table(spark, lineage_table)),
-        "groups_processed": len(groups),
-        "buckets_processed": processed,
-    }
+    """``lineage.commit_groups`` into catalog tables.  ``max_groups``
+    simulates a kill after K commits (tests)."""
+    store = TableStore(spark, data_table, lineage_table, io or TableIO(spark))
+    return commit_groups(spark, transcripts, store, n_groups, max_groups)

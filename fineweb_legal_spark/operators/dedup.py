@@ -267,11 +267,9 @@ def exact_jaccard_pairs(
     emitted jaccard is rounded HALF_UP to 4 decimals before the >= filter
     (a true J of 0.79995 rounds to 0.8000 and must still be found).
 
-    ``impl="crossjoin"``: the original O(n^2) cross join — kept for the
-    plan audit and as the verification twin (use only on bounded inputs).
-
-    All three produce identical output (pytest-pinned pairwise).
-    ``threshold`` must lie in [0, 1]; anything else raises ValueError.
+    Both produce the same output as an O(n^2) cross join (the verification
+    twin in tests/test_operators.py, pytest-pinned pairwise).
+    Any other ``impl``, or a ``threshold`` outside [0, 1], raises ValueError.
     """
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold {threshold!r} not in [0, 1]")
@@ -285,25 +283,8 @@ def exact_jaccard_pairs(
                 df, threshold, sorted(r.tok for r in probe)
             )
         impl = "prefix"
-    if impl == "crossjoin":
-        t = df.select(F.col("id").cast("string"), words.alias("w"))
-        # nested-loop join parallelism == partitions of the streamed side;
-        # a single-file source would otherwise run the n^2 loop in one task
-        a, b = t.repartition(group_parallelism(t)).alias("a"), t.alias("b")
-        inter = F.size(F.array_intersect(F.col("a.w"), F.col("b.w")))
-        union = F.size(F.col("a.w")) + F.size(F.col("b.w")) - inter
-        return (
-            a.crossJoin(b)
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.round(inter.cast("double") / union, 4).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
     if impl != "prefix":
-        raise ValueError(f"impl {impl!r} not in ('prefix', 'crossjoin')")
+        raise ValueError(f"impl {impl!r} not in ('auto', 'prefix')")
 
     from pyspark.sql import Window
 

@@ -2507,18 +2507,43 @@ def test_cross_neardup_only_cross_pairs(spark):
     assert got == {("n1", "o1"), ("n2", "o1")}
 
 
+def _crossjoin_jaccard_pairs(df, threshold):
+    """Verification twin of ``exact_jaccard_pairs``: the O(n^2) cross join
+    over word sets (bounded inputs only)."""
+    from fineweb_legal_spark.operators.parallel import group_parallelism
+
+    words = F.array_distinct(F.split(F.lower(F.trim("text")), " "))
+    t = df.select(F.col("id").cast("string"), words.alias("w"))
+    # nested-loop join parallelism == partitions of the streamed side
+    a, b = t.repartition(group_parallelism(t)).alias("a"), t.alias("b")
+    inter = F.size(F.array_intersect(F.col("a.w"), F.col("b.w")))
+    union = F.size(F.col("a.w")) + F.size(F.col("b.w")) - inter
+    return (
+        a.crossJoin(b)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.round(inter.cast("double") / union, 4).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def test_exact_jaccard_impls_identical(spark):
     # round 6: exact_jaccard_pairs grew two scale plans (auto->bitmask for
-    # <=64-token vocabularies; prefix-filtered AllPairs otherwise). All
+    # <=64-token vocabularies; prefix-filtered AllPairs otherwise). Both
     # must reproduce the O(n^2) cross join bit-for-bit — including rows
     # whose true J < t but round(J, 4) >= t, and empty/NULL-text rows.
     from fineweb_legal_spark.operators.dedup import exact_jaccard_pairs
 
     def pairs(df, impl, thr=0.8):
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in exact_jaccard_pairs(df, thr, impl=impl).collect()
+        got = (
+            _crossjoin_jaccard_pairs(df, thr)
+            if impl == "crossjoin"
+            else exact_jaccard_pairs(df, thr, impl=impl)
         )
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in got.collect())
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         F.col("doc_id").cast("string").alias("id"), "text"
@@ -2559,12 +2584,16 @@ def test_exact_jaccard_threshold_range(spark):
         [("a", "x y z"), ("b", "z y x"), ("c", "x y"), ("d", "x y z w")],
         ["id", "text"],
     )
-    for impl in ("auto", "prefix", "crossjoin"):
+    ref = [tuple(r) for r in _crossjoin_jaccard_pairs(df, 1.0).collect()]
+    assert ref == [("a", "b", 1.0)]
+    for impl in ("auto", "prefix"):
         got = [tuple(r) for r in exact_jaccard_pairs(df, 1.0, impl=impl).collect()]
-        assert got == [("a", "b", 1.0)], impl
+        assert got == ref, impl
     for bad in (1.5, -0.1):
         with pytest.raises(ValueError):
             exact_jaccard_pairs(df, bad)
+    with pytest.raises(ValueError, match="'auto', 'prefix'"):
+        exact_jaccard_pairs(df, 0.8, impl="crossjoin")
 
 
 def test_calibration_curve_bins_and_exclusions(spark):
