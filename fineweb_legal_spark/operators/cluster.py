@@ -192,17 +192,6 @@ def _cc_star(pairs: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-def dedup_cluster_summary(cc: DataFrame) -> DataFrame:
-    """Per-cluster rollup of connected_components labels: canonical keeper
-    id (== cluster_id, the min member), member count, and how many docs
-    the cluster removes from the corpus (n_members - 1)."""
-    return (
-        cc.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .withColumn("n_removed", F.col("n_members") - F.lit(1))
-    )
-
-
 def cluster_representatives(
     labels: DataFrame,
     scores: DataFrame,

@@ -82,7 +82,7 @@ def ascii_words(text: str) -> list[str]:
 
 def word_hashes(words: list[str]) -> np.ndarray:
     """One crc32 per word (uint64) — the per-word half of the rolling
-    gram kernel, factored out so multi-n callers (dup_ngram_signals,
+    gram kernel, factored out so multi-n callers (textql's
     repetition_profile: n in 2..10) hash each word ONCE instead of once
     per n (round 6: the crc32 loop was ~1/3 of the kernel and was being
     re-run 6-9x per document)."""

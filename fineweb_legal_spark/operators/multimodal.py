@@ -12,6 +12,7 @@ changes only the marked inner functions, not the dataflow.
 from __future__ import annotations
 
 import json
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -124,9 +125,11 @@ def fake_embedding(df: DataFrame, dim: int = 16) -> DataFrame:
             for payload in pdf["payload"]:
                 arr = np.frombuffer(payload, dtype=np.uint8)
                 hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                v = hist.astype(np.float32)
-                n = np.linalg.norm(v)
-                embs.append((v / n if n else v).round(6).tolist())
+                # exact int64 sum of squares, then one float64 sqrt and
+                # divide: a float32 norm rounds per host SIMD path and
+                # flips 6th-decimal midpoints; float32 only at the schema
+                n = math.sqrt(int((hist.astype(np.int64) ** 2).sum()))
+                embs.append((hist / (n or 1.0)).round(6).tolist())
             yield pd.DataFrame({"media_id": pdf["media_id"], "embedding": embs})
 
     return df.select("media_id", "payload").mapInPandas(fn, schema=_EMBED_SCHEMA)

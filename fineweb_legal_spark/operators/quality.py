@@ -11,16 +11,15 @@ Stage order and cost shape:
 2. ``fineweb`` — FineWeb custom rules (punct-line / short-line /
    newline-per-word / duplicated-line-char fractions): JVM-native plus
    one zero-Exchange Arrow pass.
-3. ``repetition`` — Gopher n-gram repetition rules: the ONLY shuffling
-   family (two bounded exchanges), so it is evaluated on the SURVIVORS
-   of stages 1-2 only — at web scale the cheap rules reject a large
-   slice, and every rejected row is a row the repetition exchanges never
-   carry. A row violating several stages reports the cheapest one, like
-   the reference's cascade.
+3. ``repetition`` — Gopher n-gram repetition rules: the costliest
+   family (one Arrow kernel per document, O(words) numpy per n), so it
+   is evaluated on the SURVIVORS of stages 1-2 only — at web scale the
+   cheap rules reject a large slice, and every rejected row reaches the
+   kernel as a null it skips. A row violating several stages reports the
+   cheapest one, like the reference's cascade.
 
-The input is referenced twice (once as the verdict base, once pruned to
-survivors for stage 3) — persist upstream when the input is not a cheap
-parquet scan, the engine-wide policy for branching plans.
+The whole cascade is one pass over the input: zero Exchange, no join
+back, every stage a column of the same row (pytest-pinned).
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 from .textql import (
     filter_doc_shape,
     filter_fineweb_quality,
-    filter_repetition_fused,
+    filter_repetition,
 )
 
 
@@ -43,13 +42,13 @@ def document_quality_verdicts(
     firing rule's name, null for keeps). Null/wordless documents pass
     every family — length gates own empty-text rejection.
 
-    The repetition stage uses the fused zero-Exchange verdict kernel
-    (filter_repetition_fused) gated by the pipeline's nulled-payload
-    trick: cheap-rejected rows carry a null ``_rep_text``, so the kernel
-    skips them at the cost of one None check — survivors-only evaluation
-    with NO verdict join back and NO Exchange anywhere in the cascade
-    (pytest-pinned). Survivor rows ship their text through Arrow twice
-    (original + gate copy) — the documented price of the join-free plan.
+    The repetition stage is filter_repetition's one Arrow kernel, gated
+    by the pipeline's nulled-payload trick: cheap-rejected rows carry a
+    null ``_rep_text``, so the kernel skips them at the cost of one None
+    check — survivors-only evaluation with NO verdict join back and NO
+    Exchange anywhere in the cascade (pytest-pinned). The kernel receives
+    only the gated text, so each survivor's text crosses into Python
+    once.
     """
     cheap = filter_fineweb_quality(
         filter_doc_shape(df, text_col=text_col), text_col=text_col
@@ -62,7 +61,7 @@ def document_quality_verdicts(
     gated = cheap.withColumn(
         "_rep_text", F.when(cheap_reason.isNull(), F.col(text_col))
     )
-    rep = filter_repetition_fused(gated, text_col="_rep_text").drop(
+    rep = filter_repetition(gated, text_col="_rep_text").drop(
         "_rep_text"
     )
     reason = F.coalesce(cheap_reason, F.col("rep_reject_reason"))

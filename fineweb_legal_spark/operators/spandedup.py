@@ -22,11 +22,9 @@ Scale shape (10^12-row corpus):
   uint64-Horner rolling hash, per-doc distinct): the exchange carries
   (gram_hash, doc) pairs, map-side combinable, never text;
 - the repeated-gram set joins back against a (doc, pos, gram_hash)
-  position stream; broadcast vs shuffle is a runtime-stats decision —
-  AQE's by default, or pinned by hand via ``broadcast_limit`` (same
-  policy as boilerplate.strip_common_lines). At min_docs=2 on a
-  pathological corpus the set is large — the shuffle path carries only
-  (id, pos) pairs, never text;
+  position stream; broadcast vs shuffle is AQE's runtime-stats
+  decision. At min_docs=2 on a pathological corpus the set is large —
+  the shuffle path carries only (id, pos) pairs, never text;
 - masking itself is one Arrow pass over (text, hit positions): interval
   union + rebuild is linear per document.
 
@@ -159,7 +157,6 @@ def scrub_repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_limit: int | None = None,
     hot_grams: int | None = 1 << 20,
 ) -> DataFrame:
     """(doc_id, clean_text, n_masked): every document with all words
@@ -179,12 +176,8 @@ def scrub_repeated_spans(
     and the hot set is a plan statistic, not a result cache: every
     execution still recomputes the tail frequency table, the positions,
     and the masks from the parquet input.  ``hot_grams=None`` disables
-    the tier (pure join-back, the round-5 plan).
-
-    ``broadcast_limit``: None (default) leaves the repeated-set join
-    strategy to AQE's runtime shuffle stats; an int pins it by hand
-    (count + broadcast/shuffle-hash hint) — same policy and rationale as
-    boilerplate.strip_common_lines."""
+    the tier (pure join-back, the round-5 plan). The repeated-set join
+    strategy is AQE's, from runtime shuffle stats."""
     # frequency over per-doc-DISTINCT grams (decontam's vectorized kernel)
     freq = (
         ngram_hashes(docs, id_col, text_col, n)
@@ -225,22 +218,12 @@ def scrub_repeated_spans(
             "hit_positions", F.lit(None).cast("array<int>")
         )
     else:
-        common = common.select("gram")
-        if broadcast_limit is None:
-            join_side = common
-        else:
-            n_common = common.count()
-            join_side = (
-                F.broadcast(common)
-                if n_common <= broadcast_limit
-                else common.hint("shuffle_hash")
-            )
         gram_pos = docs.select(id_col, text_col).mapInPandas(
             _gram_pos_fn(n, id_col, text_col),
             schema=_gram_pos_schema(id_type),
         )
         hitlists = (
-            gram_pos.join(join_side, "gram")
+            gram_pos.join(common.select("gram"), "gram")
             .groupBy("id")
             .agg(F.collect_list("pos").alias("hit_positions"))
         )

@@ -40,13 +40,6 @@ def split_overlap_count(df: DataFrame, key_col: str, a: str, b: str) -> int:
     return sa.intersect(sb).count()
 
 
-def tier_filter(df: DataFrame, score_col: str, tier: str) -> DataFrame:
-    """Quality tiers (F8: create_dataset_splits.py:26-30, >= semantics)."""
-    from .. import spec
-
-    return df.filter(F.col(score_col) >= spec.SCORE_TIERS[tier])
-
-
 def leakage_safe_splits(
     df: DataFrame,
     pairs: DataFrame,

@@ -105,6 +105,148 @@ def predict_language(
     )
 
 
+def repetition_profile(
+    ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
+):
+    """The Gopher repetition family's ONE per-document kernel (Rae et al.
+    2021 §A1.1): a scalar Arrow ``pandas_udf`` over the text column only,
+    returning a struct with, per n,
+
+    - ``top_gram_{n}`` / ``top_cnt_{n}`` / ``top_cov_{n}`` for n in
+      ``ns`` — the most frequent word n-gram, its occurrence count and
+      the characters its occurrences cover (count × gram-string length);
+      ties resolve to max(covered, gram string), i.e. the
+      lexicographically greatest gram among the highest-covering ones;
+    - ``dup_frac_{n}`` for n in ``dup_ns`` — the unrounded fraction of
+      word characters covered by at least one occurrence of a gram that
+      occurs more than once, overlapping intervals unioned so no
+      character counts twice;
+
+    every field null when the text is null or has fewer than n words.
+    ``repetition_signals``, ``dup_ngram_signals`` and
+    ``filter_repetition`` are JVM projections of this struct.
+
+    Words are the dedup normalization (lowercase, ASCII-whitespace
+    tokens — the boundary of decontam/spandedup and the DuckDB oracle).
+    Per document: one ``ascii_words``, one crc32 per word
+    (``decontam.word_hashes``) shared by every n, Horner gram hashes and
+    one ``np.unique`` per n; the top gram's string is read back from its
+    first occurrence, and the dup coverage is a diff-array cumsum —
+    O(words) numpy per (doc, n), no Python-level gram loop.
+
+    Gram identity is the 64-bit gram hash, not the string: two different
+    grams of one document colliding would merge their counts. The
+    in-document birthday bound of the 64-bit combine is ~1e-12 at ~10^4
+    grams per document, the trade decontam already makes. Its inputs are
+    crc32 word hashes, so two distinct words of one document sharing a
+    crc32 merge as well (~W^2 / 2^33 for W distinct words). The top-gram
+    tie-break compares Python str (code points) where the JVM compares
+    UTF-8 bytes — identical on BMP text.
+    """
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    from .decontam import ascii_words, gram_hashes_from_word_hashes, word_hashes
+
+    ns = tuple(sorted(ns))
+    dup_ns = tuple(sorted(dup_ns))
+    fields = [
+        (f"{name}_{n}", dtype)
+        for n in ns
+        for name, dtype in (
+            ("top_gram", "string"), ("top_cnt", "bigint"), ("top_cov", "bigint")
+        )
+    ] + [(f"dup_frac_{n}", "double") for n in dup_ns]
+    ddl = "struct<" + ",".join(f"{c}:{t}" for c, t in fields) + ">"
+
+    @pandas_udf(ddl)
+    def repetition_kernel(texts: pd.Series) -> pd.DataFrame:
+        out: dict[str, list] = {c: [None] * len(texts) for c, _ in fields}
+        for i, text in enumerate(texts):
+            w = ascii_words(text) if text is not None else []
+            if not w:
+                continue
+            wl = np.fromiter((len(x) for x in w), dtype=np.int64, count=len(w))
+            cum = np.concatenate(([0], np.cumsum(wl)))
+            wh = word_hashes(w)  # once across ns AND dup_ns
+            for n in ns:
+                if len(w) < n:
+                    break
+                g = gram_hashes_from_word_hashes(wh, n)
+                _, first, cnt = np.unique(
+                    g, return_index=True, return_counts=True
+                )
+                # gram-string length at the first occurrence: window word
+                # chars + (n-1) separators
+                cov = cnt * (cum[first + n] - cum[first] + (n - 1))
+                mx = cov.max()
+                best = max(
+                    np.nonzero(cov == mx)[0],
+                    key=lambda u: " ".join(w[first[u] : first[u] + n]),
+                )
+                out[f"top_gram_{n}"][i] = " ".join(
+                    w[first[best] : first[best] + n]
+                )
+                out[f"top_cnt_{n}"][i] = int(cnt[best])
+                out[f"top_cov_{n}"][i] = int(mx)
+            for n in dup_ns:
+                if len(w) < n:
+                    break
+                g = gram_hashes_from_word_hashes(wh, n)
+                _, inv, cnt = np.unique(
+                    g, return_inverse=True, return_counts=True
+                )
+                starts = np.nonzero(cnt[inv] >= 2)[0]
+                d = np.zeros(len(w) + 1, dtype=np.int64)
+                np.add.at(d, starts, 1)
+                np.add.at(d, starts + n, -1)
+                covered = np.cumsum(d[:-1]) > 0
+                out[f"dup_frac_{n}"][i] = float(wl[covered].sum() / cum[-1])
+        return pd.DataFrame(
+            {c: pd.Series(v, dtype=object) for c, v in out.items()}
+        )
+
+    return repetition_kernel
+
+
+def _profile_rows(
+    df: DataFrame,
+    ns: tuple[int, ...],
+    dup_ns: tuple[int, ...],
+    per_n: dict[str, str],
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """(id, _chars, n, *per_n) — one row per document per n of the
+    profile struct, where ``per_n`` maps an output column to its field
+    prefix (``{"_frac": "dup_frac"}`` reads ``dup_frac_{n}``). A row
+    exists where its first field is non-null: documents with fewer than
+    n words omit that n. Row-local explode of an array(struct(...)) —
+    zero Exchange, no lambda HOF."""
+    prof = repetition_profile(ns, dup_ns)(F.col(text_col))
+    first = next(iter(per_n.values()))
+    recs = F.array(
+        *[
+            F.struct(
+                F.when(prof[f"{first}_{n}"].isNotNull(), F.lit(n)).alias("n"),
+                *[prof[f"{f}_{n}"].alias(c) for c, f in per_n.items()],
+            )
+            for n in ns + dup_ns
+        ]
+    )
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col),
+            F.length(F.col(text_col)).alias("_chars"),
+            F.explode(recs).alias("_r"),
+        )
+        .filter(F.col("_r.n").isNotNull())
+        .select(id_col, "_chars", "_r.*")
+    )
+
+
 def repetition_signals(
     df: DataFrame,
     ns: tuple[int, ...] = (2, 3, 4),
@@ -122,77 +264,41 @@ def repetition_signals(
     Output: (id, n, top_gram, top_cnt, top_gram_char_frac) — one row per
     document per n, documents with fewer than n words omitted for that n.
     Ties resolve deterministically to the lexicographically greatest gram
-    among those with the highest covered-character count.
+    among those with the highest covered-character count. The fraction's
+    denominator is length(text), rounded JVM-side (HALF_UP, like the
+    oracle's round()).
 
     The per-document top gram is a ROW-LOCAL computation — no other
-    document's data enters it — so one Arrow-batched kernel (split →
-    count → argmax per n, the same documented per-string-kernel category
-    as the MinHash shingler) computes it with ZERO exchanges, zero
-    explodes, and O(words-in-doc) memory per row.  An exchange plan
-    (exploded gram triples through two map-side combinable
-    aggregations), though fine at 2M rows, was measured DYING at 10M
-    rows on 32 cores (round 5, tools/stress10m.py): ~1.5B exploded gram
-    strings hit sort-based aggregation fallback and spilled >70 GB to
-    disk before ENOSPC.  Shuffle volume ~15x corpus bytes is not a plan
-    that survives 100 TB; a zero-shuffle kernel at ~linear cost is.
+    document's data enters it — so the plan is one Arrow evaluation of
+    :func:`repetition_profile` plus a row-local explode: ZERO exchanges
+    and O(words-in-doc) memory per row. An exchange plan (exploded gram
+    triples through two map-side combinable aggregations), though fine
+    at 2M rows, was measured DYING at 10M rows on 32 cores (round 5,
+    tools/stress10m.py): ~1.5B exploded gram strings hit sort-based
+    aggregation fallback and spilled >70 GB to disk before ENOSPC.
 
-    Pathological single documents (10^8+ words) should be span-pre-split
-    upstream, the same policy packing applies to giant conversations.
+    Counts are by 64-bit gram-hash identity, not exact strings — the
+    trade the dup signals and the verdict share; :func:`repetition_profile`
+    states the collision bounds. Pathological single documents (10^8+ words)
+    should be span-pre-split upstream, the same policy packing applies to
+    giant conversations.
     """
-    import re
-    from collections import Counter
-
-    from pyspark.sql.functions import pandas_udf
-
-    ns = tuple(int(n) for n in ns)
-    ws_rx = re.compile("[ \t\n\r\f\x0b]+")
-
-    @pandas_udf(
-        "array<struct<n:int,top_gram:string,top_cnt:bigint,covered:bigint>>"
-    )
-    def _tops(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if t is None:
-                out.append([])
-                continue
-            words = [w for w in ws_rx.split(t.lower()) if w]
-            recs = []
-            for n in ns:
-                if len(words) < n:
-                    continue
-                counts = Counter(
-                    " ".join(words[j : j + n])
-                    for j in range(len(words) - n + 1)
-                )
-                gram, c = max(
-                    counts.items(),
-                    key=lambda kv: (kv[1] * len(kv[0]), kv[0]),
-                )
-                recs.append(
-                    {
-                        "n": n,
-                        "top_gram": gram,
-                        "top_cnt": c,
-                        "covered": c * len(gram),
-                    }
-                )
-            out.append(recs)
-        return pd.Series(out)
-
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("_chars"),
-        F.explode(_tops(F.col(text_col))).alias("_t"),
-    )
-    return base.select(
+    rows = _profile_rows(
+        df,
+        tuple(int(n) for n in ns),
+        (),
+        {"top_gram": "top_gram", "top_cnt": "top_cnt", "_cov": "top_cov"},
         id_col,
-        F.col("_t.n").alias("n"),
-        F.col("_t.top_gram").alias("top_gram"),
-        F.col("_t.top_cnt").alias("top_cnt"),
-        F.round(
-            F.col("_t.covered").cast("double") / F.col("_chars"), 6
-        ).alias("top_gram_char_frac"),
+        text_col,
+    )
+    return rows.select(
+        id_col,
+        "n",
+        "top_gram",
+        "top_cnt",
+        F.round(F.col("_cov").cast("double") / F.col("_chars"), 6).alias(
+            "top_gram_char_frac"
+        ),
     )
 
 
@@ -291,86 +397,17 @@ def dup_ngram_signals(
     ``repetition_signals``.
 
     Scale shape: the signal is a pure per-row function of the document, so
-    the plan is ONE mapInPandas over (id, text) — zero Exchange, zero
-    lambda HOFs, embarrassingly parallel (pytest-pinned). Per n the kernel
-    is vectorized: the shared crc32+Horner rolling-hash stream
-    (``decontam.rolling_gram_hash_stream``) finds duplicate gram hashes
-    via np.unique, and interval union is a diff-array cumsum — O(words)
-    numpy per (doc, n), no Python-level gram loop. Hash identity: two
-    DIFFERENT grams of one document colliding under the 64-bit rolling
-    hash would overstate coverage; at ~10^4 grams/doc the in-doc birthday
-    bound is ~10^-12 — the same accepted trade as decontam, and
-    unobservable at test scale.
+    the plan is one Arrow evaluation of :func:`repetition_profile` over
+    the text column plus a row-local explode — zero Exchange, zero lambda
+    HOFs, embarrassingly parallel (pytest-pinned). The fraction is
+    rounded JVM-side (HALF_UP, same as the oracle's round()) — Python's
+    round() is half-even and would diverge on exact midpoints.
     """
-    import numpy as np
-
-    from .decontam import ascii_words, gram_hashes_from_word_hashes, word_hashes
-
-    ns_sorted = tuple(sorted(ns))
-    # the id rides through with its INPUT type — a hardcoded LongType here
-    # once made string conv ids coerce the verdict join to bigint
-    # (LongHashedRelation cast crash at 2M turns)
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n", T.IntegerType()),
-            T.StructField("_frac", T.DoubleType()),
-        ]
+    rows = _profile_rows(
+        df, (), tuple(ns), {"_frac": "dup_frac"}, id_col, text_col
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id: list = []
-            out_n: list[int] = []
-            out_f: list[float] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                w = ascii_words(text)
-                if len(w) < ns_sorted[0]:
-                    continue
-                wl = np.fromiter(
-                    (len(x) for x in w), dtype=np.int64, count=len(w)
-                )
-                total = int(wl.sum())
-                wh = word_hashes(w)  # crc32 each word ONCE across all ns
-                for n in ns_sorted:
-                    if len(w) < n:
-                        break  # ns sorted: larger n can't fit either
-                    g = gram_hashes_from_word_hashes(wh, n)
-                    _, inv, cnt = np.unique(
-                        g, return_inverse=True, return_counts=True
-                    )
-                    starts = np.nonzero(cnt[inv] >= 2)[0]
-                    if len(starts):
-                        d = np.zeros(len(w) + 1, dtype=np.int64)
-                        np.add.at(d, starts, 1)
-                        np.add.at(d, starts + n, -1)
-                        covered = np.cumsum(d[:-1]) > 0
-                        frac = float(wl[covered].sum()) / total
-                    else:
-                        frac = 0.0
-                    out_id.append(rid)
-                    out_n.append(n)
-                    out_f.append(frac)
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(out_id),
-                        "n": pd.array(out_n, dtype="int32"),
-                        "_frac": pd.array(out_f, dtype="float64"),
-                    }
-                )
-
-    return (
-        df.filter(F.col(text_col).isNotNull())
-        .select(id_col, text_col)
-        .mapInPandas(fn, schema)
-        # round JVM-side (HALF_UP, same as the oracle's round()) — Python's
-        # round() is half-even and would diverge on exact midpoints
-        .select(
-            id_col, "n", F.round("_frac", 6).alias("dup_char_frac")
-        )
+    return rows.select(
+        id_col, "n", F.round("_frac", 6).alias("dup_char_frac")
     )
 
 
@@ -383,78 +420,51 @@ def filter_repetition(
 ) -> DataFrame:
     """Gopher repetition FILTER: df + (rep_reject_reason) where the reason
     names the first violated rule ("top_2gram" < "top_3gram" < ... <
-    "dup_5gram" < ...) or is null for keeps. Composes repetition_signals
-    (one pass, two map-side-combinable exchanges) and dup_ngram_signals
-    (one zero-Exchange Arrow pass) with a broadcast-able verdict join back
-    on the id — docs too short to form an n-gram trivially pass that rule,
-    like the reference's length-gated heuristics. Thresholds default to
-    the published Gopher values; pass ``{}`` to disable a family. A top
-    gram occurring ONCE is not repetition: short documents would trivially
+    "dup_5gram" < ...) or is null for keeps. Thresholds default to the
+    published Gopher values; pass ``{}`` to disable a family. Documents
+    too short to form an n-gram trivially pass that rule, like the
+    reference's length-gated heuristics; null text passes every rule.
+
+    Each rule compares the same HALF_UP round-to-6 fraction that
+    ``repetition_signals`` / ``dup_ngram_signals`` report. A top gram
+    occurring ONCE is not repetition: short documents would trivially
     "violate" any fraction threshold (one 18-char bigram is 36% of a
     50-char doc), so the top rule only fires at top_cnt >= 2 — the
     length-gating Gopher gets implicitly from web-scale document lengths,
     made explicit here. The dup rule needs no such gate: coverage is zero
     unless some gram genuinely occurs twice.
+
+    Plan: ONE Arrow evaluation of :func:`repetition_profile` over the
+    text column, the verdict a JVM CASE over its fields — zero Exchange,
+    no join back, and only the text crosses into Python. ``id_col`` is
+    accepted for signature compatibility; the verdict is per row.
     """
     thresholds = GOPHER_TOP_NGRAM_MAX if thresholds is None else thresholds
     dup_thresholds = (
         GOPHER_DUP_NGRAM_MAX if dup_thresholds is None else dup_thresholds
     )
-
-    def _thr_col(thr: dict[int, float]):
-        return F.coalesce(
-            *[F.when(F.col("n") == n, F.lit(t)) for n, t in sorted(thr.items())]
-        )
-
-    parts: list[DataFrame] = []
-    if thresholds:
-        sig = repetition_signals(
-            df, ns=tuple(sorted(thresholds)), id_col=id_col, text_col=text_col
-        )
-        parts.append(
-            sig.withColumn("_thr", _thr_col(thresholds))
-            .filter(
-                (F.col("top_cnt") >= 2)
-                & (F.col("top_gram_char_frac") > F.col("_thr"))
-            )
-            .select(
-                F.col(id_col),
-                F.col("n").alias("_order"),
-                F.concat(
-                    F.lit("top_"), F.col("n").cast("string"), F.lit("gram")
-                ).alias("_reason"),
-            )
-        )
-    if dup_thresholds:
-        dup = dup_ngram_signals(
-            df, ns=tuple(sorted(dup_thresholds)), id_col=id_col,
-            text_col=text_col,
-        )
-        parts.append(
-            dup.withColumn("_thr", _thr_col(dup_thresholds))
-            .filter(F.col("dup_char_frac") > F.col("_thr"))
-            .select(
-                F.col(id_col),
-                # dup rules sort after every top rule, then by n
-                (F.col("n") + F.lit(100)).alias("_order"),
-                F.concat(
-                    F.lit("dup_"), F.col("n").cast("string"), F.lit("gram")
-                ).alias("_reason"),
-            )
-        )
-    if not parts:
+    if not (thresholds or dup_thresholds):
         return df.withColumn("rep_reject_reason", F.lit(None).cast("string"))
-    allv = parts[0]
-    for p in parts[1:]:
-        allv = allv.unionByName(p)
-    viol = allv.groupBy(id_col).agg(
-        F.min(F.struct("_order", "_reason")).alias("_v")
+    prof = repetition_profile(tuple(thresholds), tuple(dup_thresholds))(
+        F.col(text_col)
     )
-    return (
-        df.join(viol, id_col, "left")
-        .withColumn("rep_reject_reason", F.col("_v._reason"))
-        .drop("_v")
-    )
+    chars = F.length(F.col(text_col)).cast("double")
+    rules = [
+        (
+            (prof[f"top_cnt_{n}"] >= 2)
+            & (F.round(prof[f"top_cov_{n}"] / chars, 6) > thr),
+            f"top_{n}gram",
+        )
+        for n, thr in sorted(thresholds.items())
+    ] + [
+        (F.round(prof[f"dup_frac_{n}"], 6) > thr, f"dup_{n}gram")
+        for n, thr in sorted(dup_thresholds.items())
+    ]
+    (cond, reason), *rest = rules  # first violated rule wins
+    verdict = F.when(cond, F.lit(reason))
+    for cond, reason in rest:
+        verdict = verdict.when(cond, F.lit(reason))
+    return df.withColumn("rep_reject_reason", verdict)
 
 
 # Gopher document-shape thresholds (Rae et al. 2021, Table A1)
@@ -678,177 +688,6 @@ def filter_fineweb_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         "newline_word_frac",
         "dup_line_char_frac",
     )
-
-
-def repetition_profile(
-    df: DataFrame,
-    ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    text_col: str = "text",
-) -> DataFrame:
-    """df + the full Gopher repetition PROFILE from ONE pass-through
-    mapInPandas — zero Exchange (the verdict-path alternative to
-    repetition_signals' exchange-based plan, which must shuffle distinct
-    (doc, n, gram) triples because it reports the top gram STRING; a
-    filter only needs counts and fractions, and those are pure per-row
-    functions of the document). Measured at 2M turns/local[32]: the
-    composed signals path's gram exchange carries ~240M rows; this pass
-    carries zero.
-
-    Appended columns, raw so the THRESHOLD compare can stay JVM-side with
-    exact HALF_UP rounding parity to the composed path:
-
-    - ``_rep_chars`` — length(text);
-    - ``_top_cnt_{n}`` / ``_top_cov_{n}`` for n in ``ns`` — occurrence
-      count and covered characters (cnt × gram-string length) of the
-      winning gram under the composed path's exact tie order
-      max(covered, gram string, cnt); null when the doc has < n words;
-    - ``_dup_frac_{n}`` for n in ``dup_ns`` — unrounded interval-unioned
-      duplicated-gram word-char fraction (dup_ngram_signals' kernel
-      semantics); null when the doc has < n words.
-
-    Same 64-bit rolling-hash identity trade as dup_ngram_signals
-    (in-doc birthday bound ~1e-12); gram tie-break compares Python str
-    (code points) where the JVM compares UTF8 bytes — identical on BMP
-    text, and ties require exact covered-char equality to matter at all.
-    """
-    import numpy as np
-
-    from .decontam import ascii_words, gram_hashes_from_word_hashes, word_hashes
-
-    ns = tuple(sorted(ns))
-    dup_ns = tuple(sorted(dup_ns))
-    new_fields = [T.StructField("_rep_chars", T.LongType())]
-    for n in ns:
-        new_fields.append(T.StructField(f"_top_cnt_{n}", T.LongType()))
-        new_fields.append(T.StructField(f"_top_cov_{n}", T.LongType()))
-    for n in dup_ns:
-        new_fields.append(T.StructField(f"_dup_frac_{n}", T.DoubleType()))
-    schema = T.StructType(list(df.schema.fields) + new_fields)
-    names = [f.name for f in new_fields]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in names}
-            for text in pdf[text_col]:
-                row: dict[str, object] = {c: None for c in names}
-                if text is not None:
-                    row["_rep_chars"] = len(text)
-                    w = ascii_words(text)
-                    if w:
-                        wl = np.fromiter(
-                            (len(x) for x in w), dtype=np.int64, count=len(w)
-                        )
-                        cum = np.concatenate(([0], np.cumsum(wl)))
-                        wchars = int(cum[-1])
-                        wh = word_hashes(w)  # once across ns AND dup_ns
-                        for n in ns:
-                            if len(w) < n:
-                                break
-                            g = gram_hashes_from_word_hashes(wh, n)
-                            _, first, inv, cnt = np.unique(
-                                g,
-                                return_index=True,
-                                return_inverse=True,
-                                return_counts=True,
-                            )
-                            # gram-string length at the first occurrence:
-                            # window word chars + (n-1) separators
-                            glen = cum[first + n] - cum[first] + (n - 1)
-                            cov = cnt * glen
-                            mx = int(cov.max())
-                            cand = np.nonzero(cov == mx)[0]
-                            if len(cand) > 1:
-                                best = max(
-                                    cand,
-                                    key=lambda u: (
-                                        " ".join(
-                                            w[first[u] : first[u] + n]
-                                        ),
-                                        int(cnt[u]),
-                                    ),
-                                )
-                            else:
-                                best = cand[0]
-                            row[f"_top_cnt_{n}"] = int(cnt[best])
-                            row[f"_top_cov_{n}"] = mx
-                        for n in dup_ns:
-                            if len(w) < n:
-                                break
-                            g = gram_hashes_from_word_hashes(wh, n)
-                            _, inv, cnt = np.unique(
-                                g, return_inverse=True, return_counts=True
-                            )
-                            starts = np.nonzero(cnt[inv] >= 2)[0]
-                            if len(starts):
-                                d = np.zeros(len(w) + 1, dtype=np.int64)
-                                np.add.at(d, starts, 1)
-                                np.add.at(d, starts + n, -1)
-                                covered = np.cumsum(d[:-1]) > 0
-                                row[f"_dup_frac_{n}"] = (
-                                    float(wl[covered].sum()) / wchars
-                                )
-                            else:
-                                row[f"_dup_frac_{n}"] = 0.0
-                for c in names:
-                    out[c].append(row[c])
-            res = pdf.copy()
-            for c in names:
-                res[c] = pd.Series(out[c], index=pdf.index, dtype=object)
-            yield res
-
-    return df.mapInPandas(fn, schema)
-
-
-def filter_repetition_fused(
-    df: DataFrame,
-    thresholds: dict[int, float] | None = None,
-    dup_thresholds: dict[int, float] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
-    """filter_repetition's exact verdict semantics (same thresholds, same
-    HALF_UP round-to-6 before the > compare, same reason ranking, same
-    top_cnt >= 2 gate) from ONE zero-Exchange pass-through Arrow stage —
-    no gram shuffle, no verdict join back. Randomized-parity-tested
-    against the composed path. Use this in verdict-only pipelines; use
-    filter_repetition/repetition_signals when the top gram string itself
-    must be reported."""
-    thresholds = GOPHER_TOP_NGRAM_MAX if thresholds is None else thresholds
-    dup_thresholds = (
-        GOPHER_DUP_NGRAM_MAX if dup_thresholds is None else dup_thresholds
-    )
-    prof = repetition_profile(
-        df,
-        ns=tuple(sorted(thresholds)),
-        dup_ns=tuple(sorted(dup_thresholds)),
-        text_col=text_col,
-    )
-    verdict = None
-    for n, thr in sorted(thresholds.items()):
-        cond = (F.col(f"_top_cnt_{n}") >= 2) & (
-            F.round(
-                F.col(f"_top_cov_{n}").cast("double") / F.col("_rep_chars"),
-                6,
-            )
-            > thr
-        )
-        branch = F.when(cond, F.lit(f"top_{n}gram"))
-        verdict = branch if verdict is None else verdict.when(
-            cond, F.lit(f"top_{n}gram")
-        )
-    for n, thr in sorted(dup_thresholds.items()):
-        cond = F.round(F.col(f"_dup_frac_{n}"), 6) > thr
-        branch = F.when(cond, F.lit(f"dup_{n}gram"))
-        verdict = branch if verdict is None else verdict.when(
-            cond, F.lit(f"dup_{n}gram")
-        )
-    if verdict is None:
-        verdict = F.lit(None).cast("string")
-    drop = ["_rep_chars"]
-    drop += [f"_top_cnt_{n}" for n in thresholds]
-    drop += [f"_top_cov_{n}" for n in thresholds]
-    drop += [f"_dup_frac_{n}" for n in dup_thresholds]
-    return prof.withColumn("rep_reject_reason", verdict).drop(*drop)
 
 
 def chunk_text(

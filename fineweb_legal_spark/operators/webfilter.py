@@ -108,16 +108,6 @@ def web_filter(df: DataFrame) -> DataFrame:
     )
 
 
-def web_pass(df: DataFrame) -> DataFrame:
-    """Surviving documents with null-coalesced url (reference F13
-    projection, stream_filter_stage1.py:457-461)."""
-    return (
-        df.withColumn("_r", web_reject_reason())
-        .filter(F.col("_r").isNull())
-        .select("id", "text", F.coalesce("url", F.lit("")).alias("url"))
-    )
-
-
 def stage_reject_counts(df: DataFrame) -> DataFrame:
     """Per-stage reject counters (reference A1, streaming.py:196-201)."""
     return (

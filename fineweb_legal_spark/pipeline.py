@@ -440,17 +440,6 @@ def run_pipeline(
     return out
 
 
-def filtered_output(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
-    """Kept turns with scrubbed text joined back to the full input schema,
-    in stable (conv_id, turn_idx) order within partitions."""
-    verdicts = run_pipeline(spark, transcripts).filter("keep")
-    out = transcripts.join(
-        verdicts.select("conv_id", "turn_idx", "scrubbed_text", "lang", "ppl_bucket"),
-        ["conv_id", "turn_idx"],
-    )
-    return out.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx")
-
-
 def stage_metrics(verdicts: DataFrame) -> DataFrame:
     """Per-stage keep/drop counts (reference A1/A3 analog)."""
     return (

@@ -91,6 +91,28 @@ def test_media_ops(spark):
     norms = [np.linalg.norm(np.array(e)) for e in emb.embedding]
     assert all(abs(n - 1.0) < 1e-3 for n in norms)
 
+    # host-independent values: every row equals the float64 reference
+    # (exact integer sum of squares, float64 sqrt/divide, round(6), float32
+    # at the schema boundary); a float32 norm flips 6th-decimal midpoints
+    import math
+
+    import pyarrow.parquet as pq
+
+    got = dict(zip(emb.media_id, emb.embedding))
+    raw = pq.read_table(ensure_media("t1"), columns=["media_id", "payload"])
+    bad = []
+    for mid, payload in zip(
+        raw.column("media_id").to_pylist(), raw.column("payload").to_pylist()
+    ):
+        hist, _ = np.histogram(
+            np.frombuffer(payload, dtype=np.uint8), bins=16, range=(0, 256)
+        )
+        norm = math.sqrt(sum(int(h) * int(h) for h in hist))
+        want = (hist / (norm or 1.0)).round(6).astype(np.float32)
+        if not np.array_equal(np.asarray(got[mid], dtype=np.float32), want):
+            bad.append(mid)
+    assert bad == [], bad
+
 
 def test_textql_token_counts(spark):
     from fineweb_legal_spark.operators.textql import fingerprint, token_counts
@@ -647,6 +669,61 @@ def test_scrub_repeated_spans_hot_tier_identical(spark):
     assert run(hot_grams=1) == ref  # forced hot/tail split
 
 
+def _py_words(text):
+    """The dedup normalization: lowercase ASCII-whitespace tokens."""
+    import re
+
+    return [w for w in re.split(r"[ \t\n\r\f\x0b]+", text.lower()) if w]
+
+
+def _py_top_grams(text, ns):
+    """Pure-Python Counter twin of the top-gram signal: {n: (gram, count,
+    covered chars)} under max(count * len(gram), gram); n omitted when
+    the document has fewer than n words."""
+    from collections import Counter
+
+    words = _py_words(text)
+    out = {}
+    for n in ns:
+        grams = [" ".join(words[j : j + n]) for j in range(len(words) - n + 1)]
+        if not grams:
+            continue
+        gram, c = max(
+            Counter(grams).items(), key=lambda kv: (kv[1] * len(kv[0]), kv[0])
+        )
+        out[n] = (gram, c, c * len(gram))
+    return out
+
+
+def _py_dup_fracs(text, ns):
+    """Pure-Python string-Counter twin of the duplicate-gram coverage:
+    {n: word chars covered by a gram occurring >= 2 times (intervals
+    unioned) / total word chars}; n omitted below n words."""
+    from collections import Counter
+
+    w = _py_words(text)
+    total = sum(len(x) for x in w)
+    out = {}
+    for n in ns:
+        if len(w) < n:
+            continue
+        grams = [" ".join(w[j : j + n]) for j in range(len(w) - n + 1)]
+        cnt = Counter(grams)
+        covered: set[int] = set()
+        for j, g in enumerate(grams):
+            if cnt[g] >= 2:
+                covered.update(range(j, j + n))
+        out[n] = sum(len(w[j]) for j in covered) / total
+    return out
+
+
+def _py_round6(x):
+    """Spark's round(x, 6) on a double: HALF_UP on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
 def test_repetition_signals_exact_and_plan(spark):
     from fineweb_legal_spark.operators.textql import repetition_signals
 
@@ -753,8 +830,6 @@ def test_repetition_signals_randomized_python_parity(spark):
     pure-Python Counter twin on (top_gram, top_cnt) exactly and frac to
     1e-6."""
     import random
-    import re as _re
-    from collections import Counter
 
     rng = random.Random(42)
     vocab = ["a", "b", "ab", "the", "xx", "spark", "q", "zz"]
@@ -779,27 +854,12 @@ def test_repetition_signals_randomized_python_parity(spark):
         for r in repetition_signals(df).collect()
     }
 
-    want = {}
-    for i, text in docs:
-        if text is None:
-            continue
-        words = [
-            w
-            for w in _re.split(r"[ \t\n\r\f\x0b]+", text.lower())
-            if w
-        ]
-        for n in (2, 3, 4):
-            grams = [
-                " ".join(words[j : j + n])
-                for j in range(len(words) - n + 1)
-            ]
-            if not grams:
-                continue
-            cnt = Counter(grams)
-            gram, c = max(
-                cnt.items(), key=lambda kv: (kv[1] * len(kv[0]), kv[0])
-            )
-            want[(i, n)] = (gram, c, c * len(gram) / len(text))
+    want = {
+        (i, n): (gram, c, cov / len(text))
+        for i, text in docs
+        if text is not None
+        for n, (gram, c, cov) in _py_top_grams(text, (2, 3, 4)).items()
+    }
 
     assert set(got) == set(want)
     for key, (gram, c, frac) in want.items():
@@ -951,8 +1011,6 @@ def test_dup_ngram_signals_randomized_python_parity(spark):
     whitespace): Spark (crc32+Horner hash kernel) == a pure-Python
     string-Counter twin with interval-union coverage, frac to 1e-6."""
     import random
-    import re as _re
-    from collections import Counter
 
     rng = random.Random(7)
     vocab = ["a", "b", "ab", "the", "xx", "spark", "q", "zz"]
@@ -977,22 +1035,12 @@ def test_dup_ngram_signals_randomized_python_parity(spark):
         for r in dup_ngram_signals(df, ns=ns).collect()
     }
 
-    want = {}
-    for i, text in docs:
-        if text is None:
-            continue
-        w = [x for x in _re.split(r"[ \t\n\r\f\x0b]+", text.lower()) if x]
-        total = sum(len(x) for x in w)
-        for n in ns:
-            if len(w) < n:
-                continue
-            grams = [" ".join(w[j : j + n]) for j in range(len(w) - n + 1)]
-            cnt = Counter(grams)
-            covered: set[int] = set()
-            for j, g in enumerate(grams):
-                if cnt[g] >= 2:
-                    covered.update(range(j, j + n))
-            want[(i, n)] = sum(len(w[j]) for j in covered) / total
+    want = {
+        (i, n): frac
+        for i, text in docs
+        if text is not None
+        for n, frac in _py_dup_fracs(text, ns).items()
+    }
     assert set(got) == set(want)
     for k, v in want.items():
         assert abs(got[k] - v) < 1e-6, (k, got[k], v)
@@ -1407,15 +1455,22 @@ def test_string_id_generality_repetition_and_decontam(spark):
     assert "one two three four five" not in out["a#1"]
 
 
-def test_filter_repetition_fused_parity_and_plan(spark):
-    """filter_repetition_fused == the composed filter_repetition verdict
-    on 120 seeded random docs (tiny vocab -> heavy gram collisions and
-    covered-char ties), and its plan has zero Exchange."""
+def test_filter_repetition_python_parity_and_plan(spark):
+    """filter_repetition == a pure-Python verdict built from the Counter
+    and interval-union twins on 120 seeded random docs (tiny vocab ->
+    heavy gram collisions and covered-char ties) and 30 planted-phrase
+    docs. Its plan, and the
+    cascade's built on it, has zero Exchange and exactly ONE
+    ArrowEvalPython: the repetition kernel is evaluated once per row."""
     import random
 
+    from fineweb_legal_spark.operators.quality import (
+        document_quality_verdicts,
+    )
     from fineweb_legal_spark.operators.textql import (
+        GOPHER_DUP_NGRAM_MAX,
+        GOPHER_TOP_NGRAM_MAX,
         filter_repetition,
-        filter_repetition_fused,
     )
 
     rng = random.Random(11)
@@ -1429,36 +1484,52 @@ def test_filter_repetition_fused_parity_and_plan(spark):
             t + rng.choice(seps) for t in toks
         ) if toks else rng.choice(["", None])
         rows.append((i, text))
+    # plus 30 wide-vocab docs with a planted repeated phrase, where the
+    # dup rules fire without any top rule
+    wide = [f"w{k:03d}" for k in range(300)]
+    for i in range(120, 150):
+        phrase = " ".join(rng.sample(wide, rng.randint(4, 9)))
+        parts = [
+            " ".join(rng.sample(wide, rng.randint(5, 25)))
+            for _ in range(rng.randint(2, 4))
+        ]
+        rows.append((i, f" {phrase} ".join(parts)))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    fused = filter_repetition_fused(docs)
-    plan = fused._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
+    def py_verdict(text):
+        if text is None:
+            return None
+        top = _py_top_grams(text, sorted(GOPHER_TOP_NGRAM_MAX))
+        for n, thr in sorted(GOPHER_TOP_NGRAM_MAX.items()):
+            if n in top and top[n][1] >= 2 and (
+                _py_round6(top[n][2] / len(text)) > thr
+            ):
+                return f"top_{n}gram"
+        dup = _py_dup_fracs(text, sorted(GOPHER_DUP_NGRAM_MAX))
+        for n, thr in sorted(GOPHER_DUP_NGRAM_MAX.items()):
+            if n in dup and _py_round6(dup[n]) > thr:
+                return f"dup_{n}gram"
+        return None
+
+    def plan_of(frame):
+        return frame._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
         )
-    )
-    assert ") Exchange" not in plan, plan
 
-    got_f = {r["doc_id"]: r["rep_reject_reason"] for r in fused.collect()}
-    got_c = {
-        r["doc_id"]: r["rep_reject_reason"]
-        for r in filter_repetition(docs).collect()
-    }
-    assert got_f == got_c
-    assert any(v is not None for v in got_f.values())  # non-trivial corpus
+    out = filter_repetition(docs)
+    for plan in (plan_of(out), plan_of(document_quality_verdicts(docs))):
+        assert ") Exchange" not in plan, plan
+        assert plan.count(") ArrowEvalPython") == 1, plan
+        # one node may batch several UDFs: pin that it holds one kernel
+        assert plan.count("repetition_kernel(") == 1, plan
 
-    # cascade built on the fused kernel is Exchange-free end to end
-    from fineweb_legal_spark.operators.quality import (
-        document_quality_verdicts,
-    )
-
-    cplan = document_quality_verdicts(docs)._jdf.queryExecution(
-    ).explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert ") Exchange" not in cplan, cplan
+    got = {r["doc_id"]: r["rep_reject_reason"] for r in out.collect()}
+    want = {i: py_verdict(text) for i, text in rows}
+    assert got == want
+    # non-trivial corpus: both rule families fire
+    assert {v[:4] for v in want.values() if v} == {"top_", "dup_"}
 
 
 def test_train_trigram_lm_exact_and_score(spark, tmp_path):

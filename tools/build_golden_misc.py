@@ -18,6 +18,7 @@ spot fixtures).
 from __future__ import annotations
 
 import json
+import math
 import sys
 from pathlib import Path
 
@@ -156,15 +157,15 @@ def build_media(out: Path) -> None:
     for mid, payload in zip(media["media_id"], media["payload"]):
         arr = np.frombuffer(payload, dtype=np.uint8)
         hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-        v = hist.astype(np.float32)
-        n = np.linalg.norm(v)
+        # host-independent norm: exact int64 sum of squares, float64 sqrt
+        n = math.sqrt(int((hist.astype(np.int64) ** 2).sum()))
         embs["media_id"].append(mid)
         # mirror the operator's array<float> output contract: the Spark
         # side casts the rounded values to float32 at the schema boundary,
         # so the golden must store those exact float32 values too — else
         # %.6f formatting diverges by 1 ULP near a 6th-decimal boundary
         embs["embedding"].append(
-            (v / n if n else v).round(6).astype(np.float32).tolist()
+            (hist / (n or 1.0)).round(6).astype(np.float32).tolist()
         )
     pd.DataFrame(embs).to_parquet(out / "media_embeddings.parquet", index=False)
 

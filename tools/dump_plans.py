@@ -69,28 +69,29 @@ PICKS = {
         "top-k per source is a small window after the join."
     ),
     "repetition_signals_docs": (
-        "Gopher repetition family, tagged union — every branch ZERO "
-        "Exchange as of round 5. top_gram branch: the per-document top "
-        "gram needs no cross-document data, so it is one Arrow kernel "
-        "(split -> Counter -> argmax inside a batch) + a row-local "
-        "explode; a 2-exchange plan over exploded gram triples "
-        "measured DYING at 10M rows — ~1.5B "
-        "gram strings, sort-agg fallback, >70 GB spill, ENOSPC — and the "
-        "kernel is also 5.5x faster at 2M (BENCH.md round-5 stress). "
-        "dup_gram branch: per-row Arrow pass (crc32+Horner hash stream + "
-        "diff-array interval union). dup_line branch: per-row pandas "
-        "explode+groupby kernel. cascade branch: the full "
-        "document-quality verdict (see document_quality_cascade below)."
+        "Gopher repetition family, tagged union — no branch shuffles "
+        "data: the 4 Exchanges are the parallel.widen RoundRobin spread "
+        "of each branch's scan (absent when the scan already has a split "
+        "per slot). top_gram, dup_gram and cascade branches all run the "
+        "family's ONE per-document kernel (textql.repetition_profile: a "
+        "scalar Arrow UDF over the text column only — crc32 per word, "
+        "Horner gram hashes, np.unique per n) as an ArrowEvalPython node, "
+        "and project its struct JVM-side (row-local explode for the "
+        "signal branches, a CASE for the verdict). A 2-exchange plan over "
+        "exploded gram triples measured DYING at 10M rows — ~1.5B gram "
+        "strings, sort-agg fallback, >70 GB spill, ENOSPC (BENCH.md "
+        "round-5 stress). dup_line branch: per-row pandas explode+groupby "
+        "kernel. cascade branch: the full document-quality verdict (see "
+        "document_quality_cascade below)."
     ),
     "document_quality_cascade": (
-        "Round 4: every heuristic rule family (Gopher doc-shape, FineWeb "
-        "custom incl. duplicated-line chars, Gopher repetition via the "
-        "FUSED verdict kernel) behind one verdict with ZERO Exchange end "
-        "to end: native regexp stages feed two pass-through Arrow stages "
-        "(dup-line kernel, fused repetition profile), and cheap-rejected "
-        "rows skip the repetition kernel via nulled gate text - no gram "
-        "shuffle, no verdict join. 2.2x the composed path at 2M turns "
-        "(BENCH.md)."
+        "Every heuristic rule family (Gopher doc-shape, FineWeb custom "
+        "incl. duplicated-line chars, Gopher repetition) behind one "
+        "verdict with ZERO Exchange end to end: native regexp stages feed "
+        "the dup-line MapInPandas and ONE ArrowEvalPython (the repetition "
+        "kernel, which receives only the gate text); cheap-rejected rows "
+        "reach the kernel as nulls it skips - no gram shuffle, no verdict "
+        "join."
     ),
     "mixture_sample_docs": (
         "Per-source rate thresholds broadcast; the md5-prefix filter runs "
