@@ -785,66 +785,69 @@ def q_repetition_signals_docs(spark, sf_dir):
     # halves (Rae et al. 2021 §A1.1): signal='top_gram' — per doc and
     # n in (2,3,4), the most frequent word n-gram and the fraction of the
     # document's characters its occurrences cover (ties ->
-    # lexicographically greatest gram; zero lambda HOFs, zero word-level
-    # shuffle); signal='dup_gram' — per doc and n in (5..10), the
-    # interval-unioned word-char fraction covered by ALL duplicated
-    # n-grams (pure per-row Arrow pass, zero Exchange); signal='dup_line'
-    # — the FineWeb/Gopher duplicated-LINE character fraction (exact
-    # split('\n') line match, newlines excluded from the char weights;
-    # another zero-Exchange per-row Arrow pass, textql.dup_line_chars);
-    # signal='cascade' — the FULL document-quality cascade verdict
-    # (operators/quality.py: shape -> fineweb -> fused repetition) as
-    # gram='stage/reason' (null = keep), checked against a DuckDB oracle
-    # that recomputes every rule family independently in SQL.
+    # lexicographically greatest gram); signal='dup_gram' — per doc and
+    # n in (5..10), the interval-unioned word-char fraction covered by
+    # ALL duplicated n-grams; signal='dup_line' — the FineWeb/Gopher
+    # duplicated-LINE character fraction (exact split('\n') line match,
+    # newlines excluded from the char weights); signal='cascade' — the
+    # FULL document-quality cascade verdict (operators/quality.py:
+    # shape -> fineweb -> repetition) as gram='stage/reason' (null =
+    # keep), checked against a DuckDB oracle that recomputes every rule
+    # family independently in SQL. One scan, one ungated evaluation of
+    # textql.repetition_profile (every signal is a field of its struct;
+    # the cascade reads the same struct, and only its cheap-stage
+    # survivors reach the repetition rules, so gating changes no
+    # verdict), and one row-local explode of an array of tagged
+    # structs: no Union, zero Exchange beyond widen's spread.
     from fineweb_legal_spark.operators.quality import (
-        document_quality_verdicts,
-    )
-    from fineweb_legal_spark.operators.textql import (
-        dup_line_chars,
-        dup_ngram_signals,
-        repetition_signals,
+        PROFILE_COL,
+        verdicts_with_profile,
     )
 
     docs = _tw(spark, sf_dir, "documents")
-    top = repetition_signals(docs).select(
-        "doc_id",
-        F.lit("top_gram").alias("signal"),
-        F.col("n").cast("int").alias("n"),
-        F.col("top_gram").alias("gram"),
-        F.col("top_cnt").cast("long").alias("cnt"),
-        F.col("top_gram_char_frac").alias("char_frac"),
+    text = F.col("text")
+    base = verdicts_with_profile(docs, "text", gated=False)
+    p = F.col(PROFILE_COL)
+
+    def row(present, signal, n, gram=None, cnt=None, frac=None):
+        # a null n marks an absent row (as in textql._profile_rows)
+        null = F.lit(None)
+        return F.struct(
+            F.lit(signal).alias("signal"),
+            F.when(present, F.lit(n)).cast("int").alias("n"),
+            (null if gram is None else gram).cast("string").alias("gram"),
+            (null if cnt is None else cnt).cast("long").alias("cnt"),
+            (null if frac is None else frac).cast("double").alias("char_frac"),
+        )
+
+    chars = F.length(text).cast("double")
+    verdict = F.concat_ws("/", "quality_reject_stage", "quality_reject_reason")
+    rows = F.array(
+        *[
+            row(
+                p[f"top_gram_{n}"].isNotNull(), "top_gram", n,
+                p[f"top_gram_{n}"], p[f"top_cnt_{n}"],
+                F.round(p[f"top_cov_{n}"].cast("double") / chars, 6),
+            )
+            for n in (2, 3, 4)
+        ],
+        *[
+            row(
+                p[f"dup_frac_{n}"].isNotNull(), "dup_gram", n,
+                frac=F.round(p[f"dup_frac_{n}"], 6),
+            )
+            for n in (5, 6, 7, 8, 9, 10)
+        ],
+        row(text.isNotNull(), "dup_line", 1,
+            frac=F.round(p["dup_line_frac"], 6)),
+        row(F.lit(True), "cascade", 0,
+            gram=F.when(verdict != "", verdict)),  # keep -> null
     )
-    dup = dup_ngram_signals(docs).select(
-        "doc_id",
-        F.lit("dup_gram").alias("signal"),
-        F.col("n").cast("int").alias("n"),
-        F.lit(None).cast("string").alias("gram"),
-        F.lit(None).cast("long").alias("cnt"),
-        F.col("dup_char_frac").alias("char_frac"),
+    return (
+        base.select("doc_id", F.explode(rows).alias("_r"))
+        .filter(F.col("_r.n").isNotNull())
+        .select("doc_id", "_r.*")
     )
-    dline = dup_line_chars(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    ).select(
-        "doc_id",
-        F.lit("dup_line").alias("signal"),
-        F.lit(1).cast("int").alias("n"),
-        F.lit(None).cast("string").alias("gram"),
-        F.lit(None).cast("long").alias("cnt"),
-        F.col("dup_line_char_frac").alias("char_frac"),
-    )
-    casc = document_quality_verdicts(docs).select(
-        "doc_id",
-        F.lit("cascade").alias("signal"),
-        F.lit(0).cast("int").alias("n"),
-        F.concat_ws(
-            "/", "quality_reject_stage", "quality_reject_reason"
-        ).alias("gram"),
-        F.lit(None).cast("long").alias("cnt"),
-        F.lit(None).cast("double").alias("char_frac"),
-    ).withColumn(
-        "gram", F.when(F.col("gram") != "", F.col("gram"))  # keep -> null
-    )
-    return top.unionByName(dup).unionByName(dline).unionByName(casc)
 
 
 def q_document_quality_cascade(spark, sf_dir):

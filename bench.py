@@ -3,7 +3,8 @@
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": <float>,
  "pipeline": {rows, cold_sec, steady_sec, turns_per_sec},
- "scaling": {"local[8]": {...}, "local[32]": {...}, "efficiency": e}}
+ "scaling": {"local[8]": {...}, "local[32]": {...}, "efficiency": e},
+ "codegen_compiles": <classes Janino compiled during the timed suite>}
 
 Ordering is survival-first (round-1 lesson: the driver's timeout killed the
 run before any JSON appeared):
@@ -85,6 +86,7 @@ RESULT: dict = {
     "sf": 0.0,
     "pipeline": {},
     "scaling": {},
+    "codegen_compiles": 0,
 }
 _PRINTED = False
 
@@ -390,9 +392,13 @@ def main() -> None:
 
     ensure_transcripts("bench")
 
-    from fineweb_legal_spark.session import get_spark
+    from fineweb_legal_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="bench")
+    compiles_at_start = codegen_compiles(spark)
+
+    def count_compiles() -> None:
+        RESULT["codegen_compiles"] = codegen_compiles(spark) - compiles_at_start
 
     import __spark_entry__ as entrymod
 
@@ -423,6 +429,7 @@ def main() -> None:
         RESULT["queries"][name] = round(el, 2)
         total += el
         RESULT["value"] = round(total, 2)
+        count_compiles()
 
     for name in HEADLINE_HEAVY:
         if budget.exceeded():
@@ -445,12 +452,14 @@ def main() -> None:
         RESULT["queries"][name] = round(el, 2)
         total += el
         RESULT["value"] = round(total, 2)
+        count_compiles()
 
     if not budget.exceeded():
         pipeline = _pipeline_bench(spark, budget)
         RESULT["pipeline"] = pipeline
         total += pipeline["steady_sec"]
         RESULT["value"] = round(total, 2)
+        count_compiles()
 
     if run_scaling and budget.remaining() > 600:
         spark.stop()

@@ -385,7 +385,7 @@ def _exact_jaccard_bitmask(
     mask = F.aggregate(
         words,
         F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(mapping.getItem(x)),
+        lambda acc, x: acc.bitwiseOR(mapping[x]),
     )
     dm = df.select(
         F.col("id").cast("string").alias("id"), mask.alias("mask")

@@ -9,17 +9,19 @@ Stage order and cost shape:
 1. ``shape`` — Gopher document-shape rules (alpha-word / bullet-line /
    ellipsis-line fractions): JVM-native, zero shuffle.
 2. ``fineweb`` — FineWeb custom rules (punct-line / short-line /
-   newline-per-word / duplicated-line-char fractions): JVM-native plus
-   one zero-Exchange Arrow pass.
+   newline-per-word fractions JVM-native; the duplicated-line-char
+   fraction a field of the repetition kernel's struct).
 3. ``repetition`` — Gopher n-gram repetition rules: the costliest
-   family (one Arrow kernel per document, O(words) numpy per n), so it
-   is evaluated on the SURVIVORS of stages 1-2 only — at web scale the
-   cheap rules reject a large slice, and every rejected row reaches the
-   kernel as a null it skips. A row violating several stages reports the
-   cheapest one, like the reference's cascade.
+   family (O(words) numpy per n per document).
 
-The whole cascade is one pass over the input: zero Exchange, no join
-back, every stage a column of the same row (pytest-pinned).
+The whole cascade is one Arrow pass of
+:func:`~.textql.repetition_profile`, one scan, zero Exchange, no join
+back, every stage a column of the same row (pytest-pinned). Each
+document's text crosses into Python once. The kernel's gate is the
+JVM-native rules of stages 1-2, so it computes n-grams on their
+survivors only: at web scale the cheap rules reject a large slice, and a
+rejected row costs the kernel one line count. A row violating several
+stages reports the cheapest one, like the reference's cascade.
 """
 
 from __future__ import annotations
@@ -28,10 +30,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .textql import (
+    _FW_SIGNALS,
+    _fineweb_reason,
+    _repetition_reason,
     filter_doc_shape,
-    filter_fineweb_quality,
-    filter_repetition,
+    fineweb_quality_signals,
+    repetition_profile,
 )
+
+PROFILE_COL = "_rep_profile"
 
 
 def document_quality_verdicts(
@@ -42,38 +49,57 @@ def document_quality_verdicts(
     firing rule's name, null for keeps). Null/wordless documents pass
     every family — length gates own empty-text rejection.
 
-    The repetition stage is filter_repetition's one Arrow kernel, gated
-    by the pipeline's nulled-payload trick: cheap-rejected rows carry a
-    null ``_rep_text``, so the kernel skips them at the cost of one None
-    check — survivors-only evaluation with NO verdict join back and NO
-    Exchange anywhere in the cascade (pytest-pinned). The kernel receives
-    only the gated text, so each survivor's text crosses into Python
-    once.
+    One evaluation of the repetition kernel, gated by the JVM-native
+    shape and FineWeb rules: survivors-only n-gram work with NO verdict
+    join back and NO Exchange anywhere in the cascade (pytest-pinned).
     """
-    cheap = filter_fineweb_quality(
+    return verdicts_with_profile(df, text_col, gated=True).drop(PROFILE_COL)
+
+
+def verdicts_with_profile(
+    df: DataFrame, text_col: str, gated: bool
+) -> DataFrame:
+    """The cascade's verdict columns plus :data:`PROFILE_COL`, the default
+    :func:`~.textql.repetition_profile` struct the verdict reads. Gated,
+    the kernel computes n-grams on the cheap stages' survivors only;
+    ungated, on every document (for callers that also report the
+    n-gram signals). The repetition stage is reached only where the
+    cheap stages pass, so both give the same verdicts."""
+    sig = fineweb_quality_signals(
         filter_doc_shape(df, text_col=text_col), text_col=text_col
     )
-    cheap_reason = F.coalesce("shape_reject_reason", "fw_reject_reason")
-    cheap_stage = F.when(
-        F.col("shape_reject_reason").isNotNull(), F.lit("shape")
-    ).when(F.col("fw_reject_reason").isNotNull(), F.lit("fineweb"))
-
-    gated = cheap.withColumn(
-        "_rep_text", F.when(cheap_reason.isNull(), F.col(text_col))
+    gate = (
+        F.col("shape_reject_reason").isNull()
+        & _fineweb_reason(F.lit(None).cast("double")).isNull()
+        if gated
+        else F.lit(True)
     )
-    rep = filter_repetition(gated, text_col="_rep_text").drop(
-        "_rep_text"
-    )
-    reason = F.coalesce(cheap_reason, F.col("rep_reject_reason"))
+    prof = F.col(PROFILE_COL)
+    reasons = {
+        "shape": "shape_reject_reason",
+        "fineweb": "fw_reject_reason",
+        "repetition": "rep_reject_reason",
+    }
+    reason = F.coalesce(*reasons.values())  # the cheapest stage wins
     stage = F.coalesce(
-        cheap_stage,
-        F.when(F.col("rep_reject_reason").isNotNull(), F.lit("repetition")),
+        *[F.when(F.col(c).isNotNull(), F.lit(s)) for s, c in reasons.items()]
     )
     return (
-        rep.withColumn("quality_reject_stage", stage)
-        .withColumn("quality_reject_reason", reason)
-        .withColumn("quality_keep", reason.isNull())
-        .drop("shape_reject_reason", "fw_reject_reason", "rep_reject_reason")
+        sig.withColumn(PROFILE_COL, repetition_profile()(F.col(text_col), gate))
+        .withColumns(
+            {
+                "fw_reject_reason": _fineweb_reason(prof["dup_line_frac"]),
+                "rep_reject_reason": _repetition_reason(prof, text_col),
+            }
+        )
+        .withColumns(
+            {
+                "quality_reject_stage": stage,
+                "quality_reject_reason": reason,
+                "quality_keep": reason.isNull(),
+            }
+        )
+        .drop(*reasons.values(), *_FW_SIGNALS)
     )
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,9 +109,10 @@ def repetition_profile(
     ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """The Gopher repetition family's ONE per-document kernel (Rae et al.
-    2021 §A1.1): a scalar Arrow ``pandas_udf`` over the text column only,
-    returning a struct with, per n,
+    """The repetition family's ONE per-document kernel (Gopher n-gram
+    rules, Rae et al. 2021 §A1.1, and the FineWeb duplicated-line rule,
+    Penedo et al. 2024 §3.6): a scalar Arrow ``pandas_udf`` called as
+    ``kernel(text, gate)``, returning a struct with
 
     - ``top_gram_{n}`` / ``top_cnt_{n}`` / ``top_cov_{n}`` for n in
       ``ns`` — the most frequent word n-gram, its occurrence count and
@@ -122,10 +123,19 @@ def repetition_profile(
       word characters covered by at least one occurrence of a gram that
       occurs more than once, overlapping intervals unioned so no
       character counts twice;
+    - ``dup_line_frac`` — the unrounded fraction of line characters
+      (newlines excluded) inside lines that occur more than once in the
+      document, lines from an exact split('\\n'); null when the text is
+      null or has zero line characters.
 
-    every field null when the text is null or has fewer than n words.
-    ``repetition_signals``, ``dup_ngram_signals`` and
-    ``filter_repetition`` are JVM projections of this struct.
+    The n-gram fields are computed only where ``gate`` is true, and are
+    null where it is false or null, or the text is null or has fewer than
+    n words; ``dup_line_frac`` is computed wherever the text is non-null.
+    The gate lets a cheap-first cascade send each document's text into
+    Python once and pay for n-grams on its survivors only.
+    ``repetition_signals``, ``dup_ngram_signals``, ``dup_line_chars`` and
+    the verdicts built on them are JVM projections of this struct; every
+    rounding happens JVM-side.
 
     Words are the dedup normalization (lowercase, ASCII-whitespace
     tokens — the boundary of decontam/spandedup and the DuckDB oracle).
@@ -133,7 +143,8 @@ def repetition_profile(
     (``decontam.word_hashes``) shared by every n, Horner gram hashes and
     one ``np.unique`` per n; the top gram's string is read back from its
     first occurrence, and the dup coverage is a diff-array cumsum —
-    O(words) numpy per (doc, n), no Python-level gram loop.
+    O(words) numpy per (doc, n), no Python-level gram loop. Lines are
+    counted with one ``Counter`` per document.
 
     Gram identity is the 64-bit gram hash, not the string: two different
     grams of one document colliding would merge their counts. The
@@ -144,6 +155,8 @@ def repetition_profile(
     tie-break compares Python str (code points) where the JVM compares
     UTF-8 bytes — identical on BMP text.
     """
+    from collections import Counter
+
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -151,20 +164,31 @@ def repetition_profile(
 
     ns = tuple(sorted(ns))
     dup_ns = tuple(sorted(dup_ns))
-    fields = [
-        (f"{name}_{n}", dtype)
-        for n in ns
-        for name, dtype in (
-            ("top_gram", "string"), ("top_cnt", "bigint"), ("top_cov", "bigint")
-        )
-    ] + [(f"dup_frac_{n}", "double") for n in dup_ns]
+    fields = (
+        [
+            (f"{name}_{n}", dtype)
+            for n in ns
+            for name, dtype in (
+                ("top_gram", "string"), ("top_cnt", "bigint"), ("top_cov", "bigint")
+            )
+        ]
+        + [(f"dup_frac_{n}", "double") for n in dup_ns]
+        + [("dup_line_frac", "double")]
+    )
     ddl = "struct<" + ",".join(f"{c}:{t}" for c, t in fields) + ">"
 
     @pandas_udf(ddl)
-    def repetition_kernel(texts: pd.Series) -> pd.DataFrame:
+    def repetition_kernel(texts: pd.Series, gates: pd.Series) -> pd.DataFrame:
         out: dict[str, list] = {c: [None] * len(texts) for c, _ in fields}
-        for i, text in enumerate(texts):
-            w = ascii_words(text) if text is not None else []
+        for i, (text, gate) in enumerate(zip(texts, gates)):
+            if text is None:
+                continue
+            lines = Counter(text.split("\n"))
+            line_chars = sum(len(s) * c for s, c in lines.items())
+            if line_chars:
+                dup = sum(len(s) * c for s, c in lines.items() if c > 1)
+                out["dup_line_frac"][i] = dup / line_chars
+            w = ascii_words(text) if gate else []
             if not w:
                 continue
             wl = np.fromiter((len(x) for x in w), dtype=np.int64, count=len(w))
@@ -224,7 +248,7 @@ def _profile_rows(
     exists where its first field is non-null: documents with fewer than
     n words omit that n. Row-local explode of an array(struct(...)) —
     zero Exchange, no lambda HOF."""
-    prof = repetition_profile(ns, dup_ns)(F.col(text_col))
+    prof = repetition_profile(ns, dup_ns)(F.col(text_col), F.lit(True))
     first = next(iter(per_n.values()))
     recs = F.array(
         *[
@@ -446,8 +470,24 @@ def filter_repetition(
     if not (thresholds or dup_thresholds):
         return df.withColumn("rep_reject_reason", F.lit(None).cast("string"))
     prof = repetition_profile(tuple(thresholds), tuple(dup_thresholds))(
-        F.col(text_col)
+        F.col(text_col), F.lit(True)
     )
+    return df.withColumn(
+        "rep_reject_reason",
+        _repetition_reason(prof, text_col, thresholds, dup_thresholds),
+    )
+
+
+def _repetition_reason(
+    prof: Column,
+    text_col: str,
+    thresholds: dict[int, float] = GOPHER_TOP_NGRAM_MAX,
+    dup_thresholds: dict[int, float] = GOPHER_DUP_NGRAM_MAX,
+) -> Column:
+    """The repetition rule CASE over a :func:`repetition_profile` struct:
+    the first violated rule's name, null when every rule passes or has no
+    signal. The one home of the rule order and rounding, shared by
+    :func:`filter_repetition` and the quality cascade."""
     chars = F.length(F.col(text_col)).cast("double")
     rules = [
         (
@@ -464,7 +504,7 @@ def filter_repetition(
     verdict = F.when(cond, F.lit(reason))
     for cond, reason in rest:
         verdict = verdict.when(cond, F.lit(reason))
-    return df.withColumn("rep_reject_reason", verdict)
+    return verdict
 
 
 # Gopher document-shape thresholds (Rae et al. 2021, Table A1)
@@ -543,6 +583,7 @@ FINEWEB_MAX_SHORT_LINE_FRAC = 0.67    # drop if > 67% of lines are short
 FINEWEB_MAX_DUP_LINE_CHAR_FRAC = 0.10  # drop if > 10% of chars in dup lines
 FINEWEB_MAX_NEWLINE_WORD_FRAC = 0.30  # drop if newlines/words > 0.30
 _FW_PUNCT_RX = r"(?m)[.!?\"'][ \t]*$"  # line's last non-blank char
+_FW_SIGNALS = ("punct_line_frac", "short_line_frac", "newline_word_frac")
 
 
 def fineweb_quality_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -593,75 +634,31 @@ def dup_line_chars(df: DataFrame, text_col: str = "text") -> DataFrame:
     chars, so the signal is blank-robust with no special-casing. Null
     when the text is null or has zero line characters.
 
-    Scale shape: a pure per-row signal, so the plan is ONE pass-through
-    mapInPandas — zero Exchange, embarrassingly parallel, same contract
-    as dup_ngram_signals (pytest-pinned). The kernel is vectorized
-    pandas: one explode + one (row, line) groupby per Arrow batch, no
-    Python-level per-line loop. Pass-through means every input column
-    rides the Arrow round-trip; call on a slim projection when only the
-    signal is needed.
+    Scale shape: a pure per-row signal, the ``dup_line_frac`` field of
+    :func:`repetition_profile` with its n-gram work gated off, rounded
+    JVM-side (HALF_UP, matching the oracle's round()) — one Arrow
+    evaluation over the text column only, zero Exchange (pytest-pinned).
     """
-    import numpy as np
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("_dlcf", T.DoubleType())]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ex = pdf[text_col].str.split("\n").explode()
-            ex = ex[ex.notna()]
-            if len(ex):
-                g = (
-                    pd.DataFrame(
-                        {
-                            "_i": ex.index,
-                            "_line": ex.to_numpy(),
-                            "_len": ex.str.len().to_numpy(),
-                        }
-                    )
-                    .groupby(["_i", "_line"], sort=False)
-                    .agg(_cnt=("_len", "size"), _len=("_len", "first"))
-                    .reset_index()
-                )
-                tot = (g["_len"] * g["_cnt"]).to_numpy()
-                per = pd.DataFrame(
-                    {
-                        "_tot": tot,
-                        "_dup": np.where(g["_cnt"].to_numpy() > 1, tot, 0),
-                    },
-                    index=g["_i"].to_numpy(),
-                ).groupby(level=0).sum()
-                frac = per["_dup"] / per["_tot"].where(per["_tot"] > 0)
-                pdf = pdf.assign(_dlcf=frac.reindex(pdf.index))
-            else:
-                pdf = pdf.assign(_dlcf=float("nan"))
-            yield pdf
-
-    return (
-        df.mapInPandas(fn, out_schema)
-        # round JVM-side (HALF_UP, matching the oracle's round())
-        .withColumn("dup_line_char_frac", F.round("_dlcf", 6))
-        .drop("_dlcf")
+    return df.withColumn(
+        "dup_line_char_frac", F.round(_dup_line_frac(text_col), 6)
     )
 
 
-def filter_fineweb_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """df + ``fw_reject_reason`` ('line_punct' | 'short_lines' |
+def _dup_line_frac(text_col: str) -> Column:
+    return repetition_profile((), ())(F.col(text_col), F.lit(False))[
+        "dup_line_frac"
+    ]
+
+
+def _fineweb_reason(dup_line_frac: Column) -> Column:
+    """The FineWeb rule CASE ('line_punct' | 'short_lines' |
     'dup_line_chars' | 'newline_words', first violated in that order;
-    null = keep) at the module-default FineWeb thresholds over
-    :func:`fineweb_quality_signals` + :func:`dup_line_chars`. Wordless
-    documents (null/empty/whitespace text) skip every rule and pass — the
-    pipeline's length gates own empty-text rejection, same contract as
-    filter_doc_shape. Plan: native signal columns feed one pass-through
-    Arrow stage — zero Exchange end to end.
-    """
-    sig = dup_line_chars(
-        fineweb_quality_signals(df, text_col=text_col), text_col=text_col
-    )
-    has_words = (
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)) > 0
-    )
+    null = keep) over :func:`fineweb_quality_signals`' columns and an
+    unrounded duplicated-line fraction. Wordless documents (null
+    ``newline_word_frac``: null/empty/whitespace text) skip every rule.
+    A null ``dup_line_frac`` leaves the JVM-native rules only — the
+    cascade's gate. The one home of the rule order, shared by
+    :func:`filter_fineweb_quality` and the quality cascade."""
     verdict = (
         F.when(
             F.col("punct_line_frac") < FINEWEB_MIN_PUNCT_LINE_FRAC,
@@ -672,7 +669,7 @@ def filter_fineweb_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.lit("short_lines"),
         )
         .when(
-            F.col("dup_line_char_frac") > FINEWEB_MAX_DUP_LINE_CHAR_FRAC,
+            F.round(dup_line_frac, 6) > FINEWEB_MAX_DUP_LINE_CHAR_FRAC,
             F.lit("dup_line_chars"),
         )
         .when(
@@ -680,13 +677,24 @@ def filter_fineweb_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.lit("newline_words"),
         )
     )
-    return sig.withColumn(
-        "fw_reject_reason", F.when(has_words, verdict)
-    ).drop(
-        "punct_line_frac",
-        "short_line_frac",
-        "newline_word_frac",
-        "dup_line_char_frac",
+    return F.when(F.col("newline_word_frac").isNotNull(), verdict)
+
+
+def filter_fineweb_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """df + ``fw_reject_reason`` ('line_punct' | 'short_lines' |
+    'dup_line_chars' | 'newline_words', first violated in that order;
+    null = keep) at the module-default FineWeb thresholds over
+    :func:`fineweb_quality_signals` and the duplicated-line fraction of
+    :func:`dup_line_chars`. Wordless documents (null/empty/whitespace
+    text) skip every rule and pass — the pipeline's length gates own
+    empty-text rejection, same contract as filter_doc_shape. Plan: native
+    signal columns and one Arrow evaluation of :func:`repetition_profile`
+    (its n-gram work gated off) — zero Exchange end to end.
+    """
+    return (
+        fineweb_quality_signals(df, text_col=text_col)
+        .withColumn("fw_reject_reason", _fineweb_reason(_dup_line_frac(text_col)))
+        .drop(*_FW_SIGNALS)
     )
 
 

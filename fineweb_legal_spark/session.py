@@ -93,6 +93,16 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
+        # Generated-code cache (static; Spark's default is 100 classes,
+        # LRU). One ops_suite cycle (perfbench) needs ~177 distinct
+        # classes and transcript_repairs_t2 alone 140, so at 100 every
+        # execution evicted its own classes, recompiled them with Janino
+        # and had C2 JIT them again as new classes (2-3 CPU-s per
+        # transcript_repairs_t2 run). One pass of the whole 50-query
+        # registry at sf0.01 (tools/check_correctness.py) compiles
+        # 1,139 classes. A second execution of a plan compiles nothing
+        # while the session's working set fits (pytest-pinned).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
@@ -124,4 +134,16 @@ def explain_formatted(df) -> str:
     """
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
+    )
+
+
+def codegen_compiles(spark) -> int:
+    """Classes the JVM has compiled with Janino since it started
+    (Spark's ``CodegenMetrics`` compile counter; a cache hit compiles
+    nothing). Read it before and after an action to count that action's
+    compiles. Single home for this private-API touchpoint."""
+    return (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+        .getCount()
     )

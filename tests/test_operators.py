@@ -1208,6 +1208,73 @@ def test_fineweb_quality_signals_and_dup_line(spark):
     assert got[5] == (0.5, 1.0, round(3 / 2, 6), 0.0)
 
 
+def _pandas_dup_line_fracs(texts: pd.Series) -> pd.Series:
+    """Vectorized pandas twin of the duplicated-line fraction (one explode
+    + one (row, line) groupby, the library's former mapInPandas kernel):
+    unrounded, NaN for null text or zero line characters."""
+    import numpy as np
+
+    ex = texts.str.split("\n").explode()
+    ex = ex[ex.notna()]
+    if not len(ex):
+        return pd.Series(np.nan, index=texts.index)
+    g = (
+        pd.DataFrame(
+            {"_i": ex.index, "_line": ex.to_numpy(),
+             "_len": ex.str.len().to_numpy()}
+        )
+        .groupby(["_i", "_line"], sort=False)
+        .agg(_cnt=("_len", "size"), _len=("_len", "first"))
+        .reset_index()
+    )
+    tot = (g["_len"] * g["_cnt"]).to_numpy()
+    per = pd.DataFrame(
+        {"_tot": tot, "_dup": np.where(g["_cnt"].to_numpy() > 1, tot, 0)},
+        index=g["_i"].to_numpy(),
+    ).groupby(level=0).sum()
+    frac = per["_dup"] / per["_tot"].where(per["_tot"] > 0)
+    return frac.reindex(texts.index)
+
+
+def test_dup_line_chars_randomized_pandas_parity(spark):
+    """dup_line_chars (a field of the one repetition kernel) == the
+    pandas groupby twin on 400 seeded docs with blank lines, CRLF line
+    ends, non-ASCII lines, "" and None."""
+    import math
+    import random
+
+    from fineweb_legal_spark.operators.textql import dup_line_chars
+
+    rng = random.Random(23)
+    pool = ["nav menu", "", "  ", "Home | About", "naïve café", "日本語の行",
+            "line\r", "a", "Zürich.", "x" * 40]
+    rows = []
+    for i in range(400):
+        k = rng.random()
+        if k < 0.03:
+            rows.append((i, None))
+        elif k < 0.06:
+            rows.append((i, ""))
+        else:
+            lines = [rng.choice(pool) for _ in range(rng.randint(1, 12))]
+            sep = "\r\n" if rng.random() < 0.2 else "\n"
+            rows.append((i, sep.join(lines)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["dup_line_char_frac"]
+        for r in dup_line_chars(docs).collect()
+    }
+    texts = pd.Series([t for _, t in rows], dtype=object)
+    want = {
+        i: None if math.isnan(f) else _py_round6(f)
+        for (i, _), f in zip(rows, _pandas_dup_line_fracs(texts).tolist())
+    }
+    assert got == want
+    # non-trivial: nulls, zeros and duplicated lines all occur
+    vals = list(want.values())
+    assert None in vals and 0.0 in vals and any(v and v > 0 for v in vals)
+
+
 def test_filter_fineweb_quality_reasons(spark):
     from fineweb_legal_spark.operators.textql import filter_fineweb_quality
 
@@ -1382,6 +1449,45 @@ def test_document_quality_cascade(spark):
     }
 
 
+def test_repetition_signals_docs_survivors_match_oracle(spark, tmp_path):
+    """The cascade's repetition stage against the DuckDB oracle on text
+    that reaches it: every line of the sf0.1 documents (all rejected as
+    fineweb/line_punct as shipped) ends with a period here, so most
+    documents pass the cheap stages and the repetition rules decide."""
+    from collections import Counter
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    src = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    path = str(tmp_path / "documents.parquet")
+    src.withColumn(
+        "text", F.regexp_replace("text", r"(?m)$", ".")
+    ).write.parquet(path)
+
+    got = [
+        tuple(r)
+        for r in entrymod.q_repetition_signals_docs(
+            spark, str(tmp_path)
+        ).collect()
+    ]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    want = con.execute(
+        "SELECT doc_id, signal, n, gram, cnt, char_frac FROM ("
+        + entrymod.oracle_sql()["repetition_signals_docs"]
+        + ")"
+    ).fetchall()
+    assert len(got) == len(want)
+    assert Counter(got) == Counter(want)
+    verdicts = Counter(r[3] for r in got if r[1] == "cascade")
+    assert verdicts[None] > 0  # keeps
+    assert any(v and v.startswith("repetition/") for v in verdicts)
+
+
 def test_keep_top_fraction(spark):
     import pytest as _pytest
 
@@ -1459,11 +1565,13 @@ def test_filter_repetition_python_parity_and_plan(spark):
     """filter_repetition == a pure-Python verdict built from the Counter
     and interval-union twins on 120 seeded random docs (tiny vocab ->
     heavy gram collisions and covered-char ties) and 30 planted-phrase
-    docs. Its plan, and the
-    cascade's built on it, has zero Exchange and exactly ONE
-    ArrowEvalPython: the repetition kernel is evaluated once per row."""
+    docs. Its plan, and the cascade's, has zero Exchange, zero
+    MapInPandas and exactly ONE ArrowEvalPython: the repetition kernel
+    is evaluated once per row. repetition_signals_docs reads the
+    documents once, through one kernel call and no Union."""
     import random
 
+    import __spark_entry__ as entrymod
     from fineweb_legal_spark.operators.quality import (
         document_quality_verdicts,
     )
@@ -1521,9 +1629,18 @@ def test_filter_repetition_python_parity_and_plan(spark):
     out = filter_repetition(docs)
     for plan in (plan_of(out), plan_of(document_quality_verdicts(docs))):
         assert ") Exchange" not in plan, plan
+        assert ") MapInPandas" not in plan, plan
         assert plan.count(") ArrowEvalPython") == 1, plan
         # one node may batch several UDFs: pin that it holds one kernel
         assert plan.count("repetition_kernel(") == 1, plan
+    plan = plan_of(
+        entrymod.q_repetition_signals_docs(spark, "/root/testdata/sf0.01")
+    )
+    scans = [ln for ln in plan.splitlines() if ") Scan parquet" in ln]
+    assert len(scans) == 1, plan
+    assert "documents.parquet" in plan[plan.index(scans[0]):], plan
+    assert plan.count("repetition_kernel(") == 1, plan
+    assert ") Union" not in plan and ") MapInPandas" not in plan, plan
 
     got = {r["doc_id"]: r["rep_reject_reason"] for r in out.collect()}
     want = {i: py_verdict(text) for i, text in rows}

@@ -69,29 +69,29 @@ PICKS = {
         "top-k per source is a small window after the join."
     ),
     "repetition_signals_docs": (
-        "Gopher repetition family, tagged union — no branch shuffles "
-        "data: the 4 Exchanges are the parallel.widen RoundRobin spread "
-        "of each branch's scan (absent when the scan already has a split "
-        "per slot). top_gram, dup_gram and cascade branches all run the "
-        "family's ONE per-document kernel (textql.repetition_profile: a "
-        "scalar Arrow UDF over the text column only — crc32 per word, "
-        "Horner gram hashes, np.unique per n) as an ArrowEvalPython node, "
-        "and project its struct JVM-side (row-local explode for the "
-        "signal branches, a CASE for the verdict). A 2-exchange plan over "
-        "exploded gram triples measured DYING at 10M rows — ~1.5B gram "
-        "strings, sort-agg fallback, >70 GB spill, ENOSPC (BENCH.md "
-        "round-5 stress). dup_line branch: per-row pandas explode+groupby "
-        "kernel. cascade branch: the full document-quality verdict (see "
-        "document_quality_cascade below)."
+        "Gopher repetition family as tagged rows from ONE scan and ONE "
+        "ArrowEvalPython: the family's per-document kernel "
+        "(textql.repetition_profile, ungated here: crc32 per word, Horner "
+        "gram hashes, np.unique per n, one line Counter) returns every "
+        "signal as a struct; a row-local explode of an array of tagged "
+        "structs emits the top_gram, dup_gram, dup_line and cascade rows "
+        "(the cascade verdict is the same JVM CASE builders as "
+        "document_quality_cascade below, over the same struct). No Union, "
+        "no MapInPandas; the one Exchange is the parallel.widen "
+        "RoundRobin spread of the scan (absent when the scan already has "
+        "a split per slot). A 2-exchange plan over exploded gram triples "
+        "measured DYING at 10M rows — ~1.5B gram strings, sort-agg "
+        "fallback, >70 GB spill, ENOSPC (BENCH.md round-5 stress)."
     ),
     "document_quality_cascade": (
         "Every heuristic rule family (Gopher doc-shape, FineWeb custom "
         "incl. duplicated-line chars, Gopher repetition) behind one "
-        "verdict with ZERO Exchange end to end: native regexp stages feed "
-        "the dup-line MapInPandas and ONE ArrowEvalPython (the repetition "
-        "kernel, which receives only the gate text); cheap-rejected rows "
-        "reach the kernel as nulls it skips - no gram shuffle, no verdict "
-        "join."
+        "verdict with ZERO Exchange end to end: the native regexp "
+        "signals feed ONE ArrowEvalPython (the repetition kernel, which "
+        "returns the duplicated-line fraction for every row and the "
+        "n-gram fields for rows the native shape and FineWeb rules pass, "
+        "its gate argument) - no MapInPandas, no gram shuffle, no "
+        "verdict join."
     ),
     "mixture_sample_docs": (
         "Per-source rate thresholds broadcast; the md5-prefix filter runs "
