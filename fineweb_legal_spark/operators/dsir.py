@@ -6,7 +6,7 @@ distribution looks like a target corpus: fit a hashed-feature LM on the
 target and one on the raw pool, weigh every raw document by its
 log-likelihood ratio, then resample without replacement with Gumbel
 top-k. Re-expressed Spark-first over this engine's existing hashed
-char-trigram feature space (artifacts._batch_trigrams, 2^16 slots):
+char-trigram feature space (artifacts.trigram_logprob_sums, 2^16 slots):
 
 - **fit** (`fit_dsir_diff`): two add-0.5-smoothed trigram LMs via
   operators/lm.train_trigram_counts — zero-Exchange partial count
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
-from ..artifacts import _HASH_SLOTS, _batch_trigrams
+from ..artifacts import _HASH_SLOTS, trigram_logprob_sums
 from .lm import logprob_table, train_trigram_counts
 
 _HEX_SPACE = float(16**8)
@@ -91,12 +91,9 @@ def dsir_keys(
 
     @F.pandas_udf("double")
     def key_udf(text: pd.Series, u: pd.Series) -> pd.Series:
-        table = bc.value
-        texts = ["" if t is None else t for t in text]
-        h, starts, counts = _batch_trigrams(texts, prefix)
-        logw = np.zeros(len(texts), dtype=np.float64)
-        if h.size:
-            logw[counts > 0] = np.add.reduceat(table[h], starts)
+        sums, counts = trigram_logprob_sums(text.tolist(), (bc.value,), prefix)
+        logw = np.zeros(counts.size, dtype=np.float64)
+        logw[counts > 0] = sums[0]
         un = u.to_numpy(np.float64)
         return pd.Series(logw - np.log(-np.log(un)))
 

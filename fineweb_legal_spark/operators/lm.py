@@ -18,12 +18,14 @@ Scale shape (the classifier-gradient pattern):
   driver — O(labels × occupied-slots) rows, corpus- AND batch-count-free.
   Integer sums end to end, so the result is EXACTLY order- and
   partitioning-independent (pytest: bit-equal to a single-process twin).
-- **Smooth** (``logprob_table``): log((c + 0.5) / (total + 0.5·slots)) —
-  identical to artifacts.build_artifacts, so a trained table is a drop-in
-  for the embedded one.
-- **Score** (``score_perplexity``): broadcast the table, one
-  pass-through Arrow stage reusing the artifact's vectorized
-  gather + segment-sum kernel (perplexity = exp(-mean log-prob)).
+- **Smooth** (``logprob_table``, re-exported from artifacts): log((c +
+  0.5) / (total + 0.5·slots)) — the formula artifacts.build_artifacts
+  uses, so a trained table is a drop-in for the embedded one.
+- **Score** (``score_perplexity``, ``score_langid``): broadcast the
+  table(s), one scalar Arrow UDF over the text column alone (no other
+  column crosses into Python) calling the artifact's one gather +
+  segment-sum kernel (perplexity = exp(-mean log-prob); language-ID =
+  argmax across per-language tables).
 - **Persist** (``save_counts`` / ``load_counts``): the table is a parquet
   DATA artifact (slot, count) — the train_ivf centroid-publishing
   pattern; engines share numbers, never code.
@@ -37,9 +39,16 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..artifacts import _HASH_SLOTS, _batch_trigrams
+from ..artifacts import (
+    _HASH_SLOTS,
+    _batch_trigrams,
+    logprob_table,
+    perplexities,
+    predict_langs,
+)
 from .. import spec
 
 _NO_LABEL = "\x00all"
@@ -103,8 +112,6 @@ def train_trigram_counts(
     # O(batches × 2^16) dense vectors (the difference between KBs and
     # hundreds of GB at 10^6 Arrow batches). Integer sums, so the result
     # stays EXACTLY partitioning- and order-independent.
-    from pyspark.sql import functions as F
-
     reduced = (
         src.mapInPandas(fn, schema)
         .select("label", F.posexplode("counts").alias("slot", "c"))
@@ -121,13 +128,6 @@ def train_trigram_counts(
     return agg
 
 
-def logprob_table(counts: np.ndarray) -> np.ndarray:
-    """Add-0.5-smoothed log-probs — byte-identical math to
-    artifacts.build_artifacts, so trained tables drop into the scorer."""
-    c = counts.astype(np.float64)
-    return np.log((c + 0.5) / (c.sum() + 0.5 * _HASH_SLOTS))
-
-
 def score_perplexity(
     spark: SparkSession,
     df: DataFrame,
@@ -137,34 +137,39 @@ def score_perplexity(
     prefix: int = spec.PPL_PREFIX_CHARS,
 ) -> DataFrame:
     """df + ``out_col`` — perplexity exp(-mean trigram log-prob) under a
-    (trained or embedded) table: broadcast gather + segment sum, one
-    pass-through Arrow stage, zero Exchange. Null text scores null;
-    sub-trigram text scores 1.0 (the artifact's convention)."""
+    (trained or embedded) table: a scalar Arrow UDF over the text column
+    alone, zero Exchange. Null text scores null; sub-trigram text scores
+    1.0 (the artifact's convention)."""
     bc = spark.sparkContext.broadcast(np.asarray(table, dtype=np.float64))
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.DoubleType())]
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tab = bc.value
-        for pdf in batches:
-            texts = pdf[text_col].tolist()
-            idx = [i for i, t in enumerate(texts) if t is not None]
-            vals: list[float | None] = [None] * len(texts)
-            if idx:
-                h, starts, counts = _batch_trigrams(
-                    [texts[i] for i in idx], prefix
-                )
-                ppl = np.ones(len(idx), dtype=np.float64)
-                if h.size:
-                    sums = np.add.reduceat(tab[h], starts)
-                    nz = counts[counts > 0]
-                    ppl[counts > 0] = np.exp(-(sums / nz))
-                for j, i in enumerate(idx):
-                    vals[i] = float(ppl[j])
-            yield pdf.assign(**{out_col: pd.Series(vals, index=pdf.index)})
+    @F.pandas_udf(T.DoubleType())
+    def perplexity_kernel(text: pd.Series) -> pd.Series:
+        ppl = perplexities(text.tolist(), bc.value, prefix)
+        ppl[text.isna().to_numpy()] = np.nan  # Arrow writes NaN as null
+        return pd.Series(ppl)
 
-    return df.mapInPandas(fn, schema)
+    return df.withColumn(out_col, perplexity_kernel(F.col(text_col)))
+
+
+def langid_udf(
+    spark: SparkSession,
+    tables: np.ndarray,
+    langs: tuple[str, ...],
+    fallback: str,
+    prefix: int = spec.LANGID_PREFIX_CHARS,
+):
+    """Scalar Arrow UDF text -> the language of ``tables`` (one row per
+    entry of ``langs``) under which the text scores highest. Null text
+    predicts null; sub-trigram text predicts ``fallback``."""
+    bc = spark.sparkContext.broadcast(np.asarray(tables, dtype=np.float64))
+
+    @F.pandas_udf(T.StringType())
+    def langid_kernel(text: pd.Series) -> pd.Series:
+        pred = predict_langs(text.tolist(), bc.value, langs, fallback, prefix)
+        pred[text.isna().to_numpy()] = None
+        return pd.Series(pred)
+
+    return langid_kernel
 
 
 def save_counts(counts: dict[str, np.ndarray], path: str | Path) -> None:
@@ -217,34 +222,5 @@ def score_langid(
         raise ValueError("no language tables")
     tables = np.stack([logprob_table(counts[lab]) for lab in langs])
     fallback = default_lang if default_lang is not None else langs[0]
-    bc = spark.sparkContext.broadcast(tables)
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.StringType())]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tabs = bc.value
-        for pdf in batches:
-            texts = pdf[text_col].tolist()
-            idx = [i for i, t in enumerate(texts) if t is not None]
-            vals: list[str | None] = [None] * len(texts)
-            if idx:
-                h, starts, cnts = _batch_trigrams(
-                    [texts[i] for i in idx], prefix
-                )
-                preds = [fallback] * len(idx)
-                if h.size:
-                    sums = np.empty((len(langs), starts.size))
-                    for i in range(len(langs)):
-                        sums[i] = np.add.reduceat(tabs[i][h], starts)
-                    best = np.argmax(sums, axis=0)
-                    j = 0
-                    for i, c in enumerate(cnts):
-                        if c > 0:
-                            preds[i] = langs[int(best[j])]
-                            j += 1
-                for j, i in enumerate(idx):
-                    vals[i] = preds[j]
-            yield pdf.assign(**{out_col: pd.Series(vals, index=pdf.index)})
-
-    return df.mapInPandas(fn, schema)
+    kernel = langid_udf(spark, tables, langs, fallback, prefix)
+    return df.withColumn(out_col, kernel(F.col(text_col)))

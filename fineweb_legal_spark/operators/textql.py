@@ -7,14 +7,13 @@ broadcast trigram artifact — the D2 pattern, SURVEY.md §2.10).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from .. import spec
 from ..artifacts import get_artifacts
+from .lm import langid_udf
 
 # BPE-ish token estimate: word pieces of <=4 chars (reference F16 analog:
 # annotator.py:96-98 uses len//4; here per-word ceil(len/4) which tracks
@@ -59,9 +58,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", F.substring(F.sha2(norm, 256), 1, 16))
 
 
-_LANGID_SCHEMA_SUFFIX = [T.StructField("pred_lang", T.StringType())]
-
-
 def predict_language(
     spark: SparkSession,
     df: DataFrame,
@@ -69,40 +65,19 @@ def predict_language(
     text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, *keep_cols, pred_lang) via the broadcast hashed-trigram
-    classifier. ``keep_cols`` are scalar columns passed through the Arrow
-    batch unchanged — the way to combine langid with native projections in
-    ONE pass (no join back on id, no second scan); only scalars belong
-    here, never the text column."""
-    bc = spark.sparkContext.broadcast(get_artifacts())
-    schema = T.StructType(
-        [df.schema[id_col]]
-        + [df.schema[c] for c in keep_cols]
-        + [T.StructField("pred_lang", T.StringType())]
+    """(id, *keep_cols, pred_lang) via the embedded hashed-trigram
+    classifier: one scalar Arrow UDF over the text column, so ``keep_cols``
+    stay in the JVM row — the way to combine langid with native
+    projections in ONE pass (no join back on id, no second scan)."""
+    arts = get_artifacts()
+    kernel = langid_udf(
+        spark,
+        arts.langid_logprob,
+        arts.langs,
+        spec.LANGID_KEEP_LANG,
+        spec.LANGID_PREFIX_CHARS,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arts = bc.value
-        for pdf in batches:
-            # one vectorized numpy pass over the whole Arrow batch (the same
-            # kernel pipeline.py uses); per-row predict_lang paid the numpy
-            # setup cost once per ROW (~5.5x slower, measured)
-            texts = pdf[text_col].tolist()
-            idx = [i for i, t in enumerate(texts) if t is not None]
-            preds: list[str | None] = [None] * len(texts)
-            if idx:
-                batch_preds = arts.predict_lang_batch([texts[i] for i in idx])
-                for j, i in enumerate(idx):
-                    preds[i] = batch_preds[j]
-            out = {id_col: pdf[id_col]}
-            for c in keep_cols:
-                out[c] = pdf[c]
-            out["pred_lang"] = preds
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, text_col, *keep_cols).mapInPandas(
-        fn, schema=schema
-    )
+    return df.select(id_col, *keep_cols, kernel(F.col(text_col)).alias("pred_lang"))
 
 
 def repetition_profile(

@@ -6,11 +6,13 @@ Stage layout (north_rule; reference lifecycle analog SURVEY.md §3.1):
                             codegen, zero Python in the hot path)
 2. conversation stats     — two-phase salted aggregation (skew-safe for the
                             giant-conversation case, SURVEY.md P16)
-3. model stage            — ONE Arrow-batched ``mapInPandas`` over heuristic
-                            survivors: language-ID + perplexity with
-                            broadcast numpy artifacts, plus PII/profanity
-                            scrub and the dedup-normalization hash (Python
-                            ``re``/hashlib for byte-exact oracle parity)
+3. model stage            — ONE scalar Arrow UDF over heuristic survivors'
+                            text (``model_stage``): language-ID +
+                            perplexity with broadcast numpy artifacts, plus
+                            PII/profanity scrub and the dedup-normalization
+                            hash (Python ``re``/hashlib for byte-exact
+                            oracle parity); no other column crosses into
+                            Python
 4. dedup                  — window over the norm hash, winner =
                             min(conv_id, turn_idx)  [deterministic "first"]
 5. verdict assembly       — union of heuristic rejects + scored survivors
@@ -23,13 +25,11 @@ scripts/consolidate_and_clean.py:66-81.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import spec
 from .artifacts import get_artifacts
@@ -227,67 +227,69 @@ def heuristic_reason_col() -> Column:
     )
 
 
-_MODEL_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("reason0", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("ppl_bucket", T.IntegerType()),
-        T.StructField("norm_key", T.StringType()),
-        T.StructField("scrubbed_text", T.StringType()),
-    ]
+_MODEL_STRUCT = (
+    "struct<reason:string,lang:string,ppl_bucket:int,norm_key:string,"
+    "scrubbed_text:string>"
 )
 
 
-def _model_stage_fn(bc_artifacts):
-    """mapInPandas body: lazily grabs the broadcast artifacts once per task
-    (the D2 'load model once per executor' pattern).
+def model_stage(spark: SparkSession, heur: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, reason0, lang, ppl_bucket, norm_key, scrubbed_text) over the
+    heuristic verdict frame (``text`` and ``heur_reason`` columns): ONE
+    scalar Arrow UDF scores language-ID and perplexity with the broadcast
+    artifacts (loaded once per task, the D2 pattern), then scrubs and
+    hashes the survivors; ``reason0`` is the heuristic reason, else the
+    model's.
 
-    Receives ALL rows with the precomputed heuristic reason attached and
-    passes rejects straight through — one linear dataflow, so the plan never
-    branches on this expensive stage (a DataFrame union of filtered branches
-    would recompute the whole UDF per branch)."""
+    Every row passes through (one linear dataflow: a union of filtered
+    branches would recompute the UDF per branch), but only the text
+    crosses into Python, and only a heuristic survivor's: rejects send a
+    null, so they cost no Arrow string bytes and no PyObject. ``keep``
+    columns stay in the JVM row."""
+    bc = spark.sparkContext.broadcast(get_artifacts())
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arts: ModelArtifacts = bc_artifacts.value
-        for pdf in batches:
-            n = len(pdf)
-            reasons = pdf["heur_reason"].tolist()
-            langs: list[str | None] = [None] * n
-            buckets: list[int | None] = [None] * n
-            norms: list[str | None] = [None] * n
-            scrubbed: list[str | None] = [None] * n
-            surv_idx = [i for i, r in enumerate(reasons) if r is None]
-            if surv_idx:
-                texts = pdf["text"].tolist()
-                surv_texts = [texts[i] for i in surv_idx]
-                # vectorized across the whole Arrow batch (one numpy pass)
-                pl = arts.predict_lang_batch(surv_texts)
-                pp = arts.perplexity_batch(surv_texts)
-                for j, i in enumerate(surv_idx):
-                    langs[i] = pl[j]
-                    buckets[i] = arts.ppl_bucket(float(pp[j]))
-                    if pl[j] != spec.LANGID_KEEP_LANG:
-                        reasons[i] = "lang"
-                    elif pp[j] > spec.PPL_MAX:
-                        reasons[i] = "perplexity"
-                    else:
-                        norms[i] = norm_hash(surv_texts[j])
-                        scrubbed[i] = scrub_text(surv_texts[j])
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"],
-                    "reason0": reasons,
-                    "lang": langs,
-                    "ppl_bucket": pd.array(buckets, dtype="Int32"),
-                    "norm_key": norms,
-                    "scrubbed_text": scrubbed,
-                }
-            )
+    @F.pandas_udf(_MODEL_STRUCT)
+    def model_kernel(text: pd.Series) -> pd.DataFrame:
+        arts: ModelArtifacts = bc.value
+        texts = text.tolist()
+        n = len(texts)
+        reasons: list[str | None] = [None] * n
+        langs: list[str | None] = [None] * n
+        buckets: list[int | None] = [None] * n
+        norms: list[str | None] = [None] * n
+        scrubbed: list[str | None] = [None] * n
+        surv_idx = [i for i, t in enumerate(texts) if t is not None]
+        if surv_idx:
+            surv_texts = [texts[i] for i in surv_idx]
+            # vectorized across the whole Arrow batch (one numpy pass)
+            pl = arts.predict_lang_batch(surv_texts)
+            pp = arts.perplexity_batch(surv_texts)
+            for j, i in enumerate(surv_idx):
+                langs[i] = pl[j]
+                buckets[i] = arts.ppl_bucket(float(pp[j]))
+                if pl[j] != spec.LANGID_KEEP_LANG:
+                    reasons[i] = "lang"
+                elif pp[j] > spec.PPL_MAX:
+                    reasons[i] = "perplexity"
+                else:
+                    norms[i] = norm_hash(surv_texts[j])
+                    scrubbed[i] = scrub_text(surv_texts[j])
+        return pd.DataFrame(
+            {
+                "reason": reasons,
+                "lang": langs,
+                "ppl_bucket": pd.array(buckets, dtype="Int32"),
+                "norm_key": norms,
+                "scrubbed_text": scrubbed,
+            }
+        )
 
-    return fn
+    m = model_kernel(F.when(F.col("heur_reason").isNull(), F.col("text")))
+    return heur.select(
+        *keep,
+        F.coalesce(F.col("heur_reason"), m["reason"]).alias("reason0"),
+        *[m[c].alias(c) for c in ("lang", "ppl_bucket", "norm_key", "scrubbed_text")],
+    )
 
 
 def run_pipeline(
@@ -348,23 +350,7 @@ def run_pipeline(
 
     # ONE linear dataflow: every row flows scan -> heuristics -> model UDF
     # (passthrough for heuristic rejects) -> dedup window -> projection.
-    # No filtered branches + union: each branch would re-execute the whole
-    # upstream (measured 2x heuristics + 2x model on the old shape).
-    bc = spark.sparkContext.broadcast(get_artifacts())
-    # Rejects pass through the UDF but their text is never read there
-    # (only heuristic survivors are scored/scrubbed), so null it out BEFORE
-    # the exchange to Python: heuristic-rejected rows then cost zero Arrow
-    # string bytes and zero PyObject materialization. On this sandbox the
-    # python-side allocation churn is the scaling bottleneck of the whole
-    # pipeline (standalone numpy kernels scale at the host ceiling; the
-    # same kernels behind per-batch pandas string materialization do not).
-    model_in = heur.select(
-        "conv_id",
-        "turn_idx",
-        F.when(F.col("heur_reason").isNull(), F.col("text")).alias("text"),
-        "heur_reason",
-    )
-    scored = model_in.mapInPandas(_model_stage_fn(bc), schema=_MODEL_SCHEMA)
+    scored = model_stage(spark, heur, "conv_id", "turn_idx")
 
     # dedup: deterministic "first" = min (conv_id, turn_idx) per norm_key.
     persisted: list[DataFrame] = []

@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..artifacts import get_artifacts
-from ..pipeline import _MODEL_SCHEMA, _model_stage_fn, heuristic_features, heuristic_reason_col
+from ..pipeline import heuristic_features, heuristic_reason_col, model_stage
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -50,24 +49,8 @@ def _scored_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     heur = feats.withColumn("conv_mean_words", F.lit(1e9)).withColumn(
         "heur_reason", heuristic_reason_col()
     )
-    bc = spark.sparkContext.broadcast(get_artifacts())
-    scored_schema = T.StructType(
-        _MODEL_SCHEMA.fields + [T.StructField("ts", T.TimestampType())]
-    )
-
-    base = _model_stage_fn(bc)
-
-    def fn(batches):
-        # carry ts through the model stage for watermarking downstream
-        for pdf in batches:
-            ts = pdf["ts"]
-            for out in base(iter([pdf])):
-                out["ts"] = ts.reset_index(drop=True)
-                yield out
-
-    return heur.select("conv_id", "turn_idx", "ts", "text", "heur_reason").mapInPandas(
-        fn, schema=scored_schema
-    )
+    # ts stays in the JVM row for watermarking downstream
+    return model_stage(spark, heur, "conv_id", "turn_idx", "ts")
 
 
 def kept_stream(spark: SparkSession, src_dir: str) -> DataFrame:

@@ -7,7 +7,7 @@ import pytest
 def spark():
     from fineweb_legal_spark.session import get_spark
 
-    s = get_spark(master="local[8]", app_name="fineweb_legal_spark_tests")
+    s = get_spark(app_name="fineweb_legal_spark_tests")
     yield s
 
 

@@ -86,3 +86,147 @@ def test_ppl_bucket_clamps():
     a = build_artifacts()
     assert a.ppl_bucket(0.0) == 0
     assert a.ppl_bucket(1e9) == spec.PPL_BUCKET_MAX
+
+
+# --- reference twin of the pre-refactor scorers --------------------------
+# The per-language gather, argmax and perplexity code each scorer carried
+# before the one kernel (artifacts.trigram_logprob_sums) replaced them,
+# kept verbatim as the reference the kernel must match bit for bit.
+
+
+def _twin_logprob_table(c: np.ndarray) -> np.ndarray:
+    from fineweb_legal_spark.artifacts import _HASH_SLOTS
+
+    return np.log((c + 0.5) / (c.sum() + 0.5 * _HASH_SLOTS))
+
+
+def _twin_langid(texts, tables, langs, fallback, prefix):
+    from fineweb_legal_spark.artifacts import _batch_trigrams
+
+    h, starts, counts = _batch_trigrams(texts, prefix)
+    out = [fallback] * len(texts)
+    if h.size == 0:
+        return out
+    sums = np.empty((len(langs), starts.size))
+    for i in range(len(langs)):
+        sums[i] = np.add.reduceat(tables[i][h], starts)
+    best = np.argmax(sums, axis=0)
+    j = 0
+    for i, c in enumerate(counts):
+        if c > 0:
+            out[i] = langs[int(best[j])]
+            j += 1
+    return out
+
+
+def _twin_perplexity(texts, table, prefix):
+    from fineweb_legal_spark.artifacts import _batch_trigrams
+
+    h, starts, counts = _batch_trigrams(texts, prefix)
+    out = np.ones(len(texts), dtype=np.float64)
+    if h.size == 0:
+        return out
+    sums = np.add.reduceat(table[h], starts)
+    nz = counts[counts > 0]
+    out[counts > 0] = np.exp(-(sums / nz))
+    return out
+
+
+def _twin_logw(texts, table, prefix):
+    from fineweb_legal_spark.artifacts import _batch_trigrams
+
+    h, starts, counts = _batch_trigrams(texts, prefix)
+    logw = np.zeros(len(texts), dtype=np.float64)
+    if h.size:
+        logw[counts > 0] = np.add.reduceat(table[h], starts)
+    return logw
+
+
+def _random_texts(seed: int, n: int) -> list[str | None]:
+    """None, "", sub-trigram, longer than either prefix, mixed case,
+    accented, CJK, non-BMP (emoji, math letters) and newlines."""
+    import random
+
+    rng = random.Random(seed)
+    alphabet = "abcdefghijklmnop XYZ éèüß 漢字法 \n\t🙂𝔘𝔙 .,;"
+    words = [s for s in LANG_SENTENCES["en"][0].split()] + ["der", "el", "les"]
+    out: list[str | None] = [None, "", "a", "ab", "abc", "🙂🙂", "🙂🙂🙂"]
+    for _ in range(n):
+        k = rng.choice([0, 1, 2, 3, 5, 40, 300, 1200, 2500])
+        if rng.random() < 0.5:
+            t = "".join(rng.choice(alphabet) for _ in range(k))
+        else:
+            t = " ".join(rng.choice(words) for _ in range(k // 4))
+        out.append(None if rng.random() < 0.05 else t)
+    rng.shuffle(out)
+    return out
+
+
+def test_kernel_matches_reference_twin_bit_for_bit():
+    """Language-ID, perplexity and the DSIR log-weight from the one
+    kernel == the pre-refactor per-scorer code, exactly (==, not
+    approx), for the embedded tables and for a trained table; and the
+    build_artifacts() tables == the twin's smoothing."""
+    from fineweb_legal_spark.artifacts import (
+        _HASH_SLOTS,
+        _batch_trigrams,
+        _counts_for,
+        logprob_table,
+        perplexities,
+        predict_langs,
+        trigram_logprob_sums,
+    )
+    from fineweb_legal_spark.operators.lm import logprob_table as lm_table
+
+    assert lm_table is logprob_table
+    a = build_artifacts()
+    twin_lid = np.stack(
+        [_twin_logprob_table(_counts_for(LANG_SENTENCES[lg])) for lg in a.langs]
+    )
+    assert np.array_equal(a.langid_logprob, twin_lid)
+    assert np.array_equal(
+        a.ppl_logprob, _twin_logprob_table(_counts_for(LANG_SENTENCES["en"]))
+    )
+
+    texts = _random_texts(7, 600)
+    filled = ["" if t is None else t for t in texts]
+    present = [t for t in texts if t is not None]
+    lp, pp = spec.LANGID_PREFIX_CHARS, spec.PPL_PREFIX_CHARS
+
+    # embedded tables, through the ModelArtifacts API the oracle uses
+    assert a.predict_lang_batch(present) == _twin_langid(
+        present, a.langid_logprob, a.langs, spec.LANGID_KEEP_LANG, lp
+    )
+    assert np.array_equal(
+        a.perplexity_batch(present), _twin_perplexity(present, a.ppl_logprob, pp)
+    )
+
+    # a trained table: three "languages" fitted on disjoint random texts,
+    # integer counts smoothed by both formulas
+    train = [t for t in _random_texts(8, 90) if t]
+    counts = [
+        np.bincount(_batch_trigrams(train[k::3], pp)[0], minlength=_HASH_SLOTS)
+        for k in range(3)
+    ]
+    trained = np.stack([logprob_table(c) for c in counts])
+    assert np.array_equal(
+        trained, np.stack([_twin_logprob_table(c.astype(np.float64)) for c in counts])
+    )
+
+    for tables, langs in ((a.langid_logprob, a.langs), (trained, ("x", "y", "z"))):
+        got = predict_langs(texts, tables, langs, langs[-1], lp)
+        assert got.tolist() == _twin_langid(filled, tables, langs, langs[-1], lp)
+        for table in tables:
+            assert np.array_equal(
+                perplexities(texts, table, pp), _twin_perplexity(filled, table, pp)
+            )
+            sums, n = trigram_logprob_sums(texts, (table,), pp)
+            logw = np.zeros(n.size)
+            logw[n > 0] = sums[0]
+            assert np.array_equal(logw, _twin_logw(filled, table, pp))
+    # the DSIR table is a log-prob difference
+    diff = trained[0] - trained[1]
+    sums, n = trigram_logprob_sums(texts, (diff,), pp)
+    logw = np.zeros(n.size)
+    logw[n > 0] = sums[0]
+    assert np.array_equal(logw, _twin_logw(filled, diff, pp))

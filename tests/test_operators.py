@@ -1649,6 +1649,23 @@ def test_filter_repetition_python_parity_and_plan(spark):
     assert {v[:4] for v in want.values() if v} == {"top_", "dup_"}
 
 
+def _one_text_kernel(frame, kernel: str) -> str:
+    """Pin one Python boundary: exactly one ArrowEvalPython, no
+    MapInPandas, one call of ``kernel``, and the text column as its only
+    argument (no other column crosses into Python). Returns the plan."""
+    import re
+
+    from fineweb_legal_spark.session import explain_formatted
+
+    plan = explain_formatted(frame)
+    assert plan.count(") ArrowEvalPython") == 1, plan
+    assert ") MapInPandas" not in plan, plan
+    assert re.findall(rf"{kernel}\((.*?)\)#", plan) == [
+        re.search(r"\btext#\d+", plan).group(0)
+    ], plan
+    return plan
+
+
 def test_train_trigram_lm_exact_and_score(spark, tmp_path):
     """Distributed trigram counting is EXACTLY the single-process count
     (integer partials, order-free), the smoothed table matches
@@ -1708,11 +1725,7 @@ def test_train_trigram_lm_exact_and_score(spark, tmp_path):
         ["doc_id", "text"],
     )
     out = score_perplexity(spark, test, table)
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = _one_text_kernel(out, "perplexity_kernel")
     assert ") Exchange" not in plan, plan
     ppl = {r["doc_id"]: r["ppl"] for r in out.collect()}
     assert ppl[1] < ppl[2]
@@ -1753,13 +1766,54 @@ def test_score_langid_trained_tables(spark):
         ],
         ["doc_id", "text"],
     )
-    got = {
-        r["doc_id"]: r["pred_lang"]
-        for r in score_langid(spark, test, counts).collect()
-    }
+    out = score_langid(spark, test, counts)
+    _one_text_kernel(out, "langid_kernel")
+    got = {r["doc_id"]: r["pred_lang"] for r in out.collect()}
     assert got[1] == "en" and got[2] == "de"
     assert got[3] is None and got[4] == "de"  # alphabetical fallback
 
+
+def test_trigram_scorers_pass_int64_columns_through_unchanged(spark):
+    """A bigint column holding null and +-(2^53 + 1) comes back exact from
+    every trigram scorer: only the text crosses into Python, so no other
+    column can round-trip through a float64 pandas column. The scores
+    equal the artifact's batch kernels on the same texts."""
+    import numpy as np
+
+    from fineweb_legal_spark import spec
+    from fineweb_legal_spark.artifacts import (
+        _HASH_SLOTS,
+        _batch_trigrams,
+        get_artifacts,
+    )
+    from fineweb_legal_spark.corpus import LANG_SENTENCES
+    from fineweb_legal_spark.operators.lm import score_langid, score_perplexity
+    from fineweb_legal_spark.operators.textql import predict_language
+
+    big = 2**53 + 1
+    texts = ["the court considered the statute", None, "das gericht hat"]
+    rows = [(1, big, texts[0]), (2, None, texts[1]), (3, -big, texts[2])]
+    df = spark.createDataFrame(rows, "doc_id int, n bigint, text string").coalesce(1)
+    want_n = {1: big, 2: None, 3: -big}
+    counts = {
+        lg: np.bincount(
+            _batch_trigrams(list(LANG_SENTENCES[lg]), spec.LANGID_PREFIX_CHARS)[0],
+            minlength=_HASH_SLOTS,
+        )
+        for lg in ("de", "en")
+    }
+    arts = get_artifacts()
+    ppl = arts.perplexity_batch([texts[0], texts[2]])
+    lang = arts.predict_lang_batch([texts[0], texts[2]])
+    for frame, col, want in (
+        (score_perplexity(spark, df, arts.ppl_logprob), "ppl", ppl),
+        (score_langid(spark, df, counts), "pred_lang", ["en", "de"]),
+        (predict_language(spark, df, "doc_id", keep_cols=("n",)), "pred_lang", lang),
+    ):
+        got = {r["doc_id"]: (r["n"], r[col]) for r in frame.collect()}
+        assert got == {
+            1: (want_n[1], want[0]), 2: (None, None), 3: (want_n[3], want[1])
+        }, col
 
 def test_line_signal_regex_parity_randomized(spark):
     """Spark's whole-text (?m) Java-regex line signals == a pure-Python

@@ -15,6 +15,14 @@ SF_DIR = "/root/testdata/sf0.01"
 from fineweb_legal_spark.session import explain_formatted as _plan
 
 
+def _assert_one_arrow_kernel(plan: str, call: str) -> None:
+    """One Python boundary: exactly one ArrowEvalPython node, no
+    MapInPandas, and one call of the kernel in it."""
+    assert plan.count(") ArrowEvalPython") == 1, plan
+    assert ") MapInPandas" not in plan, plan
+    assert plan.count(call) == 1, plan
+
+
 @pytest.fixture(scope="module")
 def queries():
     import __spark_entry__ as entrymod
@@ -55,14 +63,16 @@ def test_cosine_queries_have_no_lambda_hofs(spark, queries):
 def test_pipeline_filter_stage_is_whole_stage_codegen(spark, t1_transcripts):
     from fineweb_legal_spark.pipeline import run_pipeline
 
-    plan = _plan(run_pipeline(spark, t1_transcripts))
-    # the only Python boundary is the single Arrow-batched model-stage
-    # mapInPandas node: no row-at-a-time Python UDF (BatchEvalPython), no
-    # grouped-pandas shuffle. (AQE shows isFinalPlan=false pre-execution,
+    # the only Python boundary is the single scalar Arrow UDF of the model
+    # stage, called once per row for both dedup strategies: no
+    # row-at-a-time Python UDF (BatchEvalPython), no grouped-pandas
+    # shuffle, no mapInPandas. (AQE shows isFinalPlan=false pre-execution,
     # so codegen-id annotations are not visible here.)
-    assert ") BatchEvalPython" not in plan
-    assert ") FlatMapGroupsInPandas" not in plan
-    assert plan.count(") MapInPandas") == 1
+    for slim in (True, False):
+        plan = _plan(run_pipeline(spark, t1_transcripts, slim_dedup=slim))
+        assert ") BatchEvalPython" not in plan
+        assert ") FlatMapGroupsInPandas" not in plan
+        _assert_one_arrow_kernel(plan, "model_kernel(")
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
@@ -183,7 +193,7 @@ def test_text_analysis_wide_branch_is_one_pass_no_join(spark):
     from __spark_entry__ import _text_analysis_wide
 
     plan = _plan(_text_analysis_wide(spark, SF_DIR))
-    assert plan.count(") MapInPandas") == 1
+    _assert_one_arrow_kernel(plan, "langid_kernel(")
     for node in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
         assert node not in plan, node
 
@@ -191,12 +201,12 @@ def test_text_analysis_wide_branch_is_one_pass_no_join(spark):
 def test_text_analysis_full_query_single_arrow_stage_no_cartesian(spark, queries):
     # the KN-perplexity branch joined on top of the wide branch is
     # JVM-native: it must add ZERO Python boundaries (still exactly one
-    # MapInPandas — the langid UDF), no row-at-a-time Python UDF, and its
+    # ArrowEvalPython — the langid UDF), no row-at-a-time Python UDF, and its
     # joins must all be key equi-joins (never a cartesian). The doc_id
     # join-back itself is inherent — an LM trained on the corpus cannot
     # be a row-local projection (see docs/PLANS.md `text_analysis_docs`).
     plan = _plan(queries["text_analysis_docs"](spark, SF_DIR))
-    assert plan.count(") MapInPandas") == 1
+    _assert_one_arrow_kernel(plan, "langid_kernel(")
     assert "BatchEvalPython" not in plan
     assert ") CartesianProduct" not in plan
 

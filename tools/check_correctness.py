@@ -47,7 +47,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

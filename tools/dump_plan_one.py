@@ -18,7 +18,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from fineweb_legal_spark.session import explain_formatted, get_spark
 
-    spark = get_spark(master="local[8]", app_name="dump_plan_one")
+    spark = get_spark(app_name="dump_plan_one")
     qs = entrymod.queries()
     fn = qs.get(name) or getattr(entrymod, f"q_{name}")
     df = fn(spark, sf_dir)

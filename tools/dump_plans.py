@@ -23,7 +23,8 @@ SF_DIR = "/root/testdata/sf0.01"
 PICKS = {
     "pipeline_verdicts": (
         "The flagship: scan -> codegen'd heuristics -> broadcast conv-stats "
-        "join -> ONE Arrow model stage -> persisted scored frame -> SLIM "
+        "join -> ONE Arrow model stage (a scalar Arrow UDF: only the "
+        "survivors' text crosses into Python) -> persisted scored frame -> SLIM "
         "dedup (round 3): the norm_key hash exchange carries only "
         "(norm_key, conv_id, turn_idx) — never text — and loser decisions "
         "broadcast back onto the cached frame. Shuffle inventory (7): the "
@@ -125,12 +126,12 @@ PICKS = {
     ),
     "text_analysis_docs": (
         "Round-4 consolidation shape: langid + quality + fingerprint + "
-        "token counts in ONE scan — the native projections compute below "
-        "the Arrow langid UDF, which passes the scalar columns through "
-        "(keep_cols); plus the interpolated-KN bigram perplexity "
+        "token counts in ONE scan — the native projections compute beside "
+        "the scalar Arrow langid UDF, which reads the text column alone "
+        "(keep_cols stay in the JVM row); plus the interpolated-KN bigram perplexity "
         "(operators/knlm.py), whose aggregation+join-back is inherent: "
         "an LM trained on the corpus cannot be a row-local projection. "
-        "Audit points: the wide branch stays one MapInPandas with no "
+        "Audit points: the wide branch stays one ArrowEvalPython with no "
         "doc_id join-back; the KN branch's exchanges are all on "
         "word/bigram KEYS (map-side-combinable counts over the "
         "vocab-capped type frame, ≤V²+V rows) plus the final doc_id "
@@ -340,6 +341,8 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from fineweb_legal_spark.session import get_spark
 
+    # a fixed master: the committed docs/PLANS.md text (exchange widths,
+    # partition counts) must not change with the host that regenerates it
     spark = get_spark(master="local[8]", app_name="dump_plans")
     qs = entrymod.queries()
     out = [

@@ -67,7 +67,7 @@ def main() -> None:
     )
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", app_name="eval_ann_recall")
+    spark = get_spark(app_name="eval_ann_recall")
     emb = spark.read.parquet(path)
     n_rows = emb.count()
     dim = len(emb.select("embedding").first()[0])

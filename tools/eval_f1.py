@@ -20,7 +20,7 @@ def main() -> int:
     from fineweb_legal_spark.session import get_spark
     from fineweb_legal_spark.validation import keep_drop_f1
 
-    spark = get_spark(master="local[8]", app_name="eval_f1")
+    spark = get_spark(app_name="eval_f1")
     report = {}
     for corpus in ("t1", "t2"):
         pred = run_pipeline(

@@ -29,7 +29,7 @@ def main() -> None:
     from fineweb_legal_spark.operators.similarity import train_ivf_centroids
     from fineweb_legal_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", app_name="train_ivf")
+    spark = get_spark(app_name="train_ivf")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = train_ivf_centroids(emb, dim=dim, n_cells=n_cells)
     out = REPO / "data" / "golden" / f"ivf_trained_dim{dim}_c{n_cells}.parquet"
