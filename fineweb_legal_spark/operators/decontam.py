@@ -82,10 +82,12 @@ def ascii_words(text: str) -> list[str]:
 
 def word_hashes(words: list[str]) -> np.ndarray:
     """One crc32 per word (uint64) — the per-word half of the rolling
-    gram kernel, factored out so multi-n callers (textql's
-    repetition_profile: n in 2..10) hash each word ONCE instead of once
-    per n (round 6: the crc32 loop was ~1/3 of the kernel and was being
-    re-run 6-9x per document)."""
+    gram kernel, factored out so multi-n callers hash each word ONCE
+    instead of once per n (round 6: the crc32 loop was ~1/3 of the
+    repetition kernel and was being re-run 6-9x per document). textql's
+    repetition_profile passes it each Arrow batch's DISTINCT words and
+    builds its gram hashes over the whole batch with the same Horner
+    combine as :func:`gram_hashes_from_word_hashes`."""
     return np.fromiter(
         (zlib.crc32(w.encode("utf-8")) for w in words),
         dtype=np.uint64,

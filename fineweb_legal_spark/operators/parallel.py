@@ -3,10 +3,11 @@
 AQE's partition coalescing sizes post-shuffle partitions by BYTES
 (advisoryPartitionSizeInBytes / minPartitionSize), which is right for
 JVM operators but wrong for Python group kernels: a 3 MB conv_id shuffle
-coalesces to 1-2 partitions and the whole applyInPandas stage serializes
-onto 1-2 cores while 30 sit idle (round 6, measured: pseudonymize_pii
-2.70 s distributed vs 1.79 s single-core pure-Python — the cluster was
-adding overhead, not parallelism). Work-per-byte in these stages is
+coalesces to 1-2 partitions and the whole Python stage after it
+serializes onto 1-2 cores while 30 sit idle (round 6, measured on
+pseudonymize_pii, then an applyInPandas stage: 2.70 s distributed vs
+1.79 s single-core pure-Python — the cluster was adding overhead, not
+parallelism). Work-per-byte in these stages is
 orders of magnitude higher than AQE's byte model assumes, so the
 exchange width must come from the compute budget, not the byte count.
 
@@ -39,8 +40,9 @@ def repartition_for_group_kernel(df: DataFrame, *cols: str) -> DataFrame:
 
     A user-specified repartition is not AQE-coalescible, and a groupBy /
     applyInPandas on the same keys reuses its exchange (same hash
-    partitioning, same width), so the plan still has exactly ONE shuffle
-    — just one whose width feeds every core.
+    partitioning, same width), as does a ``sortWithinPartitions`` +
+    ``mapInArrow`` pass over it, so the plan still has exactly ONE
+    shuffle — just one whose width feeds every core.
     """
     return df.repartition(group_parallelism(df), *cols)
 

@@ -39,11 +39,14 @@ Scale shape (10^12 turns): numbering is per-conversation cross-turn
 state, so the kernel needs every turn of a conversation co-located —
 ONE hash exchange on conv_id (the partitioning the pipeline's
 conv-stats stage already uses; on a conv_id-bucketed Iceberg table it
-becomes a storage-partitioned zero-exchange pass), then one
-Arrow-batched applyInPandas whose per-group work is linear in
-characters. The giant-conversation trade is the documented one shared
-with repairs/packing: a 10^8-turn conversation lands on one task but
-costs O(chars); the skew-robust alternative (extract match stream ->
+becomes a storage-partitioned zero-exchange pass), a sort of each
+partition on (conv_id, turn_idx), then one mapInArrow pass that walks
+each Arrow batch's runs of one conv_id and calls the kernel once per
+conversation: linear in characters, with no pandas frame built per
+conversation (applyInPandas built one per group, and that glue cost
+more than the kernel). The giant-conversation trade is the documented
+one shared with repairs/packing: a 10^8-turn conversation lands on one
+task but costs O(chars); the skew-robust alternative (extract match stream ->
 window-number first appearances -> join mapping back -> rebuild) costs
 two extra text-free shuffles plus a per-turn rebuild join and only wins
 when single conversations exceed a task's memory — not worth the
@@ -55,7 +58,9 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -216,9 +221,10 @@ def pseudonymize_pii(
 ) -> DataFrame:
     """(conv_id, turn_idx, role, text, n_pseudo) with text rewritten and
     n_pseudo = replacements made in that turn. Deterministic under any
-    input partitioning/order: the kernel sorts each group by turn_idx.
-    ``extended=True`` adds the IP-address and Luhn-validated credit-card
-    stages (opt-in; the default is strict reference-scrub parity)."""
+    input partitioning/order: each partition is sorted by (conv_id,
+    turn_idx) before the kernel reads it. ``extended=True`` adds the
+    IP-address and Luhn-validated credit-card stages (opt-in; the
+    default is strict reference-scrub parity)."""
     schema = T.StructType(
         [
             T.StructField("conv_id", df.schema[conv_col].dataType),
@@ -229,21 +235,49 @@ def pseudonymize_pii(
         ]
     )
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="stable")
-        texts, counts = pseudonymize_conversation(
-            [None if pd.isna(t) else t for t in pdf["text"]],
-            extended=extended,
-        )
-        return pd.DataFrame(
+    def _rewrite(t: pa.Table, heads: list[int]) -> list[pa.RecordBatch]:
+        """Pseudonymize every conversation of ``t``, whose runs of one
+        conv_id start at ``heads``; the other columns pass through."""
+        turns = t["text"].to_pylist()
+        texts: list[str | None] = []
+        counts: list[int] = []
+        for a, b in zip(heads, heads[1:] + [t.num_rows]):
+            x, c = pseudonymize_conversation(turns[a:b], extended=extended)
+            texts += x
+            counts += c
+        return pa.table(
             {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "turn_idx": pdf["turn_idx"].to_numpy(),
-                "role": pdf["role"].to_numpy(),
-                "text": texts,
-                "n_pseudo": pd.array(counts, dtype="int64"),
+                "conv_id": t["conv_id"],
+                "turn_idx": t["turn_idx"],
+                "role": t["role"],
+                "text": pa.array(texts, t["text"].type),
+                "n_pseudo": pa.array(counts, pa.int64()),
             }
-        )
+        ).to_batches()
+
+    def _stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # a conversation may span Arrow batches: the trailing run of each
+        # batch waits for the next one
+        carry = None
+        for batch in batches:
+            t = pa.Table.from_batches([batch])
+            if carry is not None:
+                t = pa.concat_tables([carry, t])
+            if not t.num_rows:
+                continue
+            ids = t["conv_id"]
+            nxt, prev = ids.slice(1), ids.slice(0, t.num_rows - 1)
+            # a null conv_id is one conversation, as in groupBy
+            same = pc.or_(
+                pc.fill_null(pc.equal(nxt, prev), False),
+                pc.and_(pc.is_null(nxt), pc.is_null(prev)),
+            )
+            heads = [0] + (np.flatnonzero(~same.to_numpy()) + 1).tolist()
+            carry = t.slice(heads[-1])
+            if len(heads) > 1:
+                yield from _rewrite(t.slice(0, heads[-1]), heads[:-1])
+        if carry is not None and carry.num_rows:
+            yield from _rewrite(carry, [0])
 
     from .parallel import repartition_for_group_kernel
 
@@ -255,7 +289,13 @@ def pseudonymize_pii(
     )
     # width-pinned exchange (operators/parallel.py): AQE would coalesce
     # this few-MB shuffle to 1-2 partitions and serialize the Python
-    # kernel; the groupBy below reuses the same hash partitioning, so
-    # the plan still has exactly one shuffle
-    slim = repartition_for_group_kernel(slim, "conv_id")
-    return slim.groupBy("conv_id").applyInPandas(_apply, schema=schema)
+    # kernel. Sorting each partition by (conv_id, turn_idx) lays every
+    # conversation out as one run in turn order (a null turn_idx last),
+    # so one mapInArrow pass rewrites a partition without building a
+    # frame per conversation, and the other columns pass through as
+    # Arrow arrays (a pandas batch would hold a bigint conv_id as
+    # float64 whenever it also holds a null one)
+    slim = repartition_for_group_kernel(slim, "conv_id").sortWithinPartitions(
+        "conv_id", F.col("turn_idx").asc_nulls_last()
+    )
+    return slim.mapInArrow(_stream, schema=schema)

@@ -84,9 +84,9 @@ def repetition_profile(
     ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ):
-    """The repetition family's ONE per-document kernel (Gopher n-gram
-    rules, Rae et al. 2021 §A1.1, and the FineWeb duplicated-line rule,
-    Penedo et al. 2024 §3.6): a scalar Arrow ``pandas_udf`` called as
+    """The repetition family's ONE kernel (Gopher n-gram rules, Rae et
+    al. 2021 §A1.1, and the FineWeb duplicated-line rule, Penedo et al.
+    2024 §3.6): a scalar Arrow ``pandas_udf`` called as
     ``kernel(text, gate)``, returning a struct with
 
     - ``top_gram_{n}`` / ``top_cnt_{n}`` / ``top_cov_{n}`` for n in
@@ -114,12 +114,12 @@ def repetition_profile(
 
     Words are the dedup normalization (lowercase, ASCII-whitespace
     tokens — the boundary of decontam/spandedup and the DuckDB oracle).
-    Per document: one ``ascii_words``, one crc32 per word
-    (``decontam.word_hashes``) shared by every n, Horner gram hashes and
-    one ``np.unique`` per n; the top gram's string is read back from its
-    first occurrence, and the dup coverage is a diff-array cumsum —
-    O(words) numpy per (doc, n), no Python-level gram loop. Lines are
-    counted with one ``Counter`` per document.
+    The n-gram fields are computed a batch at a time by
+    :func:`_gram_profile`: the gated documents' words are flattened into
+    one stream (cut into slices of about ``_GRAM_SLICE_WORDS`` words),
+    and per n one sort groups every (document, gram) pair of the slice
+    at once, so the numpy call overhead is paid per (slice, n), not per
+    (document, n). Lines are counted with one ``Counter`` per document.
 
     Gram identity is the 64-bit gram hash, not the string: two different
     grams of one document colliding would merge their counts. The
@@ -132,10 +132,9 @@ def repetition_profile(
     """
     from collections import Counter
 
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from .decontam import ascii_words, gram_hashes_from_word_hashes, word_hashes
+    from .decontam import ascii_words
 
     ns = tuple(sorted(ns))
     dup_ns = tuple(sorted(dup_ns))
@@ -155,6 +154,9 @@ def repetition_profile(
     @pandas_udf(ddl)
     def repetition_kernel(texts: pd.Series, gates: pd.Series) -> pd.DataFrame:
         out: dict[str, list] = {c: [None] * len(texts) for c, _ in fields}
+        rows: list[int] = []
+        nw: list[int] = []
+        words: list[str] = []
         for i, (text, gate) in enumerate(zip(texts, gates)):
             if text is None:
                 continue
@@ -166,47 +168,117 @@ def repetition_profile(
             w = ascii_words(text) if gate else []
             if not w:
                 continue
-            wl = np.fromiter((len(x) for x in w), dtype=np.int64, count=len(w))
-            cum = np.concatenate(([0], np.cumsum(wl)))
-            wh = word_hashes(w)  # once across ns AND dup_ns
-            for n in ns:
-                if len(w) < n:
-                    break
-                g = gram_hashes_from_word_hashes(wh, n)
-                _, first, cnt = np.unique(
-                    g, return_index=True, return_counts=True
-                )
-                # gram-string length at the first occurrence: window word
-                # chars + (n-1) separators
-                cov = cnt * (cum[first + n] - cum[first] + (n - 1))
-                mx = cov.max()
-                best = max(
-                    np.nonzero(cov == mx)[0],
-                    key=lambda u: " ".join(w[first[u] : first[u] + n]),
-                )
-                out[f"top_gram_{n}"][i] = " ".join(
-                    w[first[best] : first[best] + n]
-                )
-                out[f"top_cnt_{n}"][i] = int(cnt[best])
-                out[f"top_cov_{n}"][i] = int(mx)
-            for n in dup_ns:
-                if len(w) < n:
-                    break
-                g = gram_hashes_from_word_hashes(wh, n)
-                _, inv, cnt = np.unique(
-                    g, return_inverse=True, return_counts=True
-                )
-                starts = np.nonzero(cnt[inv] >= 2)[0]
-                d = np.zeros(len(w) + 1, dtype=np.int64)
-                np.add.at(d, starts, 1)
-                np.add.at(d, starts + n, -1)
-                covered = np.cumsum(d[:-1]) > 0
-                out[f"dup_frac_{n}"][i] = float(wl[covered].sum() / cum[-1])
+            rows.append(i)
+            nw.append(len(w))
+            words += w
+            if len(words) >= _GRAM_SLICE_WORDS:
+                _gram_profile(out, rows, nw, words, ns, dup_ns)
+                rows, nw, words = [], [], []
+        if words:
+            _gram_profile(out, rows, nw, words, ns, dup_ns)
         return pd.DataFrame(
             {c: pd.Series(v, dtype=object) for c, v in out.items()}
         )
 
     return repetition_kernel
+
+
+# Words per numpy pass of the repetition kernel. A batch's gated word
+# stream is cut after the document that reaches this size, so the pass
+# peaks at ~3 MB however large the Arrow batch is (11 MB at 64k words,
+# at the same speed); Python workers keep their peak heap
+# (session.get_spark sets MALLOC_TRIM_THRESHOLD_=-1).
+_GRAM_SLICE_WORDS = 1 << 14
+
+
+def _gram_profile(
+    out: dict[str, list],
+    rows: list[int],
+    nw: list[int],
+    words: list[str],
+    ns: tuple[int, ...],
+    dup_ns: tuple[int, ...],
+) -> None:
+    """Fill ``out``'s n-gram fields for a slice of documents in one numpy
+    pass: ``rows`` are the documents' batch rows, ``nw`` their word counts
+    and ``words`` their words concatenated in that order.
+
+    Each distinct word is crc32-hashed once (``decontam.word_hashes``),
+    gram hashes are ``decontam``'s Horner combine over the flat stream,
+    and only starts whose gram ends inside its own document are kept.
+    Per n, the hashes become exact dense ids and one argsort of
+    ``(document << 32) | id`` makes every (document, gram) group
+    contiguous: group sizes are the counts, the group's least start its
+    first occurrence, and each document's top gram its highest-covering
+    group, ties to the greatest gram string. Dup coverage is one +1/-1
+    diff array over the whole stream, summed per document with
+    ``np.add.reduceat``."""
+    import numpy as np
+
+    from .decontam import gram_hashes_from_word_hashes, word_hashes
+
+    nw = np.asarray(nw, dtype=np.int64)
+    n_words = len(words)
+    start = np.zeros(len(nw), dtype=np.int64)
+    np.cumsum(nw[:-1], out=start[1:])
+    doc = np.repeat(np.arange(len(nw)), nw)
+    # words from each position to its document's end, itself included
+    left = np.repeat(start + nw, nw) - np.arange(n_words)
+    wl = np.fromiter(map(len, words), dtype=np.int64, count=n_words)
+    cum = np.zeros(n_words + 1, dtype=np.int64)
+    np.cumsum(wl, out=cum[1:])
+    codes, distinct = pd.factorize(np.asarray(words, dtype=object))
+    wh = word_hashes(distinct)[codes]
+    del codes, distinct
+
+    def one_n(n: int) -> None:
+        # a function per n, so its temporaries are freed before the next
+        h = gram_hashes_from_word_hashes(wh, n)
+        s = np.flatnonzero(left[: len(h)] >= n)  # in-document gram starts
+        if not len(s):
+            return
+        # documents in order, each document's grams contiguous; both
+        # halves fit 32 bits (a slice holds far fewer than 2^31 words)
+        key = np.unique(h[s], return_inverse=True)[1].astype(np.int64)
+        key |= doc[s] << 32
+        order = np.argsort(key)
+        key = key[order]
+        head = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1])))
+        gdoc = key[head] >> 32
+        del key
+        cnt = np.diff(np.append(head, len(s)))
+        first = np.minimum.reduceat(s[order], head)
+        if n in ns:
+            # gram-string length at the first occurrence: window word
+            # chars + (n-1) separators
+            cov = cnt * (cum[first + n] - cum[first] + (n - 1))
+            dh = np.flatnonzero(np.concatenate(([True], gdoc[1:] != gdoc[:-1])))
+            best = np.repeat(
+                np.maximum.reduceat(cov, dh), np.diff(np.append(dh, len(head)))
+            )
+            win: dict[int, tuple[str, int]] = {}
+            for k in np.flatnonzero(cov == best).tolist():
+                j = int(gdoc[k])
+                f = int(first[k])
+                gram = " ".join(words[f : f + n])
+                if j not in win or gram > win[j][0]:
+                    win[j] = (gram, k)
+            for j, (gram, k) in win.items():
+                out[f"top_gram_{n}"][rows[j]] = gram
+                out[f"top_cnt_{n}"][rows[j]] = int(cnt[k])
+                out[f"top_cov_{n}"][rows[j]] = int(cov[k])
+        if n in dup_ns:
+            rep = s[order[np.repeat(cnt >= 2, cnt)]]  # repeated grams' starts
+            diff = np.bincount(rep, minlength=n_words + 1)
+            diff -= np.bincount(rep + n, minlength=n_words + 1)
+            covered = np.cumsum(diff[:-1]) > 0
+            frac = np.add.reduceat(wl * covered, start) / np.add.reduceat(wl, start)
+            has_n = np.flatnonzero(nw >= n)
+            for j, f in zip(has_n.tolist(), frac[has_n].tolist()):
+                out[f"dup_frac_{n}"][rows[j]] = f
+
+    for n in sorted(set(ns) | set(dup_ns)):
+        one_n(n)
 
 
 def _profile_rows(

@@ -1649,6 +1649,113 @@ def test_filter_repetition_python_parity_and_plan(spark):
     assert {v[:4] for v in want.values() if v} == {"top_", "dup_"}
 
 
+def _per_doc_repetition(texts, gates, ns, dup_ns) -> dict[str, list]:
+    """Verification twin of ``textql.repetition_profile``: the kernel's
+    former per-document body (one crc32 per word, Horner gram hashes and
+    one ``np.unique`` per (document, n)), field for field."""
+    from collections import Counter
+
+    import numpy as np
+
+    from fineweb_legal_spark.operators.decontam import (
+        ascii_words,
+        gram_hashes_from_word_hashes,
+        word_hashes,
+    )
+
+    ns, dup_ns = tuple(sorted(ns)), tuple(sorted(dup_ns))
+    cols = [f"{f}_{n}" for n in ns for f in ("top_gram", "top_cnt", "top_cov")]
+    cols += [f"dup_frac_{n}" for n in dup_ns] + ["dup_line_frac"]
+    out = {c: [None] * len(texts) for c in cols}
+    for i, (text, gate) in enumerate(zip(texts, gates)):
+        if text is None:
+            continue
+        lines = Counter(text.split("\n"))
+        line_chars = sum(len(s) * c for s, c in lines.items())
+        if line_chars:
+            dup = sum(len(s) * c for s, c in lines.items() if c > 1)
+            out["dup_line_frac"][i] = dup / line_chars
+        w = ascii_words(text) if gate else []
+        if not w:
+            continue
+        wl = np.fromiter((len(x) for x in w), dtype=np.int64, count=len(w))
+        cum = np.concatenate(([0], np.cumsum(wl)))
+        wh = word_hashes(w)
+        for n in ns:
+            if len(w) < n:
+                break
+            g = gram_hashes_from_word_hashes(wh, n)
+            _, first, cnt = np.unique(g, return_index=True, return_counts=True)
+            cov = cnt * (cum[first + n] - cum[first] + (n - 1))
+            mx = cov.max()
+            best = max(
+                np.nonzero(cov == mx)[0],
+                key=lambda u: " ".join(w[first[u] : first[u] + n]),
+            )
+            out[f"top_gram_{n}"][i] = " ".join(w[first[best] : first[best] + n])
+            out[f"top_cnt_{n}"][i] = int(cnt[best])
+            out[f"top_cov_{n}"][i] = int(mx)
+        for n in dup_ns:
+            if len(w) < n:
+                break
+            g = gram_hashes_from_word_hashes(wh, n)
+            _, inv, cnt = np.unique(g, return_inverse=True, return_counts=True)
+            starts = np.nonzero(cnt[inv] >= 2)[0]
+            d = np.zeros(len(w) + 1, dtype=np.int64)
+            np.add.at(d, starts, 1)
+            np.add.at(d, starts + n, -1)
+            covered = np.cumsum(d[:-1]) > 0
+            out[f"dup_frac_{n}"][i] = float(wl[covered].sum() / cum[-1])
+    return out
+
+
+def test_repetition_profile_batch_matches_per_doc_twin(spark, monkeypatch):
+    """The batch kernel equals its per-document twin field by field,
+    None included, over whole batches: seeded small-vocabulary docs
+    (top-coverage ties), null / empty / whitespace-only / shorter-than-n
+    text, non-ASCII words, mixed gates and 1,000 t1 transcript turns, for
+    every (ns, dup_ns) shape its callers use — with the default word
+    slice and with one so small that documents of one batch land in
+    many slices."""
+    import random
+
+    from fineweb_legal_spark.operators import textql
+
+    rng = random.Random(23)
+    vocab = ["a", "b", "ab", "the", "xx", "q", "İ", "été", "Straße", "日本"]
+    seps = [" ", " ", " ", "\t", "\n", "  ", "\n\n", "\xa0"]
+    texts = [None, "", "   ", "\n\n", "a", "a b", "a a", "x\ny\nx"]
+    for _ in range(2500):
+        toks = [rng.choice(vocab) for _ in range(rng.randint(0, 60))]
+        texts.append("".join(t + rng.choice(seps) for t in toks))
+    turns = pd.read_parquet(ensure_transcripts("t1"))["text"].head(1000)
+    texts += [None if pd.isna(t) else t for t in turns]
+    gates = [True, True, False, None] * (len(texts) // 4 + 1)
+    rng.shuffle(gates)
+    gates = gates[: len(texts)]
+
+    shapes = [
+        ((2, 3, 4), (5, 6, 7, 8, 9, 10)),
+        ((), ()),
+        ((3,), ()),
+        ((), (5,)),
+        ((1, 2), (2, 3)),
+    ]
+    for slice_words in (textql._GRAM_SLICE_WORDS, 97):
+        monkeypatch.setattr(textql, "_GRAM_SLICE_WORDS", slice_words)
+        for ns, dup_ns in shapes:
+            kernel = textql.repetition_profile(ns, dup_ns).func
+            got = kernel(
+                pd.Series(texts, dtype=object), pd.Series(gates, dtype=object)
+            )
+            want = _per_doc_repetition(texts, gates, ns, dup_ns)
+            assert list(got.columns) == list(want), (ns, dup_ns)
+            for c, col in want.items():
+                assert got[c].tolist() == col, (slice_words, ns, dup_ns, c)
+    # non-trivial corpus: repeated grams cover part of some documents
+    assert any(f not in (None, 0.0, 1.0) for f in want["dup_frac_3"])
+
+
 def _one_text_kernel(frame, kernel: str) -> str:
     """Pin one Python boundary: exactly one ArrowEvalPython, no
     MapInPandas, one call of ``kernel``, and the text column as its only
@@ -2143,6 +2250,81 @@ def test_pseudonymize_pii_stable_indices(spark):
         ("A", 5): ("v1.2.123-45-6789 and ISBN 9780306406157 stay", 0),
         ("B", 0): ("[EMAIL_1]", 1),
     }
+
+
+def test_pseudonymize_pii_stream_spans_batches(spark):
+    """With 3-row Arrow batches every multi-turn conversation spans
+    batches, so the per-partition pass must carry a conversation's
+    trailing run into the next batch. Output equals
+    pseudonymize_conversation applied per conversation in turn_idx
+    order, for a null-conv_id conversation (one conversation, as in
+    groupBy), null turns and a null turn_idx (ordered last), and bigint
+    conv_ids above 2^53 come back exact from batches that also hold the
+    null one; the plan is one MapInArrow and no FlatMapGroupsInPandas."""
+    import random
+
+    from fineweb_legal_spark.operators.pseudonymize import (
+        pseudonymize_conversation,
+        pseudonymize_pii,
+    )
+    from fineweb_legal_spark.session import explain_formatted
+
+    rng = random.Random(3)
+    pii = ["Bob@Example.COM", "bob@example.com", "a@x.org", "123-45-6789",
+           "123456789", "(555) 123-4567", "+1 555 123 4567", "hi", "ok"]
+    rows = []
+    for conv in range(40):
+        for t in range(rng.randint(1, 9)):
+            text = None if rng.random() < 0.1 else " and ".join(
+                rng.sample(pii, rng.randint(1, 3))
+            )
+            rows.append((conv, t, "user", text))
+    # the null-conv_id conversation numbers its second address 2 only if
+    # its turns are one conversation
+    null_conv = ["mail a@x.org", None, "b@y.org and a@x.org", "b@y.org",
+                 "call (555) 123-4567", "+1 555 123 4567 again", "c@z.org"]
+    rows += [(None, t, "user", text) for t, text in enumerate(null_conv)]
+    rows.append((1, None, "tool", "mail a@x.org"))
+    rng.shuffle(rows)
+
+    want = {}
+    for conv in {r[0] for r in rows}:
+        turns = sorted(
+            (r for r in rows if r[0] == conv),
+            key=lambda r: (r[1] is None, r[1] or 0),
+        )
+        texts, counts = pseudonymize_conversation([r[3] for r in turns])
+        for r, text, n in zip(turns, texts, counts):
+            want[(conv, r[1])] = (text, n)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        # bigint ids are odd values above 2^53, which float64 cannot hold
+        for conv_type, cast in (
+            ("string", str),
+            ("bigint", lambda c: 2**53 + 1 + 2 * c),
+        ):
+            df = spark.createDataFrame(
+                [(None if c is None else cast(c), *r) for c, *r in rows],
+                f"conv_id {conv_type}, turn_idx int, role string, text string",
+            ).repartition(5)
+            out = pseudonymize_pii(df)
+            plan = explain_formatted(out)
+            assert ") FlatMapGroupsInPandas" not in plan, plan
+            assert plan.count(") MapInArrow") == 1, plan
+            got = {
+                (r.conv_id, r.turn_idx): (r.text, r.n_pseudo)
+                for r in out.collect()
+            }
+            assert len(got) == len(rows)
+            assert got == {
+                (None if c is None else cast(c), t): v
+                for (c, t), v in want.items()
+            }, conv_type
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_pseudonymize_matches_scrub_coverage(spark):

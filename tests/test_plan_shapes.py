@@ -284,3 +284,13 @@ def test_bpe_word_count_is_partial_agg_single_exchange(spark):
     # column pruning reached the scan: only text is read
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
     assert "text" in read and "doc_id" not in read
+
+
+def test_transcript_repairs_pseudo_branch_adds_no_shuffle(spark, queries):
+    """The 'pseudo' branch sorts the shared conv_id partitioning and
+    streams it through one MapInArrow: the query keeps its nine hash
+    exchanges and plans no grouped-map Python node."""
+    plan = _plan(queries["transcript_repairs_t2"](spark, SF_DIR))
+    assert plan.count("Arguments: hashpartitioning(") == 9, plan
+    assert ") FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count(") MapInArrow") == 1, plan

@@ -71,10 +71,12 @@ PICKS = {
     ),
     "repetition_signals_docs": (
         "Gopher repetition family as tagged rows from ONE scan and ONE "
-        "ArrowEvalPython: the family's per-document kernel "
-        "(textql.repetition_profile, ungated here: crc32 per word, Horner "
-        "gram hashes, np.unique per n, one line Counter) returns every "
-        "signal as a struct; a row-local explode of an array of tagged "
+        "ArrowEvalPython: the family's kernel (textql.repetition_profile, "
+        "ungated here: per Arrow batch, one crc32 per distinct word, "
+        "Horner gram hashes over the flat word stream and one sort per n "
+        "grouping every (document, gram) pair; one line Counter per "
+        "document) returns every signal as a struct; a row-local "
+        "explode of an array of tagged "
         "structs emits the top_gram, dup_gram, dup_line and cascade rows "
         "(the cascade verdict is the same JVM CASE builders as "
         "document_quality_cascade below, over the same struct). No Union, "
@@ -169,7 +171,10 @@ PICKS = {
         "(ignore-nulls last_value gap window), sft (k lags of the "
         "rendered line, concat_ws — O(k) frame, never an unbounded "
         "collect_list), pref (argmax-first window, both orderings on the "
-        "same partitioning). The audit point: every branch "
+        "same partitioning), pseudo (a Sort on (conv_id, turn_idx) over "
+        "the shared conv_id exchange, then ONE MapInArrow that walks "
+        "each Arrow batch's conversation runs — no grouped-map frame per "
+        "conversation). The audit point: every branch "
         "hash-partitions on conv_id ONLY — the same key every pipeline "
         "stage uses — and text appears in no extra exchange beyond the "
         "per-conversation grouping itself."
