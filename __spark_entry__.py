@@ -37,6 +37,7 @@ from fineweb_legal_spark.datasets import (
 from fineweb_legal_spark.operators.parallel import widen
 from fineweb_legal_spark.operators.webfilter import stage_reject_counts, web_filter
 from fineweb_legal_spark.pipeline import ppl_histogram, run_pipeline, stage_metrics
+from fineweb_legal_spark.session import arrow_table
 
 # --------------------------------------------------------------------------
 # table helpers
@@ -596,8 +597,10 @@ def q_range_join_bands_events(spark, sf_dir):
 
     e = _t(spark, sf_dir, "events")
     bands = spark.createDataFrame(
-        [("low", 0.0, 100.0), ("mid", 50.0, 200.0), ("high", 150.0, 500.0)],
-        ["band", "lo", "hi"],
+        arrow_table(
+            [("low", 0.0, 100.0), ("mid", 50.0, 200.0), ("high", 150.0, 500.0)],
+            "band string, lo double, hi double",
+        )
     )
     return range_bucket_join(e, bands, "value", step=50.0).select(
         "event_id", "band", F.round("value", 2).alias("value")
@@ -1315,7 +1318,7 @@ def q_topk_groups(spark, sf_dir):
     # equality, is what trips). Per-blocked-host counts + one
     # '__unblocked__' row pinning the negative side.
     bl = spark.createDataFrame(
-        [("example.org",), ("cnn.com",), ("go.com",)], "domain string"
+        arrow_table([("example.org",), ("cnn.com",), ("go.com",)], "domain string")
     )
     wv = domain_blocklist_filter(_webdocs(spark), bl)
     blocked_hosts = (

@@ -23,7 +23,11 @@ only what differs between backends: which buckets are committed, reading
 the committed output, creating the output location, writing one group's
 data and publishing one group's lineage rows. ``DirectoryStore`` below
 writes under a directory; ``lineage_table.TableStore`` writes to catalog
-tables.
+tables. The loop reads the lineage once per call: the committed set it
+starts from also selects the committed output, and each publish adds its
+group's buckets to it. Lineage rows are published from an Arrow table
+(``session.arrow_table``), so the commit path runs no Python outside the
+model stage.
 
 Layout under ``out_dir``:
     data/bucket=NN/part-*.parquet     (snappy, sorted by conv_id, turn_idx)
@@ -37,16 +41,15 @@ import os
 from datetime import datetime, timezone
 from pathlib import Path
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import spec
 from .pipeline import run_pipeline
+from .session import arrow_table
 
 BUCKET_COL = "bucket"
 LINEAGE_SCHEMA = T.StructType(
@@ -87,16 +90,20 @@ def read_lineage(spark: SparkSession, out_dir: str | Path) -> DataFrame:
     )
 
 
-def read_committed_output(spark: SparkSession, out_dir: str | Path) -> DataFrame:
+def read_committed_output(
+    spark: SparkSession, out_dir: str | Path, done: set[int] | None = None
+) -> DataFrame:
     """Reader side of the protocol: only lineage-committed buckets are
-    visible (the T4 'no partial visibility' guarantee).
+    visible (the T4 'no partial visibility' guarantee). ``done`` is the
+    committed set when the caller has already read it.
 
     A committed bucket may have NO data directory: dynamic partition
     overwrite writes nothing for an all-rejected bucket, yet the lineage
     record still marks it committed. Filter the path list to directories
     that exist so the scan never hits PATH_NOT_FOUND; all-empty -> None.
     """
-    done = committed_buckets(out_dir)
+    if done is None:
+        done = committed_buckets(out_dir)
     data = Path(out_dir) / "data"
     paths = [
         str(data / f"bucket={b}")
@@ -170,8 +177,8 @@ class DirectoryStore:
     def committed(self) -> set[int]:
         return committed_buckets(self.out)
 
-    def read_committed(self) -> DataFrame | None:
-        return read_committed_output(self.spark, self.out)
+    def read_committed(self, done: set[int]) -> DataFrame | None:
+        return read_committed_output(self.spark, self.out, done)
 
     def create(self, data: DataFrame) -> None:
         (self.out / "data").mkdir(parents=True, exist_ok=True)
@@ -189,15 +196,10 @@ class DirectoryStore:
         )
 
     def publish(self, gid: str, rows: list[tuple]) -> None:
-        schema = to_arrow_schema(LINEAGE_SCHEMA)
-        table = pa.Table.from_arrays(
-            [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)],
-            schema=schema,
-        )
         # atomic publish: tmp file + rename
         final = self.out / "_lineage" / f"group-{gid}.parquet"
         tmp = self.out / "_lineage" / f".group-{gid}.tmp"
-        pq.write_table(table, tmp, compression="snappy")
+        pq.write_table(arrow_table(rows, LINEAGE_SCHEMA), tmp, compression="snappy")
         os.replace(tmp, final)
 
 
@@ -213,6 +215,10 @@ def commit_groups(
 
     ``max_groups`` exists for kill-simulation in tests (process only the
     first K groups, as if the job died there).
+
+    The store's lineage is read once: ``committed()`` at the start. A
+    publish is the commit point, so ``committed_now`` is that set plus
+    the buckets published here.
     """
     done = store.committed()
     pending = [b for b in range(spec.LINEAGE_BUCKETS) if b not in done]
@@ -238,7 +244,7 @@ def commit_groups(
         # the commits are cut short
         groups = groups[:max_groups]
     pending_src = transcripts.filter(bucket_of(F.col("conv_id")).isin(pending))
-    committed_df = store.read_committed()
+    committed_df = store.read_committed(done)
     # Snapshot the registry: every write into the store refreshes the cached
     # plans that read it, so a live registry scan would drop kept_all's
     # persisted blocks after each group and rerun the pipeline for the next.
@@ -270,32 +276,33 @@ def commit_groups(
     ).persist(StorageLevel.DISK_ONLY)
     # DISK_ONLY: kept_all carries the full text payload; at cluster scale a
     # MEMORY_AND_DISK cache of the whole corpus evicts everything else.
-    store.create(kept_all)
-
-    for group in groups:
-        gid = "-".join(str(b) for b in group)
-        kept = kept_all.filter(F.col(BUCKET_COL).isin(group))
-        # Single-pass metrics (reference T8/A2 via df.observe, SURVEY §2.9):
-        # the CollectMetrics node sits UNDER the keep-filter, so the write
-        # action itself produces the per-bucket kept/dropped/scrubbed
-        # counters — no second aggregation pass over the group.
-        obs = Observation(f"lineage-{gid}")
-        store.write_data(
-            kept.observe(obs, *group_metric_exprs(group))
-            .filter("keep")
-            .drop("keep")
-            .repartition(BUCKET_COL)
-            .sortWithinPartitions("conv_id", "turn_idx")
-        )
-        # the lineage record IS the commit point
-        store.publish(gid, group_lineage_rows(kept, group, obs))
-
-    kept_all.unpersist()
+    try:
+        store.create(kept_all)
+        for group in groups:
+            gid = "-".join(str(b) for b in group)
+            kept = kept_all.filter(F.col(BUCKET_COL).isin(group))
+            # Single-pass metrics (reference T8/A2 via df.observe, SURVEY
+            # §2.9): the CollectMetrics node sits UNDER the keep-filter, so
+            # the write action itself produces the per-bucket
+            # kept/dropped/scrubbed counters — no second aggregation pass.
+            obs = Observation(f"lineage-{gid}")
+            store.write_data(
+                kept.observe(obs, *group_metric_exprs(group))
+                .filter("keep")
+                .drop("keep")
+                .repartition(BUCKET_COL)
+                .sortWithinPartitions("conv_id", "turn_idx")
+            )
+            # the lineage record IS the commit point
+            store.publish(gid, group_lineage_rows(kept, group, obs))
+    finally:
+        kept_all.unpersist()
+    processed = sum(len(g) for g in groups)
     return {
         "committed_before": len(done),
-        "committed_now": len(store.committed()),
+        "committed_now": len(done) + processed,
         "groups_processed": len(groups),
-        "buckets_processed": sum(len(g) for g in groups),
+        "buckets_processed": processed,
     }
 
 

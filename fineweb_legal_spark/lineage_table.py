@@ -31,6 +31,10 @@ partitions, so every crash window converges under replay:
 
 The commit loop itself is ``lineage.commit_groups``, shared with the
 directory backend; ``TableStore`` supplies the table reads and writes.
+The loop collects the lineage table once per call, and every frame
+``TableStore`` writes is built from Arrow (``session.arrow_table``): it
+plans as a ``LocalTableScan``, so publishing a group starts no Python
+task and no second Python worker pool beside the model stage's.
 
 Scale note: the lineage table stays O(LINEAGE_BUCKETS) rows per run —
 ``committed_buckets_table`` may collect() it on the driver.  The data
@@ -47,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import BUCKET_COL, LINEAGE_SCHEMA, commit_groups
+from .session import arrow_table
 from .sources.catalog import TableIO
 
 
@@ -63,12 +68,17 @@ def committed_buckets_table(spark: SparkSession, lineage_table: str) -> set[int]
 
 
 def read_committed_table(
-    spark: SparkSession, data_table: str, lineage_table: str
+    spark: SparkSession,
+    data_table: str,
+    lineage_table: str,
+    done: set[int] | None = None,
 ) -> DataFrame | None:
     """Reader side: only lineage-committed buckets are visible (T4).
     The bucket filter is a literal isin over committed partition values,
-    so the scan prunes uncommitted partitions instead of reading them."""
-    done = committed_buckets_table(spark, lineage_table)
+    so the scan prunes uncommitted partitions instead of reading them.
+    ``done`` is the committed set when the caller has already read it."""
+    if done is None:
+        done = committed_buckets_table(spark, lineage_table)
     if not done or not spark.catalog.tableExists(data_table):
         return None
     return spark.table(data_table).filter(
@@ -91,8 +101,10 @@ class TableStore:
     def committed(self) -> set[int]:
         return committed_buckets_table(self.spark, self.lineage_table)
 
-    def read_committed(self) -> DataFrame | None:
-        return read_committed_table(self.spark, self.data_table, self.lineage_table)
+    def read_committed(self, done: set[int]) -> DataFrame | None:
+        return read_committed_table(
+            self.spark, self.data_table, self.lineage_table, done
+        )
 
     def create(self, data: DataFrame) -> None:
         # create-if-absent with EMPTY frames: every actual write goes
@@ -101,7 +113,7 @@ class TableStore:
             data.limit(0).drop("keep"), self.data_table, partition_by=[BUCKET_COL]
         )
         self.io.ensure(
-            self.spark.createDataFrame([], LINEAGE_SCHEMA),
+            self.spark.createDataFrame(arrow_table([], LINEAGE_SCHEMA)),
             self.lineage_table,
             partition_by=["bucket"],
         )
@@ -111,7 +123,8 @@ class TableStore:
 
     def publish(self, gid: str, rows: list[tuple]) -> None:
         self.io.overwrite_partitions(
-            self.spark.createDataFrame(rows, LINEAGE_SCHEMA), self.lineage_table
+            self.spark.createDataFrame(arrow_table(rows, LINEAGE_SCHEMA)),
+            self.lineage_table,
         )
 
 

@@ -34,6 +34,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import arrow_table
+
 
 def count_stack(
     df: DataFrame,
@@ -98,7 +100,10 @@ def threshold_sweep(
     # on a <= |T|+1-row frame, so the range join and the scalar
     # cross-join are driver-trivial at any corpus size.
     t_frame = df.sparkSession.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(ts)], ["bucket_min", "threshold"]
+        arrow_table(
+            [(i + 1, t) for i, t in enumerate(ts)],
+            "bucket_min long, threshold double",
+        )
     )
     kept = (
         t_frame.join(counts, counts["bucket"] >= t_frame["bucket_min"], "left")

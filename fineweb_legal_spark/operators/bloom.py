@@ -56,6 +56,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..session import arrow_table
+
 __all__ = [
     "BloomFilter",
     "build_bloom",
@@ -294,8 +296,10 @@ def save_bloom(spark, bloom: BloomFilter, path: str) -> None:
             (cid // _CHUNK_BYTES, bytes(bloom.bitmap[cid : cid + _CHUNK_BYTES]))
         )
     meta_and_chunks = spark.createDataFrame(
-        [(int(bloom.n_bits), int(bloom.k), cid, blob) for cid, blob in rows],
-        "n_bits long, k int, chunk_id long, bits binary",
+        arrow_table(
+            [(int(bloom.n_bits), int(bloom.k), cid, blob) for cid, blob in rows],
+            "n_bits long, k int, chunk_id long, bits binary",
+        )
     )
     meta_and_chunks.coalesce(1).write.mode("overwrite").parquet(path)
 

@@ -54,6 +54,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import arrow_table
+
 WS_SPLIT = "[ \\t\\n\\r\\f\\x0b]+"
 EOW = "▁"  # lower-one-eighth block: not produced by the tokenizer
 
@@ -214,7 +216,9 @@ def merges_table(spark: SparkSession, model: BpeModel) -> DataFrame:
     rows = [(r, a, b) for r, (a, b) in enumerate(model.merges)] + [
         (-(i + 1), s, "") for i, s in enumerate(model.alphabet)
     ]
-    return spark.createDataFrame(rows, "rank int, left string, right string")
+    return spark.createDataFrame(
+        arrow_table(rows, "rank int, left string, right string")
+    )
 
 
 def model_from_table(df: DataFrame) -> BpeModel:
@@ -233,7 +237,7 @@ def vocab_table(spark: SparkSession, model: BpeModel) -> DataFrame:
     rows = [(UNK_ID, "<unk>"), (EOD_ID, "<eod>")] + [
         (i, t) for t, i in model.vocab().items()
     ]
-    return spark.createDataFrame(rows, "id int, token string")
+    return spark.createDataFrame(arrow_table(rows, "id int, token string"))
 
 
 def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

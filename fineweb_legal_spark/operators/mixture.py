@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import arrow_table
+
 HEX_SPACE = 16**8
 
 
@@ -73,8 +75,10 @@ def mixture_sample(
     dropped — an explicit mixture is usually exhaustive)."""
     spark = df.sparkSession
     thr = spark.createDataFrame(
-        [(s, rate_threshold_hex(r)) for s, r in sorted(rates.items())],
-        [source_col, "_thr"],
+        arrow_table(
+            [(s, rate_threshold_hex(r)) for s, r in sorted(rates.items())],
+            f"`{source_col}` string, _thr string",
+        )
     )
     keyed = df.join(F.broadcast(thr), source_col, "left").withColumn(
         "_thr", F.coalesce("_thr", F.lit(rate_threshold_hex(default_rate)))

@@ -9,8 +9,12 @@ whatever spark-submit (or Spark's default) sets.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _MAX_HEAP_GIB = 16
 
@@ -123,6 +127,31 @@ def get_spark(
     ):
         spark.conf.set(key, str(sc.defaultParallelism))
     return spark
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType | str) -> pa.Table:
+    """``rows`` (tuples in ``schema``'s field order) as a ``pyarrow.Table``
+    of ``schema``'s Arrow types; ``schema`` may be a DDL string.
+
+    The one way the library turns driver-side rows into a frame:
+    ``spark.createDataFrame(arrow_table(rows, schema))`` plans as a
+    ``LocalTableScan`` and starts no Python task, where a Python list
+    plans as ``Scan ExistingRDD`` over a Python RDD. Beside SQL Python
+    UDFs that RDD also runs in a second Python worker pool of its own.
+
+    A naive datetime in a ``TimestampType`` column is read as local time,
+    as Spark reads one (pyspark also hands observed timestamps back as
+    naive local datetimes), and stored as its UTC instant."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = []
+    for col, field in zip(cols, arrow_schema):
+        if pa.types.is_timestamp(field.type) and field.type.tz is not None:
+            col = [v if v is None else v.astimezone(timezone.utc) for v in col]
+        arrays.append(pa.array(col, field.type))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
 def explain_formatted(df) -> str:

@@ -51,6 +51,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import arrow_table
 from .filter_stream import _scored_stream
 
 _OUT_COLS = ["conv_id", "turn_idx", "ts", "lang", "ppl_bucket", "scrubbed_text"]
@@ -237,9 +238,9 @@ def _commit_batch(
             if part is not None:
                 part.replace(final)
             else:  # empty batch: publish an empty registry slice
-                spark.createDataFrame([], "norm_key string").write.mode(
-                    "overwrite"
-                ).parquet(str(tmp))
+                spark.createDataFrame(
+                    arrow_table([], "norm_key string")
+                ).write.mode("overwrite").parquet(str(tmp))
                 part = next(Path(tmp).glob("part-*.parquet"))
                 part.replace(final)
             shutil.rmtree(tmp, ignore_errors=True)

@@ -1,6 +1,27 @@
 from __future__ import annotations
 
+import os
+import time
+
 import pytest
+
+
+@pytest.fixture
+def driver_off_utc():
+    """Run the driver process in a zone 4-5 hours off UTC (a POSIX rule,
+    so no tzdata is needed), and restore its zone afterwards."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "EST+05EDT,M3.2.0,M11.1.0"
+    time.tzset()
+    try:
+        assert time.localtime().tm_gmtoff != 0
+        yield
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 @pytest.fixture(scope="session")

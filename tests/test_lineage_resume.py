@@ -5,12 +5,14 @@ T3/T4/T7 semantics), on both lineage stores: the output directory
 from __future__ import annotations
 
 import shutil
+import time
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from fineweb_legal_spark import lineage, spec
+from fineweb_legal_spark import lineage, lineage_table, spec
 from fineweb_legal_spark.datasets import DATA_DIR
 from fineweb_legal_spark.lineage import (
     bucket_of,
@@ -24,6 +26,8 @@ from fineweb_legal_spark.lineage_table import (
     read_committed_table,
     run_with_lineage_table,
 )
+from fineweb_legal_spark.session import explain_formatted
+from fineweb_legal_spark.sources.catalog import TableIO
 
 OUT = DATA_DIR / "tmp" / "lineage_test"
 DATA_T = "lintbl_data"
@@ -46,8 +50,11 @@ class _Directory:
     def read(self):
         return read_committed_output(self.spark, OUT)
 
+    def lineage_df(self):
+        return read_lineage(self.spark, OUT)
+
     def lineage(self):
-        return read_lineage(self.spark, OUT).toPandas()
+        return self.lineage_df().toPandas()
 
     def uncommit(self, bucket):
         """Delete the lineage record of ``bucket``'s group (with its
@@ -75,8 +82,11 @@ class _Table:
     def read(self):
         return read_committed_table(self.spark, DATA_T, LIN_T)
 
+    def lineage_df(self):
+        return self.spark.table(LIN_T)
+
     def lineage(self):
-        return self.spark.table(LIN_T).toPandas()
+        return self.lineage_df().toPandas()
 
     def uncommit(self, bucket):
         """Drop ``bucket``'s lineage partition: the kill between the data
@@ -110,12 +120,15 @@ def test_kill_resume_idempotent(spark, t1_transcripts, t1_golden, store):
     assert r1["groups_processed"] == 2
     n_committed = len(store.committed())
     assert 0 < n_committed < spec.LINEAGE_BUCKETS
+    # the loop counts its publishes instead of re-reading the lineage
+    assert r1["committed_now"] == n_committed
     partial_rows = store.read().count()
 
     # resume: completes only the remaining buckets
     r2 = store.run(t1_transcripts, n_groups=4)
     assert r2["committed_before"] == n_committed
     assert len(store.committed()) == spec.LINEAGE_BUCKETS
+    assert r2["committed_now"] == spec.LINEAGE_BUCKETS
 
     out = store.read().toPandas()
     assert len(out) > partial_rows
@@ -132,6 +145,7 @@ def test_kill_resume_idempotent(spark, t1_transcripts, t1_golden, store):
     # rerun of a completed job is a no-op
     r3 = store.run(t1_transcripts, n_groups=4)
     assert r3["groups_processed"] == 0
+    assert r3["committed_now"] == spec.LINEAGE_BUCKETS
 
 
 def test_resume_runs_pipeline_once(spark, t1_transcripts, store, monkeypatch):
@@ -229,3 +243,97 @@ def test_all_rejected_bucket_commits_and_resumes(spark, store):
     # resume on the fully-committed (but dataless) output is a no-op
     r2 = store.run(df, n_groups=1)
     assert r2["groups_processed"] == 0
+
+
+def test_committed_at_keeps_its_instant_off_utc(
+    spark, t1_transcripts, store, driver_off_utc
+):
+    """pyspark hands the observed commit time back as a naive LOCAL
+    datetime; both stores must record its instant, not its wall time read
+    as UTC."""
+    store.run(t1_transcripts, n_groups=4, max_groups=1)
+    got = store.lineage_df().select(F.col("committed_at").cast("double")).collect()
+    assert got
+    for (epoch_s,) in got:
+        assert abs(time.time() - epoch_s) < 120
+
+
+class _FailingWrite(lineage.DirectoryStore):
+    def write_data(self, staged):
+        raise RuntimeError("write failed")
+
+
+def test_failed_write_releases_kept_all(spark, t1_transcripts, monkeypatch):
+    """A failing group write must not leave the full-payload cache behind
+    for the rest of the session."""
+    persisted = []
+    frame_cls = type(t1_transcripts)
+    real_persist = frame_cls.persist
+
+    def _persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", _persist)
+    shutil.rmtree(OUT, ignore_errors=True)
+    try:
+        with pytest.raises(RuntimeError, match="write failed"):
+            lineage.commit_groups(spark, t1_transcripts, _FailingWrite(spark, OUT))
+    finally:
+        shutil.rmtree(OUT, ignore_errors=True)
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+class _RecordingIO(TableIO):
+    def __init__(self, spark):
+        super().__init__(spark)
+        self.frames = []
+
+    def ensure(self, df, table, **kw):
+        self.frames.append(df)
+        return super().ensure(df, table, **kw)
+
+    def overwrite_partitions(self, df, table):
+        self.frames.append(df)
+        super().overwrite_partitions(df, table)
+
+
+def test_table_store_writes_no_python_rdd(spark, t1_transcripts):
+    """Every frame TableStore hands to TableIO plans without a Python RDD
+    (``Scan ExistingRDD``): a Python-list frame would start Python tasks
+    in a second worker pool beside the model stage's."""
+    _Table(spark).clean()
+    io = _RecordingIO(spark)
+    try:
+        run_with_lineage_table(
+            spark, t1_transcripts, DATA_T, LIN_T, n_groups=2, max_groups=1, io=io
+        )
+        # data + lineage table creation, one group's data + lineage write
+        assert len(io.frames) == 4
+        for df in io.frames:
+            assert "ExistingRDD" not in explain_formatted(df)
+    finally:
+        _Table(spark).clean()
+
+
+def test_commit_reads_lineage_table_once(spark, t1_transcripts, monkeypatch):
+    """One ``run_with_lineage_table`` call reads the lineage table once,
+    both from scratch and on a resume."""
+    reads = []
+    real = lineage_table.committed_buckets_table
+
+    def _counted(*a, **kw):
+        reads.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(lineage_table, "committed_buckets_table", _counted)
+    table = _Table(spark)
+    table.clean()
+    try:
+        for kw in ({"max_groups": 1}, {}):
+            reads.clear()
+            run_with_lineage_table(spark, t1_transcripts, DATA_T, LIN_T, n_groups=2, **kw)
+            assert len(reads) == 1
+    finally:
+        table.clean()
