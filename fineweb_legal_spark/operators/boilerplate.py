@@ -18,12 +18,10 @@ Scale shape:
   pairs), whereas a fixed count's bound, corpus_lines / min_docs, grows
   linearly with the corpus (round-3 judge finding);
 - broadcast vs shuffle for the strip join is a RUNTIME-STATS decision:
-  by default AQE reads the common-line set's actual size from the
-  shuffle stage and broadcasts iff it fits (no eager job, no cached
-  frame); an explicit ``broadcast_limit`` pins the choice by hand via
-  one count() on the aggregated frame — small set -> broadcast hint
-  (strip pass shuffle-free on the corpus side), adversarially large
-  set -> shuffle-hash hint, never an OOM-risking driver collect;
+  AQE reads the common-line set's actual size from the shuffle stage and
+  broadcasts iff it fits (no eager job, no cached frame, never an
+  OOM-risking driver collect) — a small set leaves the strip pass
+  shuffle-free on the corpus side, an adversarially large one shuffles;
 - reassembly preserves original line order via the exploded position —
   an Arrow-batched grouped sort-join, linear per document. This ships
   every KEPT line through Python once; the JVM-native alternative
@@ -77,7 +75,6 @@ def strip_common_lines(
     min_docs: int | float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """(id, clean_text): every document with its corpus-common lines
     removed, remaining lines in original order. Documents whose lines are
@@ -87,15 +84,9 @@ def strip_common_lines(
     float in (0, 1) is a FRACTION of the corpus's non-null-text documents
     (the scale-safe form — see module docstring).
 
-    ``broadcast_limit=None`` (default) leaves the strip-join strategy to
-    AQE, which reads the common-line set's ACTUAL size from the shuffle
-    stats at run time and broadcasts iff it fits — no eager job, no
-    cached frame, and the same small-side decision this code would make
-    by hand. Pass an int to pin the choice explicitly: one count() on the
-    aggregated frame, then a broadcast hint (<= limit) or a shuffle-hash
-    hint (> limit, forcing the non-broadcast path — the adversarially-
-    large-set escape hatch and the testing hook); the explicit path
-    computes the aggregate twice (once for the count)."""
+    The strip-join strategy is AQE's: it reads the common-line set's
+    ACTUAL size from the shuffle stats at run time and broadcasts iff it
+    fits the session's broadcast threshold."""
     freq = line_doc_frequency(docs, id_col, text_col)
     if isinstance(min_docs, float):
         if not 0.0 < min_docs < 1.0:
@@ -123,21 +114,12 @@ def strip_common_lines(
         common = freq.filter(F.col("n_docs") >= min_docs).select(
             "line", F.lit(True).alias("_common")
         )
-    if broadcast_limit is None:
-        strip_side = common
-    else:
-        n_common = common.count()
-        strip_side = (
-            F.broadcast(common)
-            if n_common <= broadcast_limit
-            else common.hint("shuffle_hash")
-        )
     lines = docs.select(
         F.col(id_col).cast("string").alias("id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     )
     kept = (
-        lines.join(strip_side, "line", "left")
+        lines.join(common, "line", "left")
         .filter(F.col("_common").isNull())
         .select("id", "pos", "line")
     )

@@ -16,11 +16,11 @@ round is one shuffle join + one min-aggregate, rounds = graph diameter.
 Near-dup graphs have tiny diameters (clusters are cliques-ish from LSH
 banding), so 3-5 rounds converge in practice; `max_iter` bounds the worst
 case and `localCheckpoint` truncates the growing lineage each round (else
-the plan doubles per iteration and Janino chokes by round ~8). For
-adversarial long-chain graphs at 100 TB, swap in the large-star/small-star
-alternation (Kiveris et al., MapReduce CC) — same join primitive, O(log n)
-rounds; hash-min is kept here because the dedup-graph diameter is small and
-each round is a single cheap shuffle.
+the plan doubles per iteration and Janino chokes by round ~8). Hash-min
+goes first because the dedup-graph diameter is small and each round is a
+single cheap shuffle; an adversarial long-chain graph that exhausts
+`max_iter` falls back to the large-star/small-star alternation (Kiveris et
+al., MapReduce CC) — same join primitive, O(log^2 n) rounds.
 
 sessionize is two window passes over (user_id) partitions — embarrassingly
 parallel per user, no driver-side state; skewed power-users are bounded by
@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 20, algorithm: str = "auto"
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Resolve (id_a, id_b) near-dup pairs into clusters.
 
     Returns (id, cluster_id) for every id appearing in >=1 pair, where
@@ -43,25 +41,17 @@ def connected_components(
     deterministic, so the canonical "keep" doc per cluster is stable across
     runs and partitionings.
 
-    ``algorithm``:
-    - "hashmin": label propagation, rounds = graph diameter. Right for
-      near-dup graphs (LSH clusters are cliques-ish, diameter 2-4); raises
-      on non-convergence within ``max_iter``.
-    - "star": large-star/small-star alternation (Kiveris et al., "Connected
-      Components in MapReduce and Beyond") — O(log^2 n) rounds regardless
-      of diameter; the adversarial-chain escape hatch for 100-TB graphs.
-    - "auto" (default): hashmin first; on round-budget exhaustion, falls
-      back to star instead of raising.
+    Hash-min label propagation first (rounds = graph diameter; right for
+    near-dup graphs, whose LSH clusters are cliques-ish, diameter 2-4). If
+    it has not converged within ``max_iter`` rounds, large-star/small-star
+    alternation (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") takes over: O(log^2 n) rounds regardless of diameter, the
+    adversarial-chain escape hatch for 100-TB graphs.
     """
-    if algorithm not in ("auto", "hashmin", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm in ("auto", "hashmin"):
-        try:
-            return _cc_hashmin(pairs, max_iter)
-        except RuntimeError:
-            if algorithm == "hashmin":
-                raise
-    return _cc_star(pairs, max_iter)
+    try:
+        return _cc_hashmin(pairs, max_iter)
+    except RuntimeError:
+        return _cc_star(pairs, max_iter)
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:

@@ -2,7 +2,7 @@
 rule's ACTUAL launch surface ("launched via spark-submit --py-files on
 multi-executor clusters at N and 4N executors").
 
-Unlike bench.py's local[N] children (one JVM, threads as executors), this
+Unlike bench.py's local[N] session (one JVM, threads as executors), this
 job is submitted to a REAL standalone cluster: separate master / worker /
 executor JVMs, Python UDF workers forked per executor, shuffle blocks
 served executor-to-executor over netty. Every serialization boundary a
@@ -16,13 +16,14 @@ boundaries.
         --conf spark.cores.max=8 \
         jobs/run_bench_standalone.py --input data/transcripts/bench
 
-Protocol is identical to bench.py's scaling children so numbers are
-comparable: full pipeline plan into a noop sink (a bare count() lets
-Catalyst prune the dedup window + its exchange), cold first execution,
-then steady = min of --reps re-executions of the SAME DataFrame (codegen
-warm), session caches dropped outside the timer between reps. Prints one
-``STANDALONE_RESULT {json}`` line; the orchestrator
-(tools/standalone_round.py) owns cluster lifecycle and the cache.
+Protocol is identical to bench.py's pipeline phase (``_pipeline_bench``)
+so numbers are comparable: full pipeline plan into a noop sink (a bare
+count() lets Catalyst prune the dedup window + its exchange), cold first
+execution, then steady = min of --reps re-executions of the SAME
+DataFrame (codegen warm), session caches dropped outside the timer
+between reps. Prints one ``STANDALONE_RESULT {json}`` line; the
+orchestrator (tools/standalone_round.py) owns cluster lifecycle and the
+cache.
 """
 
 from __future__ import annotations

@@ -264,7 +264,7 @@ def test_range_bucket_join_tiny(spark):
 def test_connected_components_raises_on_nonconvergence(spark):
     import pytest as _pytest
 
-    from fineweb_legal_spark.operators.cluster import connected_components
+    from fineweb_legal_spark.operators.cluster import _cc_hashmin
 
     # a 6-node chain needs 5 propagation rounds; hashmin with max_iter=2
     # must raise, never silently return split clusters
@@ -272,33 +272,37 @@ def test_connected_components_raises_on_nonconvergence(spark):
         [(f"n{i}", f"n{i+1}") for i in range(5)], ["id_a", "id_b"]
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2, algorithm="hashmin")
+        _cc_hashmin(chain, max_iter=2)
     # and with enough rounds the same chain is one cluster
-    got = connected_components(chain, max_iter=10, algorithm="hashmin")
+    got = _cc_hashmin(chain, max_iter=10)
     assert got.select("cluster_id").distinct().count() == 1
 
 
 def test_connected_components_star_long_chain(spark):
     # adversarial diameter: a 26-node chain (diameter 25 > default
-    # max_iter=20). hashmin alone raises; the star algorithm and the auto
-    # fallback both collapse it to one cluster rooted at the min id.
+    # max_iter=20). hashmin alone raises; star, and connected_components'
+    # fallback to it, both collapse it to one cluster rooted at the min id.
     import pytest as _pytest
 
-    from fineweb_legal_spark.operators.cluster import connected_components
+    from fineweb_legal_spark.operators.cluster import (
+        _cc_hashmin,
+        _cc_star,
+        connected_components,
+    )
 
     chain = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(25)], ["id_a", "id_b"]
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=20, algorithm="hashmin")
-    for algo in ("star", "auto"):
-        got = connected_components(chain, max_iter=20, algorithm=algo).collect()
-        assert len(got) == 26, algo
-        assert {r["cluster_id"] for r in got} == {"n00"}, algo
+        _cc_hashmin(chain, max_iter=20)
+    for name, cc in (("star", _cc_star), ("fallback", connected_components)):
+        got = cc(chain, max_iter=20).collect()
+        assert len(got) == 26, name
+        assert {r["cluster_id"] for r in got} == {"n00"}, name
 
 
 def test_connected_components_star_matches_hashmin(spark):
-    from fineweb_legal_spark.operators.cluster import connected_components
+    from fineweb_legal_spark.operators.cluster import _cc_hashmin, _cc_star
 
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("q", "p"), ("q", "r")],
@@ -306,11 +310,10 @@ def test_connected_components_star_matches_hashmin(spark):
     )
     hm = {
         (r["id"], r["cluster_id"])
-        for r in connected_components(pairs, algorithm="hashmin").collect()
+        for r in _cc_hashmin(pairs, max_iter=20).collect()
     }
     st = {
-        (r["id"], r["cluster_id"])
-        for r in connected_components(pairs, algorithm="star").collect()
+        (r["id"], r["cluster_id"]) for r in _cc_star(pairs, max_iter=20).collect()
     }
     assert hm == st
 
@@ -558,18 +561,36 @@ def test_strip_common_lines_planted(spark):
     assert got["5"] is None
     assert got["6"] == "keep\n\nblank lines stay"
 
-    # shuffle path (broadcast_limit=0 forces the non-broadcast join) and
-    # the fractional threshold (3/6 docs = 0.5) give the same answer
-    for kwargs in (
-        {"min_docs": 3, "broadcast_limit": 0},
-        {"min_docs": 0.5},
-        {"min_docs": 0.5, "broadcast_limit": 0},
-    ):
-        alt = {
-            r["id"]: r["clean_text"]
-            for r in strip_common_lines(docs, **kwargs).collect()
-        }
-        assert alt == got, kwargs
+    # the fractional threshold (3/6 docs = 0.5) gives the same answer
+    alt = {
+        r["id"]: r["clean_text"]
+        for r in strip_common_lines(docs, min_docs=0.5).collect()
+    }
+    assert alt == got
+
+    # the shuffle path: with both broadcast thresholds off the strip join
+    # cannot broadcast the common-line set, and the answer is the same
+    from fineweb_legal_spark.session import explain_formatted
+
+    confs = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k in confs:
+            spark.conf.set(k, "-1")
+        for min_docs in (3, 0.5):
+            stripped = strip_common_lines(docs, min_docs=min_docs)
+            alt = {r["id"]: r["clean_text"] for r in stripped.collect()}
+            assert alt == got, min_docs
+            assert "BroadcastHashJoin" not in explain_formatted(stripped)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_transcript_structure_checks_planted(spark):

@@ -1,21 +1,18 @@
-"""Standalone-cluster scaling round: the cache math and the bench fold.
+"""Standalone-cluster scaling round: the cache math.
 
 The cluster spin-up itself (tools/standalone_round.py main) is exercised
 out-of-band — it boots real master/worker JVMs and takes minutes; its
 measured rounds land in data/standalone_cache.json. These tests pin the
-pure parts: best-per-size selection, the N→4N efficiency formula, and
-bench.py's compaction of the cache into the one-line JSON artifact.
+pure parts: best-per-size selection and the N→4N efficiency formula.
 """
 
 from __future__ import annotations
 
-import json
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
-sys.path.insert(0, str(REPO))
 
 from standalone_round import fold  # noqa: E402
 
@@ -56,37 +53,6 @@ def test_fold_without_both_sizes_has_null_efficiency():
     out = fold([_r("N", 20000.0)])
     assert out["efficiency"] is None
     assert "4N" not in out
-
-
-def test_bench_folds_standalone_cache_compactly(tmp_path, monkeypatch):
-    import bench
-
-    cache = {
-        "N": _r("N", 25000.0, steady_sec=80.0, cores=8, executors=2, workers=1,
-                steady_all=[81.0, 80.0], cold_sec=120.0),
-        "4N": _r("4N", 80000.0, steady_sec=25.0, cores=32, executors=8, workers=4,
-                 steady_all=[26.0, 25.0], cold_sec=60.0),
-        "efficiency": 0.8,
-        "rounds": [{"size": "N"}] * 50,  # must NOT leak into the compact line
-        "protocol": "x",
-    }
-    p = tmp_path / "standalone_cache.json"
-    p.write_text(json.dumps(cache))
-    monkeypatch.setattr(bench, "STANDALONE_CACHE", p)
-    out = bench._cached_standalone()
-    assert out["cached"] is True
-    assert out["efficiency"] == 0.8
-    assert out["N"]["executors"] == 2 and out["4N"]["executors"] == 8
-    assert "rounds" not in out and "steady_all" not in out["N"]
-    # compact enough for the driver's stdout-tail budget
-    assert len(json.dumps(out)) < 500
-
-
-def test_bench_standalone_cache_missing_is_empty(tmp_path, monkeypatch):
-    import bench
-
-    monkeypatch.setattr(bench, "STANDALONE_CACHE", tmp_path / "nope.json")
-    assert bench._cached_standalone() == {}
 
 
 def test_fold_same_window_pairs_skip_midpoints():

@@ -330,16 +330,37 @@ def _extra_builders() -> dict:
     }
 
 
+# counters a session hands out in plan order, so they differ between
+# sessions: expression ids (``text#3``, ``id#7L``, ``MS[4]#9L``; not the
+# ``&#39;`` entities of regex literals), exchange plan ids and RDD ids
+_SESSION_IDS = (
+    re.compile(r"(?<=[\w)\]`]#)\d+"),
+    re.compile(r"(?<=\[plan_id=)\d+(?=\])"),
+    re.compile(r"(?<=RDD\[)\d+(?=\])"),
+)
+
+
+def stable_ids(plan: str) -> str:
+    """Renumber each kind of session id in first-appearance order, so the
+    same plan prints the same text in any session and every reference
+    between nodes still points at the same node."""
+    for pat in _SESSION_IDS:
+        ids: dict[str, int] = {}
+        plan = pat.sub(lambda m: str(ids.setdefault(m.group(), len(ids))), plan)
+    return plan
+
+
 def _plan(df) -> str:
     from fineweb_legal_spark.session import explain_formatted
 
     # literal separator bytes (e.g. the dedup singleton-key "\x00" concat)
     # would make the artifact binary; render them as escapes
-    return re.sub(
+    plan = re.sub(
         r"[\x00-\x08\x0b-\x1f]",
         lambda m: f"\\x{ord(m.group()):02x}",
         explain_formatted(df),
     )
+    return stable_ids(plan.replace(str(REPO), "<repo>"))
 
 
 def main() -> None:

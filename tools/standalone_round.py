@@ -1,7 +1,7 @@
 """Run the pipeline bench on a REAL Spark standalone cluster at two
 cluster sizes — the north rule's launch surface, not a local[N] stand-in.
 
-Topology per size (everything on this 32-vCPU box, JVMs fully separate):
+Topology per size (everything on one 32-vCPU host, JVMs fully separate):
 
 - size "N"  : 1 worker,  8 cores, taskset-pinned to cores 0-7
               → spark.cores.max=8,  --executor-cores 4 → 2 executors
@@ -12,16 +12,15 @@ Topology per size (everything on this 32-vCPU box, JVMs fully separate):
 
 Executors are forked by their worker and inherit its CPU affinity mask
 (as do the Python UDF workers forked by the executors), so the small
-cluster genuinely cannot borrow idle cores — same pinning discipline as
-bench.py's local[N] children. Each size gets a FRESH master+workers; the
+cluster genuinely cannot borrow idle cores. Each size gets a FRESH master+workers; the
 job is submitted with ``spark-submit --py-files dist/fineweb_legal_spark.zip``
 (jobs/run_bench_standalone.py), exercising the real deployment path:
 archive shipping, closure pickling, broadcast over netty, executor-to-
 executor shuffle service.
 
-Results append to ``data/standalone_cache.json`` (same best-per-size +
-rounds ledger as the local[N] scaling cache; bench.py folds it into its
-JSON line as ``scaling_standalone``).
+Results append to ``data/standalone_cache.json`` (best round per size plus
+the full rounds ledger). Its rounds were measured on a 32-vCPU host and
+BENCH.md cites them.
 
 Usage: python tools/standalone_round.py [--reps 3] [--sizes N,2N,4N]
 """
@@ -199,10 +198,10 @@ def _submit(
 def fold(rounds: list[dict]) -> dict:
     """Best round per size + N→4N efficiency — the cache headline.
 
-    Pure so the math is unit-testable without a cluster; mirrors
-    tools/scaling_round.py's best-per-width de-noising protocol,
-    including the same_window view (efficiency within each adjacent
-    N→4N pair, where host drift between halves cancels)."""
+    Pure so the math is unit-testable without a cluster. Best per size
+    is the de-noising protocol for a host with noisy neighbours; the
+    same_window view (efficiency within each adjacent N→4N pair) cancels
+    host drift between the two halves."""
     best: dict[str, dict] = {}
     for r in rounds:
         k = r["size"]
@@ -284,8 +283,8 @@ def main() -> None:
         "--event-log",
         default=None,
         metavar="DIR",
-        help="enable the Spark event log into DIR for per-stage "
-        "attribution (tools/scaling_probe3.parse_eventlog)",
+        help="write the Spark event log (JSON lines) into DIR; "
+        "perfbench/eventlog.py reads that format",
     )
     ap.add_argument(
         "--sizes",
