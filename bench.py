@@ -3,7 +3,9 @@
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "queries_cold": {name: sec, ...},
  "sf": <float>, "pipeline": {rows, cold_sec, steady_sec, turns_per_sec},
- "codegen_compiles": <classes Janino compiled during the timed suite>}
+ "codegen_compiles": <classes Janino compiled during the timed suite>,
+ "conf": {master, spark.driver.memory, spark.sql.shuffle.partitions,
+          spark.python.daemon.module (null: Spark's pyspark.daemon)}}
 
 Ordering is survival-first (round-1 lesson: the driver's timeout killed the
 run before any JSON appeared):
@@ -77,6 +79,7 @@ RESULT: dict = {
     "sf": 0.0,
     "pipeline": {},
     "codegen_compiles": 0,
+    "conf": {},
 }
 _PRINTED = False
 
@@ -130,6 +133,23 @@ def scale_factor(sf_dir: str) -> float:
     JSON line is printed."""
     m = re.fullmatch(r"sf(\d+(?:\.\d*)?|\.\d+)", Path(sf_dir).name)
     return float(m.group(1)) if m else 0.0
+
+
+CONF_KEYS = (
+    "spark.driver.memory",
+    "spark.sql.shuffle.partitions",
+    "spark.python.daemon.module",
+)
+
+
+def session_conf(spark) -> dict:
+    """The conf the session chose: its master and ``CONF_KEYS``, None
+    where a key is unset (an unset daemon module is Spark's
+    ``pyspark.daemon``)."""
+    return {
+        "master": spark.sparkContext.master,
+        **{k: spark.conf.get(k, None) for k in CONF_KEYS},
+    }
 
 
 def _count(df) -> int:
@@ -207,6 +227,7 @@ def main() -> None:
     from fineweb_legal_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="bench")
+    RESULT["conf"] = session_conf(spark)
     compiles_at_start = codegen_compiles(spark)
 
     def count_compiles() -> None:

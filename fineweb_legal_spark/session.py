@@ -1,22 +1,28 @@
 """SparkSession factory tuned for this engine.
 
 local[N] in the sandbox; the same configs are the ones we'd set on a real
-multi-executor cluster (AQE, Arrow). Only the shuffle width differs: in
-local mode it is the session's slot count, on a cluster master it is
-whatever spark-submit (or Spark's default) sets.
+multi-executor cluster (AQE, Arrow). Two things differ. The shuffle width:
+in local mode it is the session's slot count, on a cluster master it is
+whatever spark-submit (or Spark's default) sets. And the Python worker
+daemon: a local session whose workers can import the library starts
+``worker_daemon``, anything else keeps Spark's ``pyspark.daemon``.
 """
 
 from __future__ import annotations
 
 import os
+import site
 from datetime import timezone
 
 import pyarrow as pa
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 _MAX_HEAP_GIB = 16
+DAEMON_KEY = "spark.python.daemon.module"
+DAEMON_MODULE = "fineweb_legal_spark.worker_daemon"
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -36,6 +42,53 @@ def slots_known_at_start(master: str) -> bool:
     executors (``spark://…``, ``local-cluster[…]``, yarn, k8s) register
     later, so its defaultParallelism read at start-up is a placeholder."""
     return master == "local" or master.startswith("local[")
+
+
+def worker_daemon_conf(
+    master: str, extra_conf: dict[str, str], package_parent: str, import_dirs: list[str]
+) -> str | None:
+    """The ``spark.python.daemon.module`` that ``get_spark`` sets:
+    ``DAEMON_MODULE`` (pyspark off a zipimporter, see ``worker_daemon``),
+    or None to keep Spark's ``pyspark.daemon``.
+
+    Set only when all hold: the master is local, so its workers run on
+    this host; neither the caller (``extra_conf``) nor spark-submit has
+    set the key; and the library comes from a plain directory
+    (``package_parent``, the directory holding ``fineweb_legal_spark/``)
+    that a local worker also imports from (``import_dirs``). The daemon
+    starts before any task, so a ``--py-files`` zip, which reaches the
+    workers per task, cannot hold it."""
+    if (
+        not slots_known_at_start(master)
+        or DAEMON_KEY in extra_conf
+        or _submitted(DAEMON_KEY)
+        or not os.path.isdir(package_parent)
+    ):
+        return None
+    here = os.path.realpath(package_parent)
+    return DAEMON_MODULE if any(os.path.realpath(d) == here for d in import_dirs) else None
+
+
+def _worker_import_dirs() -> list[str]:
+    """Where a local worker imports from before its first task: its cwd
+    (``python -m`` puts it first; a local worker shares the driver's),
+    the PYTHONPATH it inherits, and site-packages."""
+    dirs = [os.getcwd(), *filter(None, os.environ.get("PYTHONPATH", "").split(os.pathsep))]
+    dirs += site.getsitepackages()
+    if site.ENABLE_USER_SITE:
+        dirs.append(site.getusersitepackages())
+    return dirs
+
+
+def _submitted(key: str) -> bool:
+    """True when spark-submit set ``key`` (``--conf`` or
+    spark-defaults.conf). A Python driver that spark-submit started finds
+    its JVM through PYSPARK_GATEWAY_PORT, and that JVM's SparkConf holds
+    the submitted values before any context exists."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return False
+    SparkContext._ensure_initialized()
+    return SparkConf().contains(key)
 
 
 def get_spark(
@@ -109,6 +162,14 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    daemon = worker_daemon_conf(
+        master,
+        extra_conf or {},
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        _worker_import_dirs(),
+    )
+    if daemon:
+        b = b.config(DAEMON_KEY, daemon)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

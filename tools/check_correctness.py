@@ -34,7 +34,9 @@ def value_hash(df: pd.DataFrame) -> str:
         if col.dtype == object or str(col.dtype).startswith("string"):
             df[c] = col.astype("string")
     rows = df.astype("string").fillna("\x00NULL")
-    joined = rows.apply(lambda r: "\x1f".join(r.values.tolist()), axis=1)
+    # one vectorized join per column, not a Python lambda per row
+    first, rest = rows.iloc[:, 0], [rows.iloc[:, i] for i in range(1, rows.shape[1])]
+    joined = first.str.cat(rest, sep="\x1f") if rest else first
     return hashlib.sha256(
         "\x1e".join(sorted(joined.tolist())).encode()
     ).hexdigest()[:16]
