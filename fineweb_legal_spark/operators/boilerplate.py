@@ -31,8 +31,6 @@ Scale shape:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -153,14 +151,7 @@ _C4_WS = __import__("re").compile(r"[ \t\n\r\f\x0b]+")
 _C4_STRIP = " \t\r\f\x0b"
 _C4_TERMINAL = frozenset('.!?"')
 
-_C4_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("clean_text", T.StringType()),
-        T.StructField("n_kept", T.LongType()),
-        T.StructField("verdict", T.StringType()),
-    ]
-)
+_C4_STRUCT = "struct<clean_text:string,n_kept:bigint,verdict:string>"
 
 
 def c4_line_filter(
@@ -186,61 +177,59 @@ def c4_line_filter(
     lines (ORIGINAL, unstripped) rejoined with \\n — '' when none survive,
     null for null text (n_kept likewise null).
 
-    Scale shape: a pure per-row function — ONE mapInPandas over
-    (id, text), zero Exchange (pytest-pinned), parallel with input splits;
-    text never crosses the wire. The per-line predicate loop is Python,
-    the same accepted inherently-per-string class as MinHash shingling,
+    Scale shape: a pure per-row function — ONE scalar Arrow UDF over the
+    text (the id stays in the JVM row), zero Exchange (pytest-pinned),
+    parallel with input splits; text never crosses the wire. The
+    per-line predicate loop is Python, the same accepted
+    inherently-per-string class as MinHash shingling,
     and it is the cheap end of that class: a handful of find/endswith ops
     per line, no hashing.
     """
     min_words_, min_lines_ = int(min_words), int(min_lines)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id: list[str] = []
-            out_text: list[str | None] = []
-            out_n: list[int | None] = []
-            out_v: list[str] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                out_id.append(rid)
-                if text is None:
-                    out_text.append(None)
-                    out_n.append(None)
-                    out_v.append("drop_null")
+    @F.pandas_udf(_C4_STRUCT)
+    def c4_kernel(texts: pd.Series) -> pd.DataFrame:
+        out_text: list[str | None] = []
+        out_n: list[int | None] = []
+        out_v: list[str] = []
+        for text in texts:
+            if text is None:
+                out_text.append(None)
+                out_n.append(None)
+                out_v.append("drop_null")
+                continue
+            kept = []
+            for line in text.split("\n"):
+                s = line.strip(_C4_STRIP)
+                if not s or s[-1] not in _C4_TERMINAL:
                     continue
-                kept = []
-                for line in text.split("\n"):
-                    s = line.strip(_C4_STRIP)
-                    if not s or s[-1] not in _C4_TERMINAL:
-                        continue
-                    if sum(1 for w in _C4_WS.split(line) if w) < min_words_:
-                        continue
-                    if "javascript" in line.lower():
-                        continue
-                    kept.append(line)
-                low = text.lower()
-                if "lorem ipsum" in low:
-                    v = "drop_lorem_ipsum"
-                elif "{" in text:
-                    v = "drop_brace"
-                elif len(kept) < min_lines_:
-                    v = "drop_min_lines"
-                else:
-                    v = "keep"
-                out_text.append("\n".join(kept))
-                out_n.append(len(kept))
-                out_v.append(v)
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        "id": pd.array(out_id, dtype="string"),
-                        "clean_text": pd.array(out_text, dtype="string"),
-                        "n_kept": pd.array(out_n, dtype="Int64"),
-                        "verdict": pd.array(out_v, dtype="string"),
-                    }
-                )
+                if sum(1 for w in _C4_WS.split(line) if w) < min_words_:
+                    continue
+                if "javascript" in line.lower():
+                    continue
+                kept.append(line)
+            low = text.lower()
+            if "lorem ipsum" in low:
+                v = "drop_lorem_ipsum"
+            elif "{" in text:
+                v = "drop_brace"
+            elif len(kept) < min_lines_:
+                v = "drop_min_lines"
+            else:
+                v = "keep"
+            out_text.append("\n".join(kept))
+            out_n.append(len(kept))
+            out_v.append(v)
+        return pd.DataFrame(
+            {
+                "clean_text": pd.array(out_text, dtype="string"),
+                "n_kept": pd.array(out_n, dtype="Int64"),
+                "verdict": pd.array(out_v, dtype="string"),
+            }
+        )
 
-    return (
-        docs.select(F.col(id_col).cast("string").alias(id_col), text_col)
-        .mapInPandas(fn, _C4_SCHEMA)
+    c4 = c4_kernel(text_col)
+    return docs.select(
+        F.col(id_col).cast("string").alias("id"),
+        *[c4[c].alias(c) for c in ("clean_text", "n_kept", "verdict")],
     )

@@ -11,9 +11,11 @@ Scale shape (10^12-row corpus, benchmark ≪ corpus):
 - the benchmark's distinct gram hashes are computed once and BROADCAST —
   candidate matching is a broadcast hash join at the scan, never a shuffle
   of the corpus;
-- corpus grams stream out of one Arrow-batched pandas pass and are
-  reduced per document by a map-side-combinable count aggregation; only
-  (doc, hits) rows — never gram strings — reach the exchange;
+- corpus grams come out of one scalar Arrow UDF over the text
+  (:func:`gram_stream`, the document id stays in the JVM row), are
+  exploded per document and reduced by a map-side-combinable count
+  aggregation; only (doc, hits) rows — never gram strings — reach the
+  exchange;
 - the gram kernel is VECTORIZED: one crc32 per word (zlib's C loop), then
   an n-step Horner polynomial combine in numpy uint64 (wraparound = mod
   2^64) produces every gram hash of a document in n vectorized ops —
@@ -48,13 +50,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # identical token boundary to the DuckDB oracle's regexp_split_to_array
 _ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
@@ -62,18 +62,6 @@ _ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
 # Horner base for the 64-bit polynomial gram hash (FNV-1a prime: odd, so
 # multiplication mod 2^64 is a bijection and prefix hashes don't alias)
 _BASE = np.uint64(1099511628211)
-
-# gram is always a 64-bit hash; the id field inherits the INPUT id type
-# at ngram_hashes build time (a hardcoded LongType would silently coerce
-# string ids in downstream joins)
-def _gram_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("gram", T.LongType()),
-        ]
-    )
-
 
 def ascii_words(text: str) -> list[str]:
     """Lowercase ASCII-whitespace tokens, same boundary as the oracle."""
@@ -119,38 +107,27 @@ def rolling_gram_hash_stream(words: list[str], n: int) -> np.ndarray:
     return gram_hashes_from_word_hashes(word_hashes(words), n)
 
 
-def _rolling_gram_hashes(words: list[str], n: int) -> np.ndarray:
-    """Per-document DISTINCT gram hashes (the frequency/matching view)."""
-    return np.unique(rolling_gram_hash_stream(words, n))
+def gram_stream(n: int):
+    """Scalar Arrow UDF ``text -> array<bigint>``: the positional n-gram
+    hashes of :func:`rolling_gram_hash_stream` (element i = gram starting
+    at word i); null for null text, empty below n words. Callers keep
+    their ids in the JVM row and expand the array there (``explode`` of
+    ``array_distinct`` for per-document distinct grams, ``posexplode``
+    for positions)."""
 
+    @F.pandas_udf("array<bigint>")
+    def gram_stream_kernel(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                None
+                if t is None
+                else rolling_gram_hash_stream(ascii_words(t), n).view(np.int64)
+                for t in texts
+            ],
+            dtype=object,
+        )
 
-def _gram_fn(n: int, id_col: str, text_col: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[np.ndarray] = []
-            grams: list[np.ndarray] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                w = ascii_words(text)
-                if len(w) < n:
-                    continue
-                h = _rolling_gram_hashes(w, n)
-                ids.append(np.full(len(h), rid, dtype=object))
-                grams.append(h.view(np.int64))
-            if ids:
-                yield pd.DataFrame(
-                    {"id": np.concatenate(ids), "gram": np.concatenate(grams)}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "id": np.array([], dtype=object),
-                        "gram": np.array([], dtype=np.int64),
-                    }
-                )
-
-    return fn
+    return gram_stream_kernel
 
 
 def ngram_hashes(
@@ -158,9 +135,9 @@ def ngram_hashes(
 ) -> DataFrame:
     """(id, gram): 64-bit rolling hash of each distinct n-word gram per
     document (vectorized; see module docstring for the collision bound)."""
-    return df.select(id_col, text_col).mapInPandas(
-        _gram_fn(n, id_col, text_col),
-        schema=_gram_schema(df.schema[id_col].dataType),
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(gram_stream(n)(text_col))).alias("gram"),
     )
 
 

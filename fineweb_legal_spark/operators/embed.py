@@ -21,17 +21,16 @@ splitmix64-style mix — no RNG state, no executor-order dependence, so
 the same document embeds identically on any engine, partitioning, or
 retry.
 
-Scale shape: one mapInPandas pass over (id, text); per Arrow batch the
-kernel materializes sign-matrix rows ONLY for the token slots present
-(never the 2^vocab_bits × dim matrix), at O(unique_slots × dim) numpy
-work; output rows are (id, array<float>) — text never leaves the scan.
-Zero shuffle, zero broadcast artifacts.
+Scale shape: one scalar Arrow UDF over the text (the id stays in the
+JVM row); per Arrow batch the kernel materializes sign-matrix rows ONLY
+for the token slots present (never the 2^vocab_bits × dim matrix), at
+O(unique_slots × dim) numpy work; output rows are (id, array<float>) —
+text never leaves the scan. Zero shuffle, zero broadcast artifacts.
 """
 
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -99,19 +98,12 @@ def embed_docs(
     """(id, emb): deterministic lexical embedding per document (module
     doc). Plug the output straight into `similarity.py` /
     `cluster.semantic_dedup` as the embedding table."""
-    schema = T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType),
-            T.StructField("emb", T.ArrayType(T.FloatType())),
-        ]
+
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def embed_kernel(texts: pd.Series) -> pd.Series:
+        embs = embed_texts_numpy(texts.tolist(), dim, vocab_bits, seed)
+        return pd.Series(list(embs))
+
+    return df.select(
+        F.col(id_col).alias("id"), embed_kernel(text_col).alias("emb")
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [None if pd.isna(t) else t for t in pdf[text_col]]
-            embs = embed_texts_numpy(texts, dim, vocab_bits, seed)
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "emb": list(embs)}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(fn, schema=schema)

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import json
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -63,53 +62,41 @@ def media_meta(df: DataFrame) -> DataFrame:
     )
 
 
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("frame_bytes", T.LongType()),
-        T.StructField("frame_mean", T.DoubleType()),
-    ]
-)
+_FRAMES = "array<struct<frame_idx:bigint,frame_bytes:bigint,frame_mean:double>>"
 
 
 def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling for video payloads (1-to-many, mapInPandas as UDTF).
+    """Frame sampling for video payloads (1-to-many: a scalar Arrow UDF
+    returns each video's frames as an array, ``inline`` expands it).
 
     STUB: frames are fixed-size payload slices per the metadata geometry; a
     real implementation would call the video codec in the inner loop.
     """
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_bytes": [], "frame_mean": []}
-            for mid, meta_s, payload in zip(pdf["media_id"], pdf["meta"], pdf["payload"]):
-                meta = json.loads(meta_s)
-                fsize = meta["width"] * meta["height"] * meta["channels"]
-                n_frames = len(payload) // fsize
-                for fi in range(0, n_frames, every_n):
-                    chunk = np.frombuffer(
-                        payload[fi * fsize : (fi + 1) * fsize], dtype=np.uint8
-                    )
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(fi)
-                    out["frame_bytes"].append(fsize)
-                    out["frame_mean"].append(round(float(chunk.mean()), 4))
-            yield pd.DataFrame(out)
+    @F.pandas_udf(_FRAMES)
+    def frames_kernel(metas: pd.Series, payloads: pd.Series) -> pd.Series:
+        out = []
+        for meta_s, payload in zip(metas, payloads):
+            meta = json.loads(meta_s)
+            fsize = meta["width"] * meta["height"] * meta["channels"]
+            frames = []
+            for fi in range(0, len(payload) // fsize, every_n):
+                chunk = np.frombuffer(
+                    payload[fi * fsize : (fi + 1) * fsize], dtype=np.uint8
+                )
+                frames.append(
+                    {
+                        "frame_idx": fi,
+                        "frame_bytes": fsize,
+                        "frame_mean": round(float(chunk.mean()), 4),
+                    }
+                )
+            out.append(frames)
+        return pd.Series(out, dtype=object)
 
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("media_id", "meta", "payload")
-        .mapInPandas(fn, schema=_FRAME_SCHEMA)
+    return df.filter(F.col("kind") == "video").select(
+        "media_id", F.inline(frames_kernel("meta", "payload"))
     )
-
-
-_EMBED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ]
-)
 
 
 def fake_embedding(df: DataFrame, dim: int = 16) -> DataFrame:
@@ -119,17 +106,17 @@ def fake_embedding(df: DataFrame, dim: int = 16) -> DataFrame:
     lifecycle, and output schema match what a torch encoder would use
     (reference D2 pattern, model_inference_stage2_cuda.py:232-303)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            embs = []
-            for payload in pdf["payload"]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                # exact int64 sum of squares, then one float64 sqrt and
-                # divide: a float32 norm rounds per host SIMD path and
-                # flips 6th-decimal midpoints; float32 only at the schema
-                n = math.sqrt(int((hist.astype(np.int64) ** 2).sum()))
-                embs.append((hist / (n or 1.0)).round(6).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "embedding": embs})
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def embed_kernel(payloads: pd.Series) -> pd.Series:
+        embs = []
+        for payload in payloads:
+            arr = np.frombuffer(payload, dtype=np.uint8)
+            hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
+            # exact int64 sum of squares, then one float64 sqrt and
+            # divide: a float32 norm rounds per host SIMD path and
+            # flips 6th-decimal midpoints; float32 only at the schema
+            n = math.sqrt(int((hist.astype(np.int64) ** 2).sum()))
+            embs.append((hist / (n or 1.0)).round(6).tolist())
+        return pd.Series(embs, dtype=object)
 
-    return df.select("media_id", "payload").mapInPandas(fn, schema=_EMBED_SCHEMA)
+    return df.select("media_id", embed_kernel("payload").alias("embedding"))

@@ -61,33 +61,43 @@ def cosine_sim(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(dots / (na * nb))
 
 
-_BUCKET_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("bucket", T.IntegerType()),
-    ]
-)
+# The LSH and IVF kernels return arrays that callers ``explode``: a
+# generator's output column takes its join's inferred ``isnotnull`` filter
+# above the Generate, where a scalar UDF column would have the filter
+# pushed below its projection and the kernel run twice.
 
 
-def _bucketize_fn(dim: int, n_planes: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = planes_for(dim, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy())
-            bits = (mat @ planes.T) > 0  # (n, planes)
-            buckets = (bits @ weights).astype(np.int32)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": buckets})
+def _lsh_probes(dim: int, n_planes: int, n_probes: int = 1):
+    """Scalar Arrow UDF ``embedding -> array<int>``: the vector's
+    random-hyperplane bucket, then (multi-probe) the buckets reached by
+    flipping its ``n_probes - 1`` smallest-|margin| plane bits. One
+    matmul per batch."""
+    planes = planes_for(dim, n_planes)
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    return fn
+    @F.pandas_udf("array<int>")
+    def lsh_probes(emb: pd.Series) -> pd.Series:
+        mat = np.stack(emb.to_numpy()).astype(np.float64)
+        margins = mat @ planes.T  # (n, planes), signed distance·|w|
+        probes = ((margins > 0) @ weights)[:, None]
+        if n_probes > 1:
+            flips = np.argsort(np.abs(margins), axis=1, kind="stable")
+            probes = np.hstack([probes, probes ^ weights[flips[:, : n_probes - 1]]])
+        return pd.Series(list(probes.astype(np.int32)))
+
+    return lsh_probes
+
+
+def _with_bucket(df: DataFrame, dim: int, n_planes: int) -> DataFrame:
+    """(vec_id, embedding, bucket)."""
+    bucket = F.explode(_lsh_probes(dim, n_planes)("embedding")).alias("bucket")
+    return df.select("vec_id", "embedding", bucket)
 
 
 def lsh_buckets(df: DataFrame, dim: int, n_planes: int = N_PLANES) -> DataFrame:
     """(vec_id, bucket) for an (vec_id, embedding) table. Size n_planes
     with suggest_n_planes(corpus_rows) so buckets scale with the corpus."""
-    return df.select("vec_id", "embedding").mapInPandas(
-        _bucketize_fn(dim, n_planes), schema=_BUCKET_SCHEMA
-    )
+    return _with_bucket(df, dim, n_planes).select("vec_id", "bucket")
 
 
 N_IVF_CELLS = 16
@@ -146,12 +156,29 @@ def train_ivf_centroids(
     return cents
 
 
-_CELL_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("cell", T.IntegerType()),
-    ]
-)
+def _ivf_cells(cents: np.ndarray, k: int = 1):
+    """Scalar Arrow UDF ``embedding -> array<int>``: the ``k`` centroids
+    nearest by cosine, nearest first (ties to the lower cell)."""
+
+    @F.pandas_udf("array<int>")
+    def ivf_cells(emb: pd.Series) -> pd.Series:
+        mat = np.stack(emb.to_numpy()).astype(np.float64)
+        norms = np.linalg.norm(mat, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        sims = (mat / norms) @ cents.T  # (n, cells)
+        if k == 1:
+            cells = np.argmax(sims, axis=1)[:, None]
+        else:
+            cells = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+        return pd.Series(list(cells.astype(np.int32)))
+
+    return ivf_cells
+
+
+def _with_cell(df: DataFrame, cents: np.ndarray) -> DataFrame:
+    """(vec_id, embedding, cell)."""
+    cell = F.explode(_ivf_cells(cents)("embedding")).alias("cell")
+    return df.select("vec_id", "embedding", cell)
 
 
 def ivf_assign(
@@ -163,22 +190,8 @@ def ivf_assign(
     """(vec_id, cell): nearest-centroid assignment, one matmul per batch.
     ``centroids`` (e.g. from train_ivf_centroids) overrides the seeded
     quantizer; the small (n_cells, dim) array ships in the task closure."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = centroids if centroids is not None else ivf_centroids(dim, n_cells)
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents.T  # (n, cells)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": np.argmax(sims, axis=1).astype(np.int32),
-                }
-            )
-
-    return df.select("vec_id", "embedding").mapInPandas(fn, schema=_CELL_SCHEMA)
+    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells)
+    return _with_cell(df, cents).select("vec_id", "cell")
 
 
 def ivf_ann_topk(
@@ -202,43 +215,15 @@ def ivf_ann_topk(
     train_ivf_centroids output as ``centroids`` for skewed data. Re-rank
     is one numpy matmul per Arrow batch (cosine_sim).
     """
-    assigned = df.select("vec_id", "embedding").join(
-        ivf_assign(df, dim, n_cells, centroids), "vec_id"
-    )
-
+    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells)
     # query -> its nprobe nearest cells (small: len(query_ids) x nprobe)
-    def qcells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = centroids if centroids is not None else ivf_centroids(dim, n_cells)
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents.T
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["vec_id"].to_numpy().repeat(nprobe),
-                    "cell": order.reshape(-1).astype(np.int32),
-                }
-            )
-
-    q_probe = (
-        df.filter(F.col("vec_id").isin(query_ids))
-        .select("vec_id", "embedding")
-        .mapInPandas(qcells, schema=T.StructType(
-            [
-                T.StructField("query_id", T.LongType()),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        ))
+    q = df.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(_ivf_cells(cents, nprobe)("embedding")).alias("cell"),
     )
-    q_emb = df.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    cand = (
-        assigned.join(F.broadcast(q_probe), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q_emb), "query_id")
+    cand = _with_cell(df, cents).join(F.broadcast(q), "cell").filter(
+        F.col("vec_id") != F.col("query_id")
     )
     # no dedup needed: each vector lives in exactly one cell, so a
     # (query, vec) candidate pair appears at most once
@@ -277,8 +262,7 @@ def embedding_neardup_pairs(
     across bucket boundaries stays part of the operator contract either
     way.
     """
-    b = lsh_buckets(df, dim, n_planes)
-    vecs = df.select("vec_id", "embedding").join(b, "vec_id")
+    vecs = _with_bucket(df, dim, n_planes)
     left = vecs.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("emb_a"),
@@ -316,57 +300,16 @@ def lsh_ann_topk(
     neighbor to fall across). This is THE recall lever when n_planes grows
     with the corpus: probe cost is linear in n_probes while halving
     recall loss per probe, instead of halving the bucket count."""
-    b = lsh_buckets(df, dim, n_planes)
-    vecs = df.select("vec_id", "embedding").join(b, "vec_id")
-    if n_probes <= 1:
-        q = vecs.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("bucket"),
-        )
-    else:
-        # probe table: (query_id, q_emb, bucket) x n_probes — bucket 0 is
-        # the query's own, then single-bit flips in ascending |margin|
-        def probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            planes = planes_for(dim, n_planes)
-            weights = (1 << np.arange(n_planes)).astype(np.int64)
-            for pdf in batches:
-                mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                margins = mat @ planes.T  # (n, planes), signed distance·|w|
-                bits = margins > 0
-                base = (bits @ weights).astype(np.int64)
-                flip_order = np.argsort(np.abs(margins), axis=1, kind="stable")
-                out_id, out_emb, out_b = [], [], []
-                for i in range(len(mat)):
-                    bs = [int(base[i])]
-                    for f in flip_order[i, : n_probes - 1]:
-                        bs.append(int(base[i]) ^ int(weights[f]))
-                    out_id.extend([pdf["vec_id"].iloc[i]] * len(bs))
-                    out_emb.extend([pdf["embedding"].iloc[i]] * len(bs))
-                    out_b.extend(bs)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.array(out_id, dtype=np.int64),
-                        "q_emb": out_emb,
-                        "bucket": np.array(out_b, dtype=np.int32),
-                    }
-                )
-
-        q = df.filter(F.col("vec_id").isin(query_ids)).select(
-            "vec_id", "embedding"
-        ).mapInPandas(
-            probes,
-            schema=T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("q_emb", T.ArrayType(T.DoubleType())),
-                    T.StructField("bucket", T.IntegerType()),
-                ]
-            ),
-        )
-    # each vector lives in ONE bucket and probe buckets are distinct, so a
-    # (query, vec) candidate appears at most once — no dedup needed
-    cand = vecs.join(F.broadcast(q) if n_probes > 1 else q, "bucket").filter(
+    # probe table: (query_id, q_emb, bucket) x n_probes — the query's own
+    # bucket, then single-bit flips in ascending |margin|. Each vector
+    # lives in ONE bucket and probe buckets are distinct, so a (query, vec)
+    # candidate appears at most once — no dedup needed
+    q = df.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(_lsh_probes(dim, n_planes, n_probes)("embedding")).alias("bucket"),
+    )
+    cand = _with_bucket(df, dim, n_planes).join(F.broadcast(q), "bucket").filter(
         F.col("vec_id") != F.col("query_id")
     )
     scored = cand.select(
@@ -397,35 +340,25 @@ def pq_codebooks(dim: int) -> np.ndarray:
     return rs.randn(N_PQ_SUB, N_PQ_CODES, dim // N_PQ_SUB)
 
 
-_CODES_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("codes", T.ArrayType(T.IntegerType())),
-    ]
-)
-
-
 def pq_encode(df: DataFrame, dim: int) -> DataFrame:
     """(vec_id, codes): nearest codebook entry per subspace (L2). The
     compressed corpus representation — M small ints instead of dim
     floats, the 16x memory-traffic cut that makes the ADC scan pay."""
+    cb = pq_codebooks(dim)  # (M, K, d)
+    dsub = dim // N_PQ_SUB
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb = pq_codebooks(dim)  # (M, K, d)
-        dsub = dim // N_PQ_SUB
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(mat), N_PQ_SUB), dtype=np.int32)
-            for m in range(N_PQ_SUB):
-                sub = mat[:, m * dsub : (m + 1) * dsub]  # (n, d)
-                # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin drops ||x||^2
-                d2 = -2.0 * (sub @ cb[m].T) + (cb[m] ** 2).sum(axis=1)
-                codes[:, m] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes)}
-            )
+    @F.pandas_udf("array<int>")
+    def pq_codes(emb: pd.Series) -> pd.Series:
+        mat = np.stack(emb.to_numpy()).astype(np.float64)
+        codes = np.empty((len(mat), N_PQ_SUB), dtype=np.int32)
+        for m in range(N_PQ_SUB):
+            sub = mat[:, m * dsub : (m + 1) * dsub]  # (n, d)
+            # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin drops ||x||^2
+            d2 = -2.0 * (sub @ cb[m].T) + (cb[m] ** 2).sum(axis=1)
+            codes[:, m] = np.argmin(d2, axis=1)
+        return pd.Series(list(codes))
 
-    return df.select("vec_id", "embedding").mapInPandas(fn, schema=_CODES_SCHEMA)
+    return df.select("vec_id", pq_codes("embedding").alias("codes"))
 
 
 _ADC_SCHEMA = T.StructType(

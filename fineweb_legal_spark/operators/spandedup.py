@@ -22,11 +22,13 @@ Scale shape (10^12-row corpus):
   uint64-Horner rolling hash, per-doc distinct): the exchange carries
   (gram_hash, doc) pairs, map-side combinable, never text;
 - the repeated-gram set joins back against a (doc, pos, gram_hash)
-  position stream; broadcast vs shuffle is AQE's runtime-stats
-  decision. At min_docs=2 on a pathological corpus the set is large —
-  the shuffle path carries only (id, pos) pairs, never text;
-- masking itself is one Arrow pass over (text, hit positions): interval
-  union + rebuild is linear per document.
+  position stream, the same ``decontam.gram_stream`` kernel expanded by
+  ``posexplode``; broadcast vs shuffle is AQE's runtime-stats decision.
+  At min_docs=2 on a pathological corpus the set is large — the shuffle
+  path carries only (id, pos) pairs, never text;
+- masking itself is one scalar Arrow UDF over (text, hit positions):
+  interval union + rebuild is linear per document. Every kernel sees
+  only its payload columns; document ids stay in the JVM row.
 
 Trade note: true suffix-array substring dedup (Lee et al.'s
 implementation) finds MAXIMAL repeats of any length; fixed-n gram masking
@@ -37,118 +39,74 @@ repeat is fully masked; repeats shorter than n survive).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .decontam import ascii_words, ngram_hashes, rolling_gram_hash_stream
+from .decontam import (
+    ascii_words,
+    gram_stream,
+    ngram_hashes,
+    rolling_gram_hash_stream,
+)
 
-# id fields inherit the INPUT id type (a hardcoded LongType would coerce
-# string ids in downstream joins — same fix as decontam._gram_schema)
-def _gram_pos_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("gram", T.LongType()),
-        ]
-    )
-
-
-def _scrub_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("clean_text", T.StringType()),
-            T.StructField("n_masked", T.IntegerType()),
-        ]
-    )
+# Size of the hot-gram tier (the duplicate-saturation guard): the top
+# repeated grams by (document frequency desc, gram asc) are collected
+# once at plan-build time (bounded driver traffic: 8 MB of int64 hashes
+# at 2^20) and broadcast to the mask kernel. 0 disables the tier.
+_HOT_GRAMS = 1 << 20
 
 
-def _gram_pos_fn(n: int, id_col: str, text_col: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[np.ndarray] = []
-            poss: list[np.ndarray] = []
-            grams: list[np.ndarray] = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                w = ascii_words(text)
-                if len(w) < n:
-                    continue
-                g = rolling_gram_hash_stream(w, n)
-                ids.append(np.full(len(g), rid, dtype=object))
-                poss.append(np.arange(len(g), dtype=np.int32))
-                grams.append(g.view(np.int64))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "id": np.concatenate(ids),
-                        "pos": np.concatenate(poss),
-                        "gram": np.concatenate(grams),
-                    }
-                )
+def _mask_kernel(n: int, bc_hot):
+    """Scalar Arrow UDF ``(text, hit_positions) -> struct<clean_text,
+    n_masked>``. ``bc_hot``: optional broadcast of a SORTED int64 array of
+    hot gram hashes — their positions are recomputed locally
+    (searchsorted against the doc's own gram stream) instead of arriving
+    through the join-back, so hot grams never put (id, pos) rows on an
+    exchange."""
 
-    return fn
-
-
-def _mask_fn(n: int, id_col: str, text_col: str, bc_hot=None):
-    """``bc_hot``: optional broadcast of a SORTED int64 array of hot gram
-    hashes — their positions are recomputed locally (searchsorted against
-    the doc's own gram stream) instead of arriving through the join-back,
-    so hot grams never put (id, pos) rows on an exchange."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf("struct<clean_text:string,n_masked:int>")
+    def mask_kernel(texts: pd.Series, hit_lists: pd.Series) -> pd.DataFrame:
         hot = bc_hot.value if bc_hot is not None else None
-        for pdf in batches:
-            out_id: list = []
-            out_text: list[str | None] = []
-            out_n: list[int] = []
-            for rid, text, hits in zip(
-                pdf[id_col], pdf[text_col], pdf["hit_positions"]
-            ):
-                out_id.append(rid)
-                if text is None:
-                    out_text.append(None)
-                    out_n.append(0)
-                    continue
-                w = ascii_words(text)
-                covered = None
-                if hits is not None and len(hits):
-                    covered = np.zeros(len(w), dtype=bool)
-                    for p in hits:
-                        covered[int(p) : int(p) + n] = True
-                if hot is not None and len(hot) and len(w) >= n:
-                    g = rolling_gram_hash_stream(w, n).view(np.int64)
-                    j = np.searchsorted(hot, g)
-                    j[j == len(hot)] = 0
-                    hp = np.flatnonzero(hot[j] == g)
-                    if len(hp):
-                        if covered is None:
-                            covered = np.zeros(len(w), dtype=bool)
-                        for p in hp:
-                            covered[p : p + n] = True
-                if covered is None:
-                    out_text.append(" ".join(w))
-                    out_n.append(0)
-                    continue
-                kept = [x for x, c in zip(w, covered) if not c]
-                out_text.append(" ".join(kept))
-                out_n.append(int(covered.sum()))
-            yield pd.DataFrame(
-                {
-                    "id": out_id,
-                    "clean_text": pd.array(out_text, dtype=object),
-                    "n_masked": np.array(out_n, dtype=np.int32),
-                }
-            )
+        out_text: list[str | None] = []
+        out_n: list[int] = []
+        for text, hits in zip(texts, hit_lists):
+            if text is None:
+                out_text.append(None)
+                out_n.append(0)
+                continue
+            w = ascii_words(text)
+            covered = None
+            if hits is not None and len(hits):
+                covered = np.zeros(len(w), dtype=bool)
+                for p in hits:
+                    covered[int(p) : int(p) + n] = True
+            if hot is not None and len(hot) and len(w) >= n:
+                g = rolling_gram_hash_stream(w, n).view(np.int64)
+                j = np.searchsorted(hot, g)
+                j[j == len(hot)] = 0
+                hp = np.flatnonzero(hot[j] == g)
+                if len(hp):
+                    if covered is None:
+                        covered = np.zeros(len(w), dtype=bool)
+                    for p in hp:
+                        covered[p : p + n] = True
+            if covered is None:
+                out_text.append(" ".join(w))
+                out_n.append(0)
+                continue
+            kept = [x for x, c in zip(w, covered) if not c]
+            out_text.append(" ".join(kept))
+            out_n.append(int(covered.sum()))
+        return pd.DataFrame(
+            {
+                "clean_text": pd.array(out_text, dtype=object),
+                "n_masked": np.array(out_n, dtype=np.int32),
+            }
+        )
 
-    return fn
+    return mask_kernel
 
 
 def scrub_repeated_spans(
@@ -157,27 +115,23 @@ def scrub_repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_grams: int | None = 1 << 20,
 ) -> DataFrame:
     """(doc_id, clean_text, n_masked): every document with all words
     covered by a cross-document repeated n-gram (document frequency >=
     ``min_docs``) removed from its normalized token stream.
 
-    ``hot_grams`` (round 6, the duplicate-saturation guard): the top-K
-    repeated grams by (document frequency desc, gram asc) are collected
-    once at plan-build time (bounded driver traffic: K int64 hashes,
-    8 MB at the default 2^20) and BROADCAST to the mask kernel, which
-    recomputes their positions locally from the document's own gram
-    stream.  Hot grams therefore contribute ZERO (id, pos) rows to the
-    join-back exchange — on duplicate-saturated corpora (>50% whole-turn
-    repeats, the regime the round-5 10M stress measured growing
-    super-linearly) the exchange volume collapses to the long tail.
-    The cutoff is deterministic (exact integer counts, total tie order),
-    and the hot set is a plan statistic, not a result cache: every
-    execution still recomputes the tail frequency table, the positions,
-    and the masks from the parquet input.  ``hot_grams=None`` disables
-    the tier (pure join-back, the round-5 plan). The repeated-set join
-    strategy is AQE's, from runtime shuffle stats."""
+    The top ``_HOT_GRAMS`` repeated grams (round 6, the duplicate-
+    saturation guard) are BROADCAST to the mask kernel, which recomputes
+    their positions locally from the document's own gram stream. Hot
+    grams therefore contribute ZERO (id, pos) rows to the join-back
+    exchange — on duplicate-saturated corpora (>50% whole-turn repeats,
+    the regime the round-5 10M stress measured growing super-linearly)
+    the exchange volume collapses to the long tail. The cutoff is
+    deterministic (exact integer counts, total tie order), and the hot
+    set is a plan statistic, not a result cache: every execution still
+    recomputes the tail frequency table, the positions, and the masks
+    from the parquet input. The repeated-set join strategy is AQE's, from
+    runtime shuffle stats."""
     # frequency over per-doc-DISTINCT grams (decontam's vectorized kernel)
     freq = (
         ngram_hashes(docs, id_col, text_col, n)
@@ -187,17 +141,17 @@ def scrub_repeated_spans(
     common = freq.filter(F.col("_df") >= min_docs)
 
     bc_hot = None
-    if hot_grams:
+    if _HOT_GRAMS:
         hot_pdf = (
             common.orderBy(F.desc("_df"), F.asc("gram"))
-            .limit(int(hot_grams))
+            .limit(_HOT_GRAMS)
             .select("gram", "_df")
             .toPandas()
         )
         if len(hot_pdf):
             hot_arr = np.sort(hot_pdf["gram"].to_numpy(dtype=np.int64))
             bc_hot = docs.sparkSession.sparkContext.broadcast(hot_arr)
-        if len(hot_pdf) < int(hot_grams):
+        if len(hot_pdf) < _HOT_GRAMS:
             # every repeated gram is hot: no tail, no join-back at all
             common = None
         else:
@@ -209,26 +163,25 @@ def scrub_repeated_spans(
                 | ((F.col("_df") == kth_df) & (F.col("gram") > kth_gram))
             )
 
-    id_type = docs.schema[id_col].dataType
     base = docs.select(
         F.col(id_col).alias("id"), F.col(text_col).alias(text_col)
     )
     if common is None:
-        joined = base.withColumn(
-            "hit_positions", F.lit(None).cast("array<int>")
-        )
+        joined, hits = base, F.lit(None).cast("array<int>")
     else:
-        gram_pos = docs.select(id_col, text_col).mapInPandas(
-            _gram_pos_fn(n, id_col, text_col),
-            schema=_gram_pos_schema(id_type),
+        gram_pos = docs.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(gram_stream(n)(text_col)).alias("pos", "gram"),
         )
         hitlists = (
             gram_pos.join(common.select("gram"), "gram")
             .groupBy("id")
             .agg(F.collect_list("pos").alias("hit_positions"))
         )
-        joined = base.join(hitlists, "id", "left")
-    return joined.mapInPandas(
-        _mask_fn(n, "id", text_col, bc_hot=bc_hot),
-        schema=_scrub_schema(id_type),
-    ).withColumnRenamed("id", id_col)
+        joined, hits = base.join(hitlists, "id", "left"), F.col("hit_positions")
+    masked = _mask_kernel(n, bc_hot)(F.col(text_col), hits)
+    return joined.select(
+        F.col("id").alias(id_col),
+        masked["clean_text"].alias("clean_text"),
+        masked["n_masked"].alias("n_masked"),
+    )

@@ -87,7 +87,6 @@ def start_conv_state_stream(
     spark,
     src_dir: str,
     table_name: str = "conv_running_stats",
-    available_now: bool = True,
 ):
     """Start the stateful aggregator over a parquet file stream, emitting
     Update-mode rows into an in-memory table (the last row per conv_id is
@@ -100,11 +99,10 @@ def start_conv_state_stream(
         .parquet(src_dir)
     )
     out = conv_running_stats(stream)
-    writer = (
+    return (
         out.writeStream.format("memory")
         .queryName(table_name)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -53,6 +53,19 @@ def _scored_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     return model_stage(spark, heur, "conv_id", "turn_idx", "ts")
 
 
+def _start_parquet_sink(frame: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Drain everything available now into a checkpointed parquet sink
+    (append mode, exactly-once) and return the running query."""
+    return (
+        frame.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def kept_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """Scored stream → kept rows after the watermarked bounded-window
     dedup (contract documented on start_filter_stream). Shared by the
@@ -76,7 +89,6 @@ def start_filter_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Filter + scrub + watermarked first-arrival dedup; kept turns land in
     a checkpointed parquet sink (exactly-once).
@@ -91,15 +103,7 @@ def start_filter_stream(
     a bigger watermark. Asserted in tests/test_streaming.py::
     test_stream_dedup_watermark_contract."""
     kept = kept_stream(spark, src_dir)
-    writer = (
-        kept.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(kept, out_dir, checkpoint_dir)
 
 
 def start_session_stream(
@@ -109,7 +113,6 @@ def start_session_stream(
     checkpoint_dir: str,
     gap: str = "30 minutes",
     delay: str = "1 hour",
-    available_now: bool = True,
 ):
     """Native streaming session windows: per-conversation activity bursts
     via `session_window(ts, gap)` — windows merge in the state store as
@@ -134,15 +137,7 @@ def start_session_stream(
             "n_turns",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, out_dir, checkpoint_dir)
 
 
 def start_conv_metrics_stream(
@@ -151,7 +146,6 @@ def start_conv_metrics_stream(
     out_dir: str,
     checkpoint_dir: str,
     window: str = "1 hour",
-    available_now: bool = True,
 ):
     """Windowed per-conversation stage metrics with late-data watermark
     (kept/dropped counts per event-time window — the _metrics table analog,
@@ -171,12 +165,4 @@ def start_conv_metrics_stream(
             "dropped",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, out_dir, checkpoint_dir)

@@ -282,7 +282,6 @@ def start_registry_filter_stream(
     out_dir: str,
     checkpoint_dir: str,
     registry_dir: str,
-    available_now: bool = True,
     bloom_fpp: float | None = None,
     bloom_expected: int = 1_000_000,
 ):
@@ -307,13 +306,12 @@ def start_registry_filter_stream(
         else {"fpp": bloom_fpp, "expected": bloom_expected}
     )
     scored = _scored_stream(spark, src_dir)
-    writer = (
+    return (
         scored.writeStream.foreachBatch(
             _commit_batch(out_dir, registry_dir, run_base, bloom_state)
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -60,17 +60,15 @@ def start_filter_stream_to_table(
     src_dir: str,
     table: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     io: TableIO | None = None,
 ):
     """The filter stream (same scoring + watermarked-dedup contract as
     start_filter_stream) committing kept turns to a catalog table."""
     kept = kept_stream(spark, src_dir)
-    writer = (
+    return (
         kept.writeStream.foreachBatch(table_batch_writer(io or TableIO(spark), table))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

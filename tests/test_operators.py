@@ -654,13 +654,14 @@ def test_scrub_repeated_spans_planted(spark):
     assert got[6] == ("short text", 0)
 
 
-def test_scrub_repeated_spans_hot_tier_identical(spark):
+def test_scrub_repeated_spans_hot_tier_identical(spark, monkeypatch):
     # round 6: the duplicate-saturation guard (hot-gram broadcast tier)
     # must not change a single output row. Three plans over the same
-    # corpus: join-only (hot_grams=None, the round-5 shape), all-hot
+    # corpus: join-only (_HOT_GRAMS=0, the round-5 shape), all-hot
     # (default: every repeated gram fits the top-K), and a FORCED
-    # hot/tail split (hot_grams=1: one gram hot, the rest take the
+    # hot/tail split (_HOT_GRAMS=1: one gram hot, the rest take the
     # join-back) — identical results, including null/short/empty rows.
+    from fineweb_legal_spark.operators import spandedup
     from fineweb_legal_spark.operators.spandedup import scrub_repeated_spans
 
     span = "all rights reserved this text is a canned licence block here"
@@ -678,16 +679,18 @@ def test_scrub_repeated_spans_hot_tier_identical(spark):
         ["doc_id", "text"],
     )
 
-    def run(**kw):
+    def run(hot_grams):
+        monkeypatch.setattr(spandedup, "_HOT_GRAMS", hot_grams)
         return sorted(
             (r["doc_id"], r["clean_text"], r["n_masked"])
-            for r in scrub_repeated_spans(docs, n=8, min_docs=2, **kw).collect()
+            for r in scrub_repeated_spans(docs, n=8, min_docs=2).collect()
         )
 
-    ref = run(hot_grams=None)
+    default = spandedup._HOT_GRAMS
+    ref = run(0)
     assert any(nm > 0 for _, _, nm in ref)  # the fixture really masks
-    assert run() == ref            # default top-K covers everything
-    assert run(hot_grams=1) == ref  # forced hot/tail split
+    assert run(default) == ref  # default top-K covers everything
+    assert run(1) == ref  # forced hot/tail split
 
 
 def _py_words(text):

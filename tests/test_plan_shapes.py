@@ -7,6 +7,8 @@ hint, a filter that stopped reaching the scan) before any benchmark does.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -126,7 +128,6 @@ def test_slim_dedup_exchange_carries_no_text(spark, t1_transcripts):
     # corpus. With slim_dedup (default) the only norm_key hash exchange
     # carries exactly (norm_key, conv_id, turn_idx); loser decisions come
     # back as a broadcast join on the persisted scored frame.
-    import re
 
     from fineweb_legal_spark.pipeline import run_pipeline
 
@@ -146,10 +147,13 @@ def test_slim_dedup_exchange_carries_no_text(spark, t1_transcripts):
 def test_pq_shortlist_is_local_not_global(spark, queries):
     # VERDICT r2 item: the PQ shortlist must be truncated inside the scan
     # (mapInPandas emits per-batch top-s), never a crossJoin of all codes
-    # with all queries feeding a global window. Two MapInPandas nodes:
-    # encode and the ADC shortlist scan; no nested-loop/cartesian join.
+    # with all queries feeding a global window. One MapInPandas node, the
+    # ADC shortlist scan; encode is a scalar Arrow UDF over the embedding
+    # (one ArrowEvalPython); no nested-loop/cartesian join.
     plan = _plan(queries["pq_ann_topk"](spark, SF_DIR))
-    assert plan.count(") MapInPandas") == 2, plan.count(") MapInPandas")
+    assert plan.count(") MapInPandas") == 1, plan.count(") MapInPandas")
+    encode = r"\) ArrowEvalPython\n.*\nArguments: \[pq_codes\("
+    assert len(re.findall(encode, plan)) == 1, plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

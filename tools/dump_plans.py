@@ -52,9 +52,10 @@ PICKS = {
         "row_number then filter (no global sort)."
     ),
     "pq_ann_topk": (
-        "Compressed-scan ANN: two chained MapInPandas (encode, then the "
-        "ADC scan emitting only per-batch top-shortlist rows) with NO "
-        "exchange between them; the global-cut window's exchange carries "
+        "Compressed-scan ANN: encode is a scalar Arrow UDF over the "
+        "embedding (ArrowEvalPython; vec_id stays in the JVM row), then ONE "
+        "MapInPandas ADC scan emitting only per-batch top-shortlist rows, "
+        "with NO exchange between them; the global-cut window's exchange carries "
         "O(tasks x shortlist x queries) slim rows; exact re-rank joins the "
         "raw embeddings back for the shortlist only."
     ),
@@ -158,10 +159,11 @@ PICKS = {
     ),
     "scrub_repeated_spans_docs": (
         "Exact-substring dedup (round 4): gram doc-frequency over the "
-        "vectorized rolling-hash stream (exchange carries (gram_hash, "
-        "doc) pairs), repeated set joined back broadcast-or-shuffle at "
-        "run time, hit positions aggregated per doc as (id, pos) pairs — "
-        "text crosses the wire exactly once, into the final mask pass."
+        "vectorized rolling-hash stream runs at plan build, and the top "
+        "2^20 repeated grams are broadcast to the mask kernel. At this "
+        "scale every repeated gram is hot, so no tail joins back: the plan "
+        "is one scan and one ArrowEvalPython (text and hit positions in, "
+        "struct<clean_text, n_masked> out; doc_id stays in the JVM row)."
     ),
     "transcript_repairs_t2": (
         "Transcript repairs, 8-config tagged union (round 5 added retry/"
